@@ -59,7 +59,10 @@ final class VectorCollection(
     // a schema, which an empty collection doesn't have yet)
     require(fs.exists(dataPath),
       s"collection '${config.name}' is empty — insert rows before reading")
-    spark.read.parquet(dataPath.toString)
+    // opened once per session and data generation: every commit writes
+    // new files (a new fingerprint) and drops the opened relation
+    graft.index.IndexStore.table(spark, dataPath.toString,
+      graft.index.IndexStore.fingerprint(spark, Seq(dataPath.toString)))
   }
 
   /** Crash recovery: if a swap died between retiring the old generation
@@ -198,6 +201,7 @@ final class VectorCollection(
     // reader created after the swap would still see the previous
     // generation's files (observed: stale search hits after upsert).
     spark.catalog.refreshByPath(dataPath.toString)
+    graft.index.IndexStore.invalidateState(dataPath.toString)
   }
 
   /** Batch insert; rejects the whole batch on any duplicate id (the
@@ -397,25 +401,32 @@ final class VectorCollection(
     * probe many; rebuilds only when the data generation changed and no
     * incremental advance covered it). Returns the index path. */
   def ensureAnnIndex(): String = {
-    val data = df
+    // the data is opened only inside a build closure: a ready index
+    // serves without touching the collection's files
     config.metric match {
       case "cosine" =>
         // compact bucket layout (r18): collection indexes are rebuilt or
         // advanced on every mutation — the ingest-heavy regime where a
         // 64-dir write per generation is pure small-file overhead
         // (guide §6); probes still prune on band_idx + push band_val
-        graft.index.IndexStore.ensure(spark, annIndexPath)(p =>
+        graft.index.IndexStore.ensure(spark, annIndexPath) { p =>
+          val data = df
           graft.index.LshIndex.build(spark, data, "vector", "id",
-            config.dimensions, p, metaColumns(data), compact = true))
+            config.dimensions, p, metaColumns(data), compact = true)
+        }
       case "l2" =>
-        graft.index.IndexStore.ensure(spark, annIndexPath)(p =>
+        graft.index.IndexStore.ensure(spark, annIndexPath) { p =>
+          val data = df
           graft.index.IvfIndex.build(spark, data, "vector", "id",
             graft.knn.Ann.fixedIvfModel(IvfCells, config.dimensions), p,
-            metaColumns(data), stringIds = true))
+            metaColumns(data), stringIds = true)
+        }
       case "ip" =>
-        graft.index.IndexStore.ensure(spark, annIndexPath)(p =>
+        graft.index.IndexStore.ensure(spark, annIndexPath) { p =>
+          val data = df
           graft.index.MipsIndex.build(spark, data, "vector", "id",
-            IvfCells, p, metaColumns(data), stringIds = true))
+            IvfCells, p, metaColumns(data), stringIds = true)
+        }
       case m =>
         throw new IllegalArgumentException(
           s"no ANN index family for metric '$m' — searchAnn runs exact")
@@ -479,10 +490,9 @@ final class VectorCollection(
     * `text` column (same fingerprint lifecycle as [[ensureAnnIndex]]). */
   def ensureTextIndex(): String = {
     requireText()
-    val data = df
     graft.index.IndexStore.ensure(spark, textIndexPath)(p =>
       graft.index.Bm25Index.build(spark,
-        data.select(col("id").as("doc_id"), col("text")), p))
+        df.select(col("id").as("doc_id"), col("text")), p))
   }
 
   /** Keyword top-k over the collection's own BM25 index; the optional
@@ -506,8 +516,8 @@ final class VectorCollection(
     * BM25 postings) over the collection's own rows. */
   def ensureHybridIndex(): String = {
     requireText()
-    val data = df
     graft.index.IndexStore.ensure(spark, hybridIndexPath) { p =>
+      val data = df
       data.select(col("id").as("doc_id"), col("vector").as("embedding"))
         .write.mode("overwrite").parquet(s"$p/vectors")
       graft.index.Bm25Index.build(spark,

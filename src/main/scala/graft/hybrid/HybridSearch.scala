@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.bm25.Bm25
 import graft.functions.VectorFunctions
+import graft.index.IndexStore
 import graft.text.TextAnalysis.wordTokensSql
 
 /** Hybrid vector + keyword retrieval with the reference's blend semantics
@@ -146,10 +147,11 @@ object HybridSearch {
       keywordWeight: Option[Double] = None): DataFrame = {
     val a = resolveAlpha(vectorWeight, keywordWeight, alpha)
     if (queryTerms.isEmpty)
-      return vectorOnly(spark.read.parquet(s"$indexPath/vectors"), queryVec, k)
+      return vectorOnly(IndexStore.table(spark, s"$indexPath/vectors"),
+        queryVec, k)
     val fetch = k * FetchFactor
     val qv = typedlit(queryVec)
-    val vecTop = spark.read.parquet(s"$indexPath/vectors")
+    val vecTop = IndexStore.table(spark, s"$indexPath/vectors")
       .withColumn("d", VectorFunctions.cosineDistance(col("embedding"), qv))
       .select("doc_id", "d")
       .orderBy(col("d"), col("doc_id"))
@@ -175,7 +177,7 @@ object HybridSearch {
     import org.apache.spark.sql.expressions.Window
     val fetch = k * FetchFactor
     val qv = typedlit(queryVec)
-    val vecTop = spark.read.parquet(s"$indexPath/vectors")
+    val vecTop = IndexStore.table(spark, s"$indexPath/vectors")
       .withColumn("d", VectorFunctions.cosineDistance(col("embedding"), qv))
       .select("doc_id", "d")
       .orderBy(col("d"), col("doc_id"))

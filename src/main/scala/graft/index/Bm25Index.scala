@@ -51,6 +51,7 @@ object Bm25Index {
     * doc-count-sized relation per query. doclens persists separately for
     * filtered-search stats recomputation and append bookkeeping. */
   def build(spark: SparkSession, docs: DataFrame, path: String): Unit = {
+    IndexStore.invalidateState(path)
     val toks = Bm25.tokenized(docs).persist()
     // doclens aggregate computed ONCE and shared by its three consumers
     // — the doclens write, the stats aggregate, and the postings join
@@ -76,6 +77,7 @@ object Bm25Index {
     * caller guarantees new doc_ids; wrap in IndexStore.mutate so a crash
     * mid-append invalidates the index instead of serving half an update. */
   def append(spark: SparkSession, newDocs: DataFrame, path: String): Unit = {
+    IndexStore.invalidateState(path)
     val toks = Bm25.tokenized(newDocs).persist()
     try {
       Bm25.docLensFromToks(toks)
@@ -110,7 +112,7 @@ object Bm25Index {
   private def prunedPostings(spark: SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
     val buckets = terms.map(termBucket).distinct
-    spark.read.parquet(s"$path/postings")
+    IndexStore.table(spark, s"$path/postings")
       .filter(col("term_bucket").isin(buckets: _*) &&
         col("term").isin(terms: _*))
       .select("term", "doc_id", "tf", "dl")
@@ -127,7 +129,7 @@ object Bm25Index {
       .agg(countDistinct("doc_id").cast("double").as("df"))
     qPost
       .join(broadcast(docFreq), "term")
-      .crossJoin(broadcast(spark.read.parquet(s"$path/stats")))
+      .crossJoin(broadcast(IndexStore.table(spark, s"$path/stats")))
       .withColumn("idf", Bm25.idfCol)
       .withColumn("w", Bm25.weightCol)
       .groupBy("doc_id")
@@ -148,7 +150,7 @@ object Bm25Index {
     val ids = allowed.select("doc_id").distinct()
     // doclens is only needed to recompute the filtered corpus stats (one
     // aggregate); per-row dl comes from the postings rows themselves
-    val stats = spark.read.parquet(s"$path/doclens").join(ids, "doc_id")
+    val stats = IndexStore.table(spark, s"$path/doclens").join(ids, "doc_id")
       .agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
     val qPost = prunedPostings(spark, path, terms.distinct).join(ids, "doc_id")
     val docFreq = qPost.groupBy("term")

@@ -1,8 +1,12 @@
 package graft.index
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Persistent retrieval-index store: build once, search many times — the
   * reference keeps its BM25 inverted index and quantizer state alive in
@@ -18,6 +22,17 @@ import org.apache.spark.sql.SparkSession
   * served. The fingerprint (total length + latest mtime of the source
   * files) makes a regenerated source invalidate the index automatically;
   * stale fingerprints of the same kind are deleted on rebuild.
+  *
+  * Tables under a ready path are opened once per session ([[table]]):
+  * searches reuse the resolved relation — its file listing and Parquet
+  * schema — instead of paying a listing and a schema-inference job per
+  * query. The opened relations, like the driver-side state of
+  * [[cachedState]], are dropped for a path by every operation that
+  * changes what lies under it: a (re)build in [[ensure]] (and the
+  * stale siblings it deletes), [[mutate]], [[advance]], [[invalidate]],
+  * and every direct index `build`/`append`, which calls
+  * [[invalidateState]] first. A stopped SparkContext's relations are
+  * released when it stops.
   *
   * At cluster scale `root` is a durable store path (set GRAFT_INDEX_ROOT);
   * locally it defaults to the JVM tmpdir so read-only testdata dirs are
@@ -186,7 +201,15 @@ object IndexStore extends org.apache.spark.internal.Logging {
               f.listStatus(parent).filter { st =>
                 st.getPath.getName.startsWith(kind + "_") &&
                   st.getPath.getName != new Path(path).getName
-              }.foreach(st => f.delete(st.getPath, true))
+              }.foreach { st =>
+                f.delete(st.getPath, true)
+                // the sibling in the same string form as `path`, which is
+                // how its memo entries are keyed
+                val sibling =
+                  path.take(path.lastIndexOf('/') + 1) + st.getPath.getName
+                built.remove(sibling)
+                clearState(sibling)
+              }
             f.delete(new Path(path), true)
             clearState(path)
             build(path)
@@ -213,6 +236,9 @@ object IndexStore extends org.apache.spark.internal.Logging {
       built.remove(path)
       f.delete(new Path(path, "_GRAFT_READY"), false)
       change(path)
+      // after the change: a table opened before or during it (an open
+      // still in flight is refused by the epoch) must not be served
+      clearState(path)
       f.create(new Path(path, "_GRAFT_READY"), true).close()
       spark.catalog.refreshByPath(path)
       built.add(path)
@@ -256,6 +282,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
               s"advance rename failed: $from -> $to")
             spark.catalog.refreshByPath(to)
             change(to)
+            clearState(to)
             f.create(new Path(to, "_GRAFT_READY"), true).close()
             spark.catalog.refreshByPath(to)
             built.add(to)
@@ -279,7 +306,10 @@ object IndexStore extends org.apache.spark.internal.Logging {
   }
 
   /** Clear the in-JVM memo only (filesystem untouched). */
-  def resetMemo(): Unit = { built.clear(); stateCache.clear() }
+  def resetMemo(): Unit = {
+    tableEpoch.incrementAndGet()
+    built.clear(); stateCache.clear(); tables.clear()
+  }
 
   // ---- tiny driver-side index state (centroids, codebooks, thresholds,
   // augmentation constants): loaded from parquet with a listing + footer
@@ -314,7 +344,71 @@ object IndexStore extends org.apache.spark.internal.Logging {
     * ensure()/mutate() — cannot leave a search serving the previous
     * build's centroids/codebooks/thresholds off the memo. */
   def invalidateState(pathPrefix: String): Unit = {
-    stateCache.keySet.removeIf(_.startsWith(pathPrefix)); ()
+    tableEpoch.incrementAndGet()
+    stateCache.keySet.removeIf(_.startsWith(pathPrefix))
+    tables.keySet.removeIf(_._1.startsWith(pathPrefix)); ()
   }
   private def clearState(pathPrefix: String): Unit = invalidateState(pathPrefix)
+
+  // ---- opened tables: one resolved parquet relation per (path,
+  // generation, session). A `spark.read.parquet` lists the table's files
+  // (a Spark job once a level has more than 32 dirs, e.g. the 64
+  // term_bucket dirs of BM25 postings) and infers its schema (another
+  // job); both are fixed while the path stays ready.
+  private val tables =
+    new ConcurrentHashMap[(String, String), HadoopFsRelation]()
+  // bumped by every invalidation: a table opened across one is not kept
+  private val tableEpoch = new AtomicLong()
+  private val watchedContexts = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
+  private object ReleaseOnStop extends SparkListener {
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+      tables.values.removeIf(_.sparkSession.sparkContext.isStopped); ()
+    }
+  }
+
+  /** The parquet table at `path`, opened once per session: the first call
+    * resolves it (file listing + schema), later calls get a new
+    * DataFrame over the same relation — fresh attribute ids, so two
+    * reads of one table join like two `spark.read.parquet` calls, but no
+    * listing or schema job. `generation` keys tables whose path does not
+    * change with their content (a collection's data dir passes its
+    * fingerprint); index tables live under fingerprint-keyed paths and
+    * pass none. Entries are per session (a `newSession()` opens its own)
+    * and dropped by [[invalidateState]] on any prefix of `path`. */
+  def table(spark: SparkSession, path: String,
+      generation: String = ""): DataFrame = {
+    val key = (s"$path@$generation",
+      org.apache.spark.sql.graft.bridge.sessionUuid(spark))
+    val hit = tables.get(key)
+    val rel = if (hit != null) hit else {
+      val epoch = tableEpoch.get
+      val opened = spark.read.parquet(path).queryExecution.analyzed match {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+        case other => throw new IllegalStateException(
+          s"parquet read of $path resolved to ${other.nodeName}")
+      }
+      if (tableEpoch.get != epoch) opened
+      else {
+        watchedContexts.synchronized {
+          if (watchedContexts.add(spark.sparkContext))
+            spark.sparkContext.addSparkListener(ReleaseOnStop)
+        }
+        // a bound, not an eviction policy: sessions dropped without a
+        // stop, and scratch paths deleted outside the store, would
+        // otherwise pile up entries in a long-lived context
+        if (tables.size > 256) tables.clear()
+        Option(tables.putIfAbsent(key, opened)).getOrElse(opened)
+      }
+    }
+    spark.baseRelationToDataFrame(rel)
+  }
+
+  /** Tables currently open for `spark` (spec observability). */
+  private[graft] def openTables(spark: SparkSession): Seq[String] = {
+    val uuid = org.apache.spark.sql.graft.bridge.sessionUuid(spark)
+    import scala.jdk.CollectionConverters._
+    tables.keySet.asScala.collect { case (p, `uuid`) => p }.toSeq.sorted
+  }
 }

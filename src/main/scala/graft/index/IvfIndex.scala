@@ -81,7 +81,7 @@ object IvfIndex {
   def searchBatchDf(spark: SparkSession, path: String, vecCol: String,
       idCol: String, queries: DataFrame, nprobe: Int, k: Int,
       metric: String = "cosine"): DataFrame = {
-    val cent = spark.read.parquet(s"$path/centroids")
+    val cent = IndexStore.table(spark, s"$path/centroids")
     val d2 = expr("aggregate(zip_with(qvec, centroid, " +
       "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v)")
     val wProbe = org.apache.spark.sql.expressions.Window
@@ -96,7 +96,7 @@ object IvfIndex {
       .collect().map(_.getInt(0)).toSeq
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("score"), col(idCol))
-    spark.read.parquet(s"$path/cells")
+    IndexStore.table(spark, s"$path/cells")
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(pairs), Seq("cell"))
       .join(broadcast(queries), Seq("qid"))

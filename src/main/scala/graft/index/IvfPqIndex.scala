@@ -68,6 +68,7 @@ object IvfPqIndex {
         col(idCol).cast("long").as(idCol),
         VectorFunctions.pqEncode(vecD, cb.cb).as("codes"),
         vecD.as(vecCol)) ++ metaCols.map(col): _*)
+    IndexStore.invalidateState(s"$path/cells")
     if (mode == "append")
       IndexStore.requireAppendSchema(spark, s"$path/cells", rows)
     rows.write.mode(mode).partitionBy("cell").parquet(s"$path/cells")
@@ -112,7 +113,7 @@ object IvfPqIndex {
     val lutLit = typedlit(
       ProductQuant.adcLut(cb, queryVec).map(_.toSeq).toSeq)
     val probe = Ann.probeCells(ivf, queryVec, nprobe)
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = IndexStore.table(spark, s"$path/cells")
       .filter(col("cell").isin(probe: _*))
     val visible = filter.map(cells.filter).getOrElse(cells)
     val cand = visible
@@ -157,7 +158,7 @@ object IvfPqIndex {
     val allCells = probeLut.map(_._2).distinct
     val pairsDf = probeLut.toDF("qid", "cell", "lut")
     val qDf = queries.toDF("qid", "qvec")
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = IndexStore.table(spark, s"$path/cells")
       .filter(col("cell").isin(allCells: _*))
     val cand = cells
       .select(col("cell"), col(idCol).cast("long").as(idCol), col("codes"))

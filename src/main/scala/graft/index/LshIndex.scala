@@ -80,9 +80,11 @@ object LshIndex {
     * trips otherwise, by design). */
   def build(spark: SparkSession, emb: DataFrame, vecCol: String,
       idCol: String, dim: Int, path: String,
-      metaCols: Seq[String] = Nil, compact: Boolean = false): Unit =
+      metaCols: Seq[String] = Nil, compact: Boolean = false): Unit = {
+    IndexStore.invalidateState(path)
     writeBuckets(bucketRows(emb, vecCol, idCol, dim, metaCols),
       s"$path/buckets", "overwrite", compact)
+  }
 
   private def writeBuckets(rows: DataFrame, dst: String, mode: String,
       compact: Boolean): Unit =
@@ -103,6 +105,7 @@ object LshIndex {
   def append(spark: SparkSession, newRows: DataFrame, vecCol: String,
       idCol: String, dim: Int, path: String,
       metaCols: Seq[String] = Nil, compact: Boolean = false): Unit = {
+    IndexStore.invalidateState(path)
     val rows = bucketRows(newRows, vecCol, idCol, dim, metaCols)
     IndexStore.requireAppendSchema(spark, s"$path/buckets", rows)
     writeBuckets(rows, s"$path/buckets", "append", compact)
@@ -127,7 +130,7 @@ object LshIndex {
         col("band.band_val").as("band_val"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("score"), col(idCol))
-    spark.read.parquet(s"$path/buckets")
+    IndexStore.table(spark, s"$path/buckets")
       .join(broadcast(qBands), Seq("band_idx", "band_val"))
       .dropDuplicates("qid", idCol) // a pair may collide in several bands
       .withColumn("score",
@@ -208,7 +211,7 @@ object LshIndex {
         col("band_idx") === b && col("band_val").isin(vals: _*)
       }
       .reduce(_ || _)
-    val base = spark.read.parquet(s"$path/buckets").filter(probe)
+    val base = IndexStore.table(spark, s"$path/buckets").filter(probe)
     filter.map(base.filter).getOrElse(base)
       .dropDuplicates(idCol) // a candidate may collide in several bands
       .withColumn("score",

@@ -57,6 +57,7 @@ object MipsIndex {
         metaCols.map(col) :+
         VectorFunctions.nearestCell(col(vecCol).cast("array<double>"),
           cents, augM2 = Some(m2)).as("cell"): _*)
+    IndexStore.invalidateState(s"$path/cells")
     if (mode == "append")
       IndexStore.requireAppendSchema(spark, s"$path/cells", rows)
     rows.write.mode(mode).partitionBy("cell").parquet(s"$path/cells")
@@ -114,7 +115,7 @@ object MipsIndex {
       .collect().map(_.getInt(0)).toSeq
     val wTop = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("score"), col(idCol))
-    spark.read.parquet(s"$path/cells")
+    IndexStore.table(spark, s"$path/cells")
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(pairs), Seq("cell"))
       .join(broadcast(checked), Seq("qid"))
@@ -138,7 +139,7 @@ object MipsIndex {
       s"query dim ${queryVec.length} != index dim $dim")
     val probe = Ann.probeCells(
       Ann.fixedIvfModel(cells, dim + 1), queryVec :+ 0.0, nprobe)
-    val base = spark.read.parquet(s"$path/cells")
+    val base = IndexStore.table(spark, s"$path/cells")
       .filter(col("cell").isin(probe: _*))
     filter.map(base.filter).getOrElse(base)
       .withColumn("score",

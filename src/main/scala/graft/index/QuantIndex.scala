@@ -57,6 +57,7 @@ object QuantIndex {
         .collect().map(_.getDouble(1)).toSeq
     }
     val rows = packRows(newRows, vecCol, idCol, thrs)
+    IndexStore.invalidateState(s"$path/packed")
     IndexStore.requireAppendSchema(spark, s"$path/packed", rows)
     rows.write.mode("append").parquet(s"$path/packed")
     spark.catalog.refreshByPath(s"$path/packed")
@@ -72,7 +73,7 @@ object QuantIndex {
     }
     val qw0 = BinaryQuant.packQueryWord(queryVec, thrs, 0)
     val qw1 = BinaryQuant.packQueryWord(queryVec, thrs, BinaryQuant.WordBits)
-    spark.read.parquet(s"$path/packed")
+    IndexStore.table(spark, s"$path/packed")
       .selectExpr(idCol,
         s"cast(bit_count(w0 ^ ${qw0}L) + bit_count(w1 ^ ${qw1}L) as int) as hamming")
       .orderBy(col("hamming"), col(idCol))
@@ -119,6 +120,7 @@ object QuantIndex {
       .encode(newRows, vecCol, idCol, loadPqCodebooks(spark, path))
       .selectExpr(idCol,
         "transform(codes, pqc -> cast(pqc as tinyint)) as codes")
+    IndexStore.invalidateState(s"$path/codes")
     IndexStore.requireAppendSchema(spark, s"$path/codes", rows)
     rows.write.mode("append").parquet(s"$path/codes")
     spark.catalog.refreshByPath(s"$path/codes")
@@ -129,7 +131,7 @@ object QuantIndex {
   def searchPq(spark: SparkSession, path: String, idCol: String,
       queryVec: Seq[Double], k: Int): DataFrame =
     ProductQuant.searchAdcCodes(
-      spark.read.parquet(s"$path/codes"), idCol,
+      IndexStore.table(spark, s"$path/codes"), idCol,
       loadPqCodebooks(spark, path), queryVec, k)
 
   // ---- SQ ----------------------------------------------------------------
@@ -171,6 +173,7 @@ object QuantIndex {
     val mns = st.map(_._1).toSeq
     val scales = st.map { case (mn, mx) => (mx - mn) / ScalarQuant.Levels }.toSeq
     val rows = encodeSqRows(newRows, vecCol, idCol, dim, mns, scales)
+    IndexStore.invalidateState(s"$path/codes")
     IndexStore.requireAppendSchema(spark, s"$path/codes", rows)
     rows.write.mode("append").parquet(s"$path/codes")
     spark.catalog.refreshByPath(s"$path/codes")
@@ -189,7 +192,7 @@ object QuantIndex {
     val mns = st.map(_._1).toSeq
     val scales = st.map { case (mn, mx) => (mx - mn) / ScalarQuant.Levels }.toSeq
     val qvLit = queryVec.mkString("array(", "D, ", "D)")
-    spark.read.parquet(s"$path/codes")
+    IndexStore.table(spark, s"$path/codes")
       .withColumn("mns", typedlit(mns))
       .withColumn("scales", typedlit(scales))
       .selectExpr(idCol,

@@ -424,6 +424,7 @@ object Ann {
     val rows = emb.select(
       Seq(idKey.as(idCol), vecD.as(vecCol)) ++ metaCols.map(col) :+
         VectorFunctions.nearestCell(vecD, m.centroids).as("cell"): _*)
+    graft.index.IndexStore.invalidateState(path)
     if (mode == "append")
       graft.index.IndexStore.requireAppendSchema(spark, path, rows)
     rows.write.mode(mode).partitionBy("cell").parquet(path)
@@ -455,7 +456,7 @@ object Ann {
     val pairsDf = probePairs.toDF("qid", "cell")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("score"), col(idCol))
-    spark.read.parquet(path)
+    graft.index.IndexStore.table(spark, path)
       .filter(col("cell").isin(allCells: _*))
       .join(broadcast(pairsDf), Seq("cell"))
       .join(broadcast(qDf), Seq("qid"))
@@ -526,7 +527,8 @@ object Ann {
       filter: Option[Column] = None, metric: String = "cosine"): DataFrame = {
     val probe = probeCells(m, queryVec, nprobe)
     val qv = typedlit(queryVec)
-    val base = spark.read.parquet(path).filter(col("cell").isin(probe: _*))
+    val base = graft.index.IndexStore.table(spark, path)
+      .filter(col("cell").isin(probe: _*))
     filter.map(base.filter).getOrElse(base)
       .withColumn("score",
         round(Knn.distance(metric, col(vecCol), qv), 6))

@@ -12,6 +12,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{broadcast, col, first, typedlit}
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 import graft.expr.CosineDistance
+import graft.index.IndexStore
 import graft.knn.Ann
 
 /** Registry of parquet tables that carry a persistent ANN index — the
@@ -269,11 +270,12 @@ final case class AnnTopKRewrite(spark: SparkSession)
     // Everything below is driver-side plan construction — an optimizer
     // rule must not run Spark jobs: band values come from Ann.bandValues
     // (bit-identical with the build's codegen arithmetic, pinned by
-    // AnnSpec) instead of a 1-row collect, and the analyzed candidate
-    // plan (whose spark.read.parquet pays file listing + schema read) is
-    // cached per (indexPath, query, columns) so re-planning the same
-    // query is free. The indexPath embeds the source fingerprint, so a
-    // regenerated table can never hit a stale cache entry.
+    // AnnSpec) instead of a 1-row collect, the index table is opened once
+    // per session (IndexStore.table: no listing or schema job), and the
+    // analyzed candidate plan is cached per (session, indexPath, query,
+    // columns) so re-planning the same query is free. The indexPath
+    // embeds the source fingerprint, so a regenerated table can never hit
+    // a stale cache entry.
     // the pushed predicate re-targets the candidate table BY NAME (the
     // bucket/cell table carries the data columns under their original
     // names); resolution happens when the candidate DataFrame analyzes
@@ -332,14 +334,16 @@ object AnnTopK {
       fields: Seq[(String, org.apache.spark.sql.types.DataType)],
       pushed: Option[Expression] = None)
       : LogicalPlan =
-    // the key carries EVERY registration field the plan depends on:
+    // the key carries the session (the plan holds that session's opened
+    // index table) and EVERY registration field the plan depends on:
     // nprobe and the centroid VALUES shape the ivf/mips probe, so a
     // re-registration with a different recall knob or model must never
     // hit a prior registration's cached plan (values, not hashCode — a
     // hash collision would silently serve the wrong probe plan); the
     // pushed predicate is part of the plan, so its sql keys too
     candCache.computeIfAbsent(
-      (s"${reg.indexPath}|${reg.kind}|${reg.nprobe}|${reg.rerank}",
+      (s"${org.apache.spark.sql.graft.bridge.sessionUuid(spark)}|" +
+        s"${reg.indexPath}|${reg.kind}|${reg.nprobe}|${reg.rerank}",
         reg.centroids, reg.pq.map(_.cb),
         qv, fields.map(f => f._1 + ":" + f._2.sql).mkString(","),
         pushed.map(_.sql).getOrElse("")),
@@ -362,7 +366,7 @@ object AnnTopK {
           val lutLit = typedlit(graft.quant.ProductQuant
             .adcLut(reg.pq.get, qv).map(_.toSeq).toSeq)
           val cells = preFiltered(
-            spark.read.parquet(s"${reg.indexPath}/cells")
+            IndexStore.table(spark, s"${reg.indexPath}/cells")
               .filter(col("cell").isin(probe: _*)))
           val pool = cells
             .select(col(reg.idCol),
@@ -386,7 +390,7 @@ object AnnTopK {
           val probeQ = if (reg.kind == "mips") qv :+ 0.0 else qv
           val probe = Ann.probeCells(
             Ann.IvfModel(reg.centroids), probeQ, reg.nprobe)
-          preFiltered(spark.read.parquet(s"${reg.indexPath}/cells")
+          preFiltered(IndexStore.table(spark, s"${reg.indexPath}/cells")
               .filter(col("cell").isin(probe: _*)))
             .select(typed: _*)
             .queryExecution.analyzed
@@ -401,7 +405,7 @@ object AnnTopK {
           // Deduplicate would arrive after
           // ReplaceDeduplicateWithAggregate already ran.
           val others = fields.map(_._1).filterNot(_ == reg.idCol)
-          preFiltered(spark.read.parquet(s"${reg.indexPath}/buckets")
+          preFiltered(IndexStore.table(spark, s"${reg.indexPath}/buckets")
               .filter(probe))
             .groupBy(col(reg.idCol))
             .agg(first(col(others.head)).as(others.head),

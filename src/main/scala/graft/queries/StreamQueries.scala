@@ -541,6 +541,7 @@ object StreamQueries {
           LshIndex.search(s, idx, "embedding", "vec_id", qv, D, K)
             .localCheckpoint()
         } finally {
+          IndexStore.invalidateState(idx)
           val p = new org.apache.hadoop.fs.Path(tmp)
           p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
         }

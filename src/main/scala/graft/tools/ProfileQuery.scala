@@ -73,13 +73,8 @@ object ProfileQuery {
       for (r <- 1 to reps) rep(s"warm$r")
       // breakdown of the final warm rep. The listener bus is async, so
       // drain it first or jobs whose onJobEnd hasn't been delivered yet
-      // are silently dropped from the sum (advisor r17). listenerBus is
-      // private[spark] — reflection, with a sleep fallback.
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case scala.util.control.NonFatal(_) => Thread.sleep(500) }
+      // are silently dropped from the sum.
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
       import scala.jdk.CollectionConverters._
       val last = jobs.values.asScala.toSeq
         .filter(j => j.group == s"profile:$name:warm$reps" && j.t1 > 0)

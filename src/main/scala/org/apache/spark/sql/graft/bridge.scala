@@ -17,4 +17,10 @@ object bridge {
     * used to key session-scoped registries like graft's IndexedTables. */
   def sessionUuid(s: org.apache.spark.sql.SparkSession): String =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
+  /** Block until every posted event reached the listeners
+    * (`listenerBus` is `private[spark]`): a listener read right after an
+    * action otherwise misses events still in the async queue. */
+  def drainListenerBus(s: org.apache.spark.sql.SparkSession): Unit =
+    s.sparkContext.listenerBus.waitUntilEmpty()
 }
