@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with the warm (steady-state)
   * headline total as the primary metric, plus the cold pass and the
@@ -20,19 +19,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session timezone as Verify.main: the decade-scale
-      // certification below runs Verify.dump IN THIS SESSION, and the
-      // timestamp-window entries compare against DuckDB (UTC) — on a
-      // non-UTC host a mismatched session zone would make the in-JVM
-      // gate diverge from the stock driver gate it replicates (ADVICE r12)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session()
     // Wall-clock origin for every per-rep/per-probe timestamp below
     // (VERDICT r10 #1): offsets in seconds from this instant, plus the
     // absolute epoch in the artifact, make a co-tenant load window
@@ -232,21 +220,6 @@ object Bench {
       if (unknown.nonEmpty) System.err.println(
         s"[bench] WARNING: SPARK_GRAFT_BENCH_ONLY names not in the catalog: $unknown")
     }
-    // Per-REP GC, outside the timed window (VERDICT r9 #1): the former
-    // per-QUERY GC released dead localCheckpoint blocks only after all 5
-    // reps, so a checkpoint-heavy query (pagerank: ~5 checkpointed
-    // tables per rep) accumulates dead blocks ACROSS ITS OWN REPS and
-    // any resulting storage-eviction pressure bills to the later, TIMED
-    // reps. This was the leading hypothesis for r9's pagerank anomaly
-    // (warm median 12.4 s above cold 5.6 s on a steady box); an r10 A/B
-    // with per-rep timings did NOT reproduce the anomaly under either
-    // GC mode (flat ~3 s reps), so the per-rep GC stands as structural
-    // insurance, and the per-rep arrays below make any recurrence
-    // adjudicable from the artifact alone. LIVE state (built graph,
-    // index readers) is object-held and survives — do NOT clearCache()
-    // here, that would unpersist the build phase's materializations.
-    // `off` keeps the old behavior for A/B diagnosis.
-    val repGc = !sys.env.get("SPARK_GRAFT_REP_GC").contains("off")
     // mid-headline probe (VERDICT r11 #6): the headline series runs
     // inside a multi-minute window with probes only at its endpoints —
     // one probe halfway through halves the blame window when a drift
@@ -266,7 +239,14 @@ object Bench {
             System.err.println(s"[bench] ${q.name} failed: $t"); return None
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        if (repGc) System.gc()
+        // Per-REP GC, outside the timed window: it releases dead
+        // localCheckpoint blocks between reps, so a checkpoint-heavy query
+        // (pagerank: ~5 checkpointed tables per rep) cannot bill storage-
+        // eviction pressure from its own earlier reps to its timed reps.
+        // LIVE state (built graph, index readers) is object-held and
+        // survives — do NOT clearCache() here, that would unpersist the
+        // build phase's materializations.
+        System.gc()
         Some(dt)
       }
       val cold = rep()
@@ -283,7 +263,6 @@ object Bench {
         if (cold.isDefined && warmReps.size == WarmReps)
           Some(warmReps.sorted.apply(WarmReps / 2))
         else None
-      if (!repGc) System.gc() // the pre-r10 per-query release point
       (q.name, cold, settle, warmReps, warm, repT.toSeq)
     }
     probeAt("post_headline")
@@ -658,7 +637,7 @@ object Bench {
         (if (partial) ""","partial":true""" else "") +
         s""","queries":${jmap(good.map(r => r._1 -> r._3))}""" +
         s""","queries_cold":${jmap(good.map(r => r._1 -> r._2))}""" +
-        s""","queries_reps":$repsJson,"rep_gc":$repGc""" +
+        s""","queries_reps":$repsJson,"rep_gc":true""" +
         s""","cold_total":${r3(coldTotal)},"build_sec":${r3(buildSec)}""" +
         s""","build_failed":$buildFailed,"probe_sec":${r3(probeSec)}""" +
         s""","bench_epoch_ms":$benchEpochMs,"probe_points":$probePointsJson""" +
@@ -865,7 +844,7 @@ object Bench {
                 return None
             }
             val dt = (System.nanoTime() - t0) / 1e9
-            if (repGc) System.gc()
+            System.gc()
             Some(dt)
           }
           // cold (pays the 10×-scale index/layout/graph builds) + settle,

@@ -1,29 +1,126 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: time and/or explain single catalog queries.
-  * Usage: runMain graft.Explain <sfDir> <name> [time|plan] [reps]
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Dev tool over named catalog queries, on the [[LocalSpark]] session.
+  *
+  * `plan` prints each query's `explain("formatted")`, or, given an out dir
+  * and a suffix, writes it to `<outDir>/<name>_<suffix>.txt` (the committed
+  * `plans/r1x/` before/after files).
+  *
+  * `profile` runs the bench discipline (cold + settle + `reps` warm reps,
+  * default 3), printing every rep's wall time, then every Spark job the
+  * LAST warm rep launched with its wall, the gap since the previous job,
+  * tasks and executor run/CPU/GC time — so a rep decomposes into which
+  * eager materializations and actions cost what. Jobs are attributed to a
+  * rep by a job group set around it.
   */
 object Explain {
+  private val Usage = "usage: Explain <sfDir> <names_csv> plan [<outDir> <suffix>]" +
+    " | profile [reps]"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val name = if (args.length > 1) args(1) else "knn_cosine"
-    val mode = if (args.length > 2) args(2) else "plan"
-    val reps = if (args.length > 3) args(3).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val q = Catalog.byName(name)
-    if (mode == "plan") q.run(spark, sfDir).explain("formatted")
-    else {
-      for (r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        val n = q.run(spark, sfDir).count()
-        println(f"[explain] $name rep$r: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+    val valid = args.length >= 3 && (args(2) match {
+      case "plan" => args.length == 3 || args.length == 5
+      case "profile" => args.length == 3 ||
+        (args.length == 4 && args(3).toIntOption.exists(_ > 0))
+      case _ => false
+    })
+    if (!valid) {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
+    val sfDir = args(0)
+    val queries = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+      .map(Catalog.byName).toSeq
+    val spark = LocalSpark.session()
+    try args(2) match {
+      case "plan" => plan(spark, sfDir, queries,
+        if (args.length == 5) Some((args(3), args(4))) else None)
+      case "profile" => profile(spark, sfDir, queries,
+        if (args.length == 4) args(3).toInt else 3)
+    } finally spark.stop()
+  }
+
+  private def plan(spark: SparkSession, sfDir: String, queries: Seq[Q],
+      out: Option[(String, String)]): Unit = {
+    out.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
+    for (q <- queries) {
+      val text =
+        try q.run(spark, sfDir).queryExecution.explainString(FormattedMode)
+        catch { case scala.util.control.NonFatal(t) => s"explain failed: $t" }
+      out match {
+        case Some((dir, suffix)) =>
+          val path = s"$dir/${q.name}_$suffix.txt"
+          Files.writeString(Paths.get(path), text)
+          println(s"[explain] wrote $path")
+        case None =>
+          println(s"[explain] ---- ${q.name} ----")
+          println(text)
       }
     }
-    spark.stop()
+  }
+
+  private final case class Job(id: Int, group: String, t0: Long,
+      var t1: Long = 0L, var tasks: Int = 0, var runMs: Long = 0L,
+      var gcMs: Long = 0L, var cpuMs: Long = 0L)
+
+  private def profile(spark: SparkSession, sfDir: String, queries: Seq[Q],
+      reps: Int): Unit = {
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val group = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        js.stageIds.foreach(sid => stageJob.put(sid, js.jobId))
+        jobs.put(js.jobId, Job(js.jobId, group, js.time))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(jobs.get(je.jobId)).foreach(_.t1 = je.time)
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo
+        Option(stageJob.get(si.stageId)).flatMap(j => Option(jobs.get(j)))
+          .foreach { j =>
+            j.tasks += si.numTasks
+            j.runMs += si.taskMetrics.executorRunTime
+            j.gcMs += si.taskMetrics.jvmGCTime
+            j.cpuMs += si.taskMetrics.executorCpuTime / 1000000L
+          }
+      }
+    })
+
+    for (q <- queries) {
+      def rep(tag: String): Unit = {
+        spark.sparkContext.setJobGroup(s"profile:${q.name}:$tag", s"profile:$tag")
+        val t0 = System.nanoTime()
+        val n = q.run(spark, sfDir).count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        spark.sparkContext.clearJobGroup()
+        System.gc()
+        println(f"[profile] ${q.name} $tag: $dt%.3f s ($n rows)")
+      }
+      rep("cold"); rep("settle")
+      for (r <- 1 to reps) rep(s"warm$r")
+      // the listener bus is async: drain it, or jobs whose onJobEnd has
+      // not been delivered yet drop out of the breakdown
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
+      import scala.jdk.CollectionConverters._
+      val last = jobs.values.asScala.toSeq
+        .filter(j => j.group == s"profile:${q.name}:warm$reps" && j.t1 > 0)
+        .sortBy(_.t0)
+      val total = last.map(j => (j.t1 - j.t0) / 1e3).sum
+      println(f"[profile] ---- ${q.name}%s warm$reps%s job breakdown (${last.size}%d jobs, sum $total%.3f s) ----")
+      var prevEnd = 0L
+      for (j <- last) {
+        val gap = if (prevEnd == 0) 0.0 else (j.t0 - prevEnd) / 1e3
+        println(f"[profile] job ${j.id}%4d ${(j.t1 - j.t0) / 1e3}%7.3f s  gap $gap%6.3f s  tasks ${j.tasks}%4d  exec ${j.runMs / 1e3}%7.3f s  cpu ${j.cpuMs / 1e3}%7.3f s  gc ${j.gcMs / 1e3}%6.3f s")
+        prevEnd = j.t1
+      }
+    }
   }
 }

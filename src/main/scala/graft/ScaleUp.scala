@@ -95,11 +95,7 @@ object ScaleUp {
     val srcDir = args(0)
     val dstDir = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     KeyCols.keys.toSeq.sorted.foreach { t =>
       scaled(spark, srcDir, t, copies)
         .write.mode("overwrite").parquet(s"$dstDir/$t.parquet")

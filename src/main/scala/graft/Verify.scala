@@ -11,14 +11,7 @@ object Verify {
     // local iteration on a few entries (the driver passes two args only)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     dump(spark, sfDir, outDir, only)
     spark.stop()
   }

@@ -373,10 +373,11 @@ object Dedup {
   /** Verified component edges (x, y): the exact frame
     * [[nearDupComponents]] propagates over and the quantity its
     * union-find hatch decides on — exposed so the bench's `components`
-    * probe and [[graft.tools.ProbeEdges]] measure the REAL thing, not a
-    * reimplementation that could drift. Materialized (localCheckpoint,
-    * not persist — GC-scoped storage, see minhashLshPairs): callers
-    * reuse it across propagation rounds / counts. */
+    * probe measures the REAL thing, not a reimplementation that could
+    * drift (the per-corpus edge counts are in SURVEY.md). Materialized
+    * (localCheckpoint, not persist — GC-scoped storage, see
+    * minhashLshPairs): callers reuse it across propagation rounds /
+    * counts. */
   def componentEdges(docs: DataFrame,
       bucketCap: Int = BucketGuard.DefaultCap,
       sigs: Option[DataFrame] = None): DataFrame = {

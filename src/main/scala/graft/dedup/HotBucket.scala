@@ -141,7 +141,8 @@ object HotBucket {
     // (ids outside the planted range — the raw corpus without the
     // cluster). The foreign maximum is the regime probe: a corpus whose
     // own mass exceeds the cap is past the guard boundary regardless of
-    // the plant (the measurement `tools/ProbeBuckets` makes by hand).
+    // the plant (BucketGuardSpec pins that boundary at driver scale;
+    // SURVEY.md records it per corpus).
     val stats = Dedup.bandRows(ds)
       .groupBy("band", "sig")
       .agg(count(lit(1)).as("n"), countDistinct("fsig").as("nf"),

@@ -31,7 +31,8 @@ final case class Graph(nodes: DataFrame, edges: DataFrame) {
     * graphs whose edges reference missing nodes). The rank loops' join
     * and group keys become 8-byte longs instead of strings (r18, guide
     * §2.3 narrower types — measured ~35% per-hop CPU cut on the rank
-    * iteration shape, tools/ProbeRankKeys). Ids are sorted before the
+    * iteration shape, OPTIMIZATION_r18.md § "Graph.edgesOd +
+    * Graph.dict"). Ids are sorted before the
     * id assignment, so nid values are deterministic under partition
     * recompute (range boundaries and in-partition order are functions
     * of the data). The encoding is a bijection — results never depend

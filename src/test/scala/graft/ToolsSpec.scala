@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * surfacing rounds later as a 1,239 s main-lane chain at a 100× corpus
   * (the r15 pre-flight catch, VERDICT r15 #5). Skips only when the
   * python3+duckdb toolchain is absent (it is present on the driver box
-  * and this one; oracle_check imports duckdb at module scope).
+  * and this one; oracle_check imports duckdb at module scope). Also
+  * guards the tree's one session factory: code under `src/main/scala`
+  * builds sessions only through [[LocalSpark]].
   */
 class ToolsSpec extends AnyFunSuite {
   test("oracle_check main-tier selection rules (tools/test_oracle_tier.py)") {
@@ -23,5 +25,22 @@ class ToolsSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.UTF_8)
     assert(p.waitFor() == 0, s"tier tests failed:\n$out")
     assert(out.contains("== all tier tests passed =="), out)
+  }
+
+  test("SparkSession.builder() is called only inside graft.LocalSpark") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val Builder = """SparkSession\s*\.\s*builder\b""".r
+    import scala.jdk.CollectionConverters._
+    val files = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    assert(files.nonEmpty, s"no sources under $root")
+    val calls = files.flatMap { f =>
+      val code = java.nio.file.Files.readString(f)
+        .replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//[^\n]*", "")
+      Seq.fill(Builder.findAllIn(code).size)(root.relativize(f).toString)
+    }
+    assert(calls == Seq("graft/LocalSpark.scala"),
+      s"build sessions through graft.LocalSpark.session(); builder calls: $calls")
   }
 }

@@ -88,8 +88,8 @@ def connect(sf_dir, threads=None, mem_bytes=None):
         con.execute(f"SET memory_limit='{mem_bytes // (1 << 20)}MB'")
     for t in TABLES:
         # testdata ships single files; ScaleUp corpora (10x decade dirs)
-        # are Spark-written DIRECTORIES — glob those (compare.py does the
-        # same), so the decade-scale certification runs with this tool
+        # are Spark-written DIRECTORIES — glob those, so the decade-scale
+        # certification runs with this tool
         src = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(src):
             src = f"{src}/*.parquet"

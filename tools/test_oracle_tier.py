@@ -3,7 +3,9 @@
 #5, ADVICE r15, VERDICT r16 #5): the single-slot main tier's
 eligibility and ranking rules plus the cost cache's per-lane format and
 sql-key provenance, pinned as pure-function cases so a scheduler
-regression shows up without a 100x-corpus run.
+regression shows up without a 100x-corpus run. Also the comparer itself
+(connect / check_one / main's name filter) on a tiny temp corpus with
+both single-file and Spark-directory tables.
 
 Run: python3 tools/test_oracle_tier.py   (exit 0 = pass)
 Also invoked by the ScalaTest suite (ToolsSpec) so `sbt test` covers it.
@@ -122,6 +124,79 @@ check(load_costs("/nonexistent/_oracle_costs.json") == {},
 # 10. Threshold sanity: the constants the rules quote.
 check(MAIN_TIER_SEC == 60.0 and MAIN_TIER_FULLTHREAD_SEC == 15.0,
       "tier thresholds unchanged (60s pool / 15s full-thread)")
+
+# 11. The comparer itself, on a tiny corpus of both layouts: testdata's
+#     single `<t>.parquet` files and ScaleUp's Spark-written `<t>.parquet/`
+#     directories of part files (plus a `_SUCCESS` marker). A correct
+#     entry passes, the name filter checks only the named entries, and a
+#     wrong dump fails.
+import contextlib  # noqa: E402
+import io  # noqa: E402
+import pyarrow as pa  # noqa: E402
+import pyarrow.parquet as pq  # noqa: E402
+from oracle_check import TABLES, connect, check_one, main  # noqa: E402
+
+os.environ["ORACLE_JOBS"] = "1"
+with tempfile.TemporaryDirectory() as tmp:
+    sf, out = os.path.join(tmp, "sf"), os.path.join(tmp, "out")
+    os.makedirs(sf)
+    dir_tables = {"orders", "customer"}
+    for t in TABLES:
+        if t in dir_tables:
+            d = os.path.join(sf, f"{t}.parquet")
+            os.makedirs(d)
+            pq.write_table(pa.table({"id": [1, 2]}),
+                           os.path.join(d, "part-00000.parquet"))
+            pq.write_table(pa.table({"id": [3]}),
+                           os.path.join(d, "part-00001.parquet"))
+            open(os.path.join(d, "_SUCCESS"), "w").close()
+        else:
+            pq.write_table(pa.table({"id": [7], "name": [t]}),
+                           os.path.join(sf, f"{t}.parquet"))
+    oracle = {
+        "orders_ids": "SELECT id FROM orders",
+        "nation_names": "SELECT name, id FROM nation",
+        "customer_wrong": "SELECT id FROM customer",
+    }
+    dumps = {
+        "orders_ids": pa.table({"id": [3, 1, 2]}),
+        "nation_names": pa.table({"id": [7], "name": ["nation"]}),
+        "customer_wrong": pa.table({"id": [1, 2, 99]}),
+    }
+    for name, tbl in dumps.items():
+        os.makedirs(os.path.join(out, name))
+        pq.write_table(tbl, os.path.join(out, name, "part-00000.parquet"))
+        open(os.path.join(out, name, "_SUCCESS"), "w").close()
+    with open(os.path.join(out, "oracle_sql.json"), "w") as fh:
+        json.dump(oracle, fh)
+
+    con = connect(sf)
+    ok, lines, _ = check_one(con, out, "orders_ids", oracle["orders_ids"])
+    check(ok and "(3 rows)" in lines[0],
+          "check_one: directory table reads every part file")
+    ok, _, _ = check_one(con, out, "nation_names", oracle["nation_names"])
+    check(ok, "check_one: single-file table, columns compared by name")
+    ok, lines, _ = check_one(con, out, "customer_wrong",
+                             oracle["customer_wrong"])
+    check(not ok and lines[0].startswith("FAIL customer_wrong"),
+          "check_one: a wrong dump fails")
+
+    def run(names):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            rc = main(sf, out, names)
+        return rc, buf.getvalue()
+
+    rc, text = run({"orders_ids", "nation_names"})
+    check(rc == 0 and "== 2 pass, 0 fail ==" in text
+          and "customer_wrong" not in text,
+          "main(names): checks only the named entries")
+    rc, text = run({"customer_wrong"})
+    check(rc == 1 and "== 0 pass, 1 fail ==" in text,
+          "main(names): a named wrong entry fails the run")
+    rc, text = run(None)
+    check(rc == 1 and "== 2 pass, 1 fail ==" in text,
+          "main: no filter checks every entry")
 
 if failures:
     print(f"== {len(failures)} FAILED ==")
