@@ -33,6 +33,8 @@ object CollectionConfig {
     * (a quote or backslash in the name would otherwise write invalid
     * JSON that the regex parser cannot read back). */
   val NameOk = """[A-Za-z0-9_-]+""".r
+  /** `none`: no vector distance — text and metadata search only. */
+  val Metrics = Seq("cosine", "l2", "ip", "none")
   private val P = """"(\w+)"\s*:\s*("([^"]*)"|\d+)""".r
   def fromJson(s: String): CollectionConfig = {
     val kv = P.findAllMatchIn(s).map { m =>
@@ -236,7 +238,6 @@ final class VectorCollection(
       val hasText = snap.columns.contains("text")
       val prevAnn = annIndexPath
       val prevText = if (hasText) Some(textIndexPath) else None
-      val prevHyb = if (hasText) Some(hybridIndexPath) else None
       commit(df.unionByName(snap))
       // Best-effort: indexes are derived state (advance() already
       // swallows its own failures and leaves the path not-ready, so the
@@ -256,16 +257,10 @@ final class VectorCollection(
               graft.index.IvfIndex.append(spark, snap, "vector", "id", p,
                 metaColumns(snap), stringIds = true)
           })
-      def textRows = snap.select(col("id").as("doc_id"), col("text"))
       prevText.foreach(pt =>
         graft.index.IndexStore.advance(spark, pt, textIndexPath)(p =>
-          graft.index.Bm25Index.append(spark, textRows, p)))
-      prevHyb.foreach(ph =>
-        graft.index.IndexStore.advance(spark, ph, hybridIndexPath) { p =>
-          snap.select(col("id").as("doc_id"), col("vector").as("embedding"))
-            .write.mode("append").parquet(s"$p/vectors")
-          graft.index.Bm25Index.append(spark, textRows, p)
-        })
+          graft.index.Bm25Index.append(spark,
+            snap.select(col("id").as("doc_id"), col("text")), p)))
     }
     logEvents("insert", snap.select("id"))
   }
@@ -392,6 +387,10 @@ final class VectorCollection(
     graft.index.IndexStore.path(spark, s"$root/${config.name}",
       annKind.getOrElse("collnone"), Seq(dataPath.toString))
 
+  /** A `none` collection is searched by text and metadata only. */
+  private def noAnnFamily(metric: String) = new IllegalArgumentException(
+    s"no ANN index family for metric '$metric'")
+
   /** Fixed deterministic IVF geometry for l2 collections (same
     * oracle-friendly codebook family as the testdata IVF paths). */
   private val IvfCells = 16
@@ -427,9 +426,7 @@ final class VectorCollection(
           graft.index.MipsIndex.build(spark, data, "vector", "id",
             IvfCells, p, metaColumns(data), stringIds = true)
         }
-      case m =>
-        throw new IllegalArgumentException(
-          s"no ANN index family for metric '$m' — searchAnn runs exact")
+      case m => throw noAnnFamily(m)
     }
   }
 
@@ -464,13 +461,7 @@ final class VectorCollection(
         graft.index.MipsIndex.search(spark, ensureAnnIndex(), "vector",
           "id", queryVec, if (multiProbe) IvfNprobe * 2 else IvfNprobe, k,
           filter.map(_.column))
-      case _ =>
-        // same (id, score) shape as the indexed paths (Knn directly, not
-        // search(), so the ann event above isn't double-logged as exact)
-        graft.knn.Knn.search(df, col("vector"),
-          org.apache.spark.sql.functions.typedlit(queryVec),
-          config.metric, k, filter.map(_.column), idCol = "id")
-          .select("id", "score")
+      case m => throw noAnnFamily(m)
     }
   }
 
@@ -478,21 +469,19 @@ final class VectorCollection(
     graft.index.IndexStore.path(spark, s"$root/${config.name}", "collbm25",
       Seq(dataPath.toString))
 
-  private def hybridIndexPath: String =
-    graft.index.IndexStore.path(spark, s"$root/${config.name}", "collhyb",
-      Seq(dataPath.toString))
-
-  private def requireText(): Unit =
-    require(df.columns.contains("text"),
-      s"collection '${config.name}' has no 'text' column")
-
   /** Build-if-absent the collection's persistent BM25 index over its own
-    * `text` column (same fingerprint lifecycle as [[ensureAnnIndex]]). */
-  def ensureTextIndex(): String = {
-    requireText()
+    * `text` column (same fingerprint lifecycle as [[ensureAnnIndex]]).
+    * The one keyword index of the collection: [[searchText]] and
+    * [[searchHybrid]] both read it. */
+  def ensureTextIndex(): String = ensureTextIndex(df)
+
+  /** [[ensureTextIndex]] over an already-opened generation `data`. */
+  private def ensureTextIndex(data: DataFrame): String = {
+    require(data.columns.contains("text"),
+      s"collection '${config.name}' has no 'text' column")
     graft.index.IndexStore.ensure(spark, textIndexPath)(p =>
       graft.index.Bm25Index.build(spark,
-        df.select(col("id").as("doc_id"), col("text")), p))
+        data.select(col("id").as("doc_id"), col("text")), p))
   }
 
   /** Keyword top-k over the collection's own BM25 index; the optional
@@ -512,24 +501,17 @@ final class VectorCollection(
     res.withColumnRenamed("doc_id", "id")
   }
 
-  /** Build-if-absent the hybrid layout (materialized vectors table +
-    * BM25 postings) over the collection's own rows. */
-  def ensureHybridIndex(): String = {
-    requireText()
-    graft.index.IndexStore.ensure(spark, hybridIndexPath) { p =>
-      val data = df
-      data.select(col("id").as("doc_id"), col("vector").as("embedding"))
-        .write.mode("overwrite").parquet(s"$p/vectors")
-      graft.index.Bm25Index.build(spark,
-        data.select(col("id").as("doc_id"), col("text")), p)
-    }
-  }
+  /** Everything [[searchHybrid]] needs prebuilt: the text index, as
+    * the hybrid blend reads the collection's one BM25 index and its own
+    * vectors. Returns the text index path. */
+  def ensureHybridIndex(): String = ensureTextIndex()
 
-  /** Weighted vector+keyword blend over the collection's own hybrid
-    * index — the reference's HybridSearchEngine surface
-    * (`hybrid_search.py:360-477`, cosine similarity by definition) with
-    * the index maintained across mutations like [[searchAnn]]'s.
-    * Returns (id, vector_score, keyword_score, score). */
+  /** Weighted vector+keyword blend — the reference's HybridSearchEngine
+    * surface (`hybrid_search.py:360-477`, cosine similarity by
+    * definition): the keyword branch probes the collection's BM25 index
+    * ([[ensureTextIndex]], maintained across mutations like
+    * [[searchAnn]]'s), the vector branch scores the collection's own
+    * vectors exactly. Returns (id, vector_score, keyword_score, score). */
   def searchHybrid(terms: Seq[String], queryVec: Seq[Double], k: Int = 10,
       alpha: Double = 0.6, vectorWeight: Option[Double] = None,
       keywordWeight: Option[Double] = None): DataFrame = {
@@ -540,8 +522,13 @@ final class VectorCollection(
     require(config.metric == "cosine",
       s"hybrid search blends cosine similarity (reference semantics); " +
         s"collection '${config.name}' is '${config.metric}'")
-    graft.hybrid.HybridSearch.searchIndexed(spark, ensureHybridIndex(),
-        terms, queryVec, k, alpha, vectorWeight, keywordWeight)
+    // one open of the generation serves the text check, the index
+    // ensure and the vector branch
+    val data = df
+    graft.hybrid.HybridSearch.searchIndexed(spark,
+        data.select(col("id").as("doc_id"), col("vector").as("embedding")),
+        ensureTextIndex(data), terms, queryVec, k, alpha, vectorWeight,
+        keywordWeight)
       .withColumnRenamed("doc_id", "id")
   }
 
@@ -563,13 +550,7 @@ final class VectorCollection(
       case "ip" =>
         graft.index.MipsIndex.searchBatchDf(spark, ensureAnnIndex(),
           "vector", "id", queries, IvfNprobe, k)
-      case _ =>
-        // same (qid, id, score) shape and order as the indexed paths
-        graft.knn.Knn.searchBatch(df, col("vector"),
-            queries.withColumnRenamed("qid", "query_id"), config.metric, k,
-            idCol = "id")
-          .select(col("query_id").as("qid"), col("id"), col("score"))
-          .orderBy("qid", "score", "id")
+      case m => throw noAnnFamily(m)
     }
   }
 
@@ -601,10 +582,14 @@ final class VectorDb(spark: SparkSession, root: String) {
 
   def createCollection(name: String, dimensions: Int,
       metric: String = "cosine"): VectorCollection = {
-    // validate on CREATE only — an existing collection whose name predates
-    // (or bypasses) this rule must still open via getCollection
+    // validate on CREATE only — an existing collection whose name or
+    // metric predates (or bypasses) these rules must still open via
+    // getCollection
     require(CollectionConfig.NameOk.matches(name),
       s"collection name must match [A-Za-z0-9_-]+: '$name'")
+    require(CollectionConfig.Metrics.contains(metric),
+      s"collection metric must be one of " +
+        s"${CollectionConfig.Metrics.mkString(" | ")}: '$metric'")
     val cfg = CollectionConfig(name, dimensions, metric)
     val cfgPath = new Path(s"$root/$name/config.json")
     val out = fs.create(cfgPath, true)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.bm25.Bm25
 import graft.functions.VectorFunctions
-import graft.index.IndexStore
 import graft.text.TextAnalysis.wordTokensSql
 
 /** Hybrid vector + keyword retrieval with the reference's blend semantics
@@ -117,28 +116,36 @@ object HybridSearch {
     if (queryTerms.isEmpty)
       return vectorOnly(corpus.select("doc_id", "embedding"), queryVec, k)
     val fetch = k * FetchFactor
-    val qv = typedlit(queryVec)
     // both branches scan the corpus; checkpoint (GC-scoped) not persist
     // (CacheManager-held until unpersist) so ad-hoc queries don't leak
     val c = corpus.localCheckpoint()
-    val vecTop = c
-      .withColumn("d", VectorFunctions.cosineDistance(col("embedding"), qv))
+    val kwTop = Bm25.search(spark, c.select("doc_id", "text"), queryTerms, fetch)
+    blend(vectorTop(c, queryVec, fetch), kwTop, k, a)
+  }
+
+  /** The vector branch's candidates: the `fetch` nearest (doc_id, d)
+    * cosine distances of `vecs`, ordered by (d, doc_id). */
+  private def vectorTop(vecs: DataFrame, queryVec: Seq[Double], fetch: Int)
+      : DataFrame =
+    vecs
+      .withColumn("d",
+        VectorFunctions.cosineDistance(col("embedding"), typedlit(queryVec)))
       .select("doc_id", "d")
       .orderBy(col("d"), col("doc_id"))
       .limit(fetch)
-    val kwTop = Bm25.search(spark, c.select("doc_id", "text"), queryTerms, fetch)
-    blend(vecTop, kwTop, k, a)
-  }
 
-  /** Hybrid search against a prebuilt corpus index
-    * (graft.index.Indexes.hybrid): the vector branch scans the
-    * materialized (doc_id, embedding) table, the keyword branch probes the
-    * persistent BM25 postings — nothing is tokenized or joined at query
+  /** Hybrid search against prebuilt state: the vector branch scans the
+    * (doc_id, embedding) relation `vecs` exactly, the keyword branch
+    * probes the persistent BM25 postings at `bm25Path`
+    * (graft.index.Bm25Index) — nothing is tokenized or joined at query
     * time. This is what the reference's own benchmarks time: search
-    * against an already-built index (`hybrid_search.py:77-117`). */
+    * against an already-built index (`hybrid_search.py:77-117`). The
+    * testdata corpus index (graft.index.Indexes.hybrid) holds both
+    * branches; a collection passes its own vectors and its text index. */
   def searchIndexed(
       spark: SparkSession,
-      indexPath: String,
+      vecs: DataFrame,
+      bm25Path: String,
       queryTerms: Seq[String],
       queryVec: Seq[Double],
       k: Int,
@@ -146,18 +153,10 @@ object HybridSearch {
       vectorWeight: Option[Double] = None,
       keywordWeight: Option[Double] = None): DataFrame = {
     val a = resolveAlpha(vectorWeight, keywordWeight, alpha)
-    if (queryTerms.isEmpty)
-      return vectorOnly(IndexStore.table(spark, s"$indexPath/vectors"),
-        queryVec, k)
+    if (queryTerms.isEmpty) return vectorOnly(vecs, queryVec, k)
     val fetch = k * FetchFactor
-    val qv = typedlit(queryVec)
-    val vecTop = IndexStore.table(spark, s"$indexPath/vectors")
-      .withColumn("d", VectorFunctions.cosineDistance(col("embedding"), qv))
-      .select("doc_id", "d")
-      .orderBy(col("d"), col("doc_id"))
-      .limit(fetch)
-    val kwTop = graft.index.Bm25Index.search(spark, indexPath, queryTerms, fetch)
-    blend(vecTop, kwTop, k, a)
+    val kwTop = graft.index.Bm25Index.search(spark, bm25Path, queryTerms, fetch)
+    blend(vectorTop(vecs, queryVec, fetch), kwTop, k, a)
   }
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR 2009) over the same
@@ -169,20 +168,16 @@ object HybridSearch {
     * bounded-window shape as [[blend]]'s normalization). */
   def searchIndexedRrf(
       spark: SparkSession,
-      indexPath: String,
+      vecs: DataFrame,
+      bm25Path: String,
       queryTerms: Seq[String],
       queryVec: Seq[Double],
       k: Int,
       rrfK: Int = 60): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val fetch = k * FetchFactor
-    val qv = typedlit(queryVec)
-    val vecTop = IndexStore.table(spark, s"$indexPath/vectors")
-      .withColumn("d", VectorFunctions.cosineDistance(col("embedding"), qv))
-      .select("doc_id", "d")
-      .orderBy(col("d"), col("doc_id"))
-      .limit(fetch)
-    val kwTop = graft.index.Bm25Index.search(spark, indexPath, queryTerms, fetch)
+    val vecTop = vectorTop(vecs, queryVec, fetch)
+    val kwTop = graft.index.Bm25Index.search(spark, bm25Path, queryTerms, fetch)
     val v = vecTop
       .withColumn("rv", row_number().over(Window.orderBy(col("d"), col("doc_id"))))
       .select("doc_id", "rv")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.core.Tables
@@ -78,9 +79,7 @@ object Bm25Queries {
     ),
     Q(
       "hybrid_search",
-      (s, dir) =>
-        HybridSearch.searchIndexed(s, Indexes.hybrid(s, dir), QueryTerms,
-          VectorFunctions.hashVectorValues(5L, D), K, alpha = 0.6),
+      (s, dir) => hybrid(s, dir, QueryTerms, alpha = 0.6),
       Some(HybridSearch.searchSql(QueryTerms, 5L, D, K, alpha = 0.6)),
       bench = true
     ),
@@ -90,10 +89,8 @@ object Bm25Queries {
     // explicit weight params: α = vw/(vw+kw) (hybrid_search.py:393-396)
     Q(
       "hybrid_search_weighted",
-      (s, dir) =>
-        HybridSearch.searchIndexed(s, Indexes.hybrid(s, dir), QueryTerms,
-          VectorFunctions.hashVectorValues(5L, D), K, alpha = 0.5,
-          vectorWeight = Some(3.0), keywordWeight = Some(1.0)),
+      (s, dir) => hybrid(s, dir, QueryTerms, alpha = 0.5,
+        vectorWeight = Some(3.0), keywordWeight = Some(1.0)),
       Some(HybridSearch.searchSql(QueryTerms, 5L, D, K, alpha = 0.75))
     ),
     // serving-side snippet extraction: for each BM25 hit, the 7-token
@@ -239,27 +236,36 @@ object Bm25Queries {
     // scales don't compare
     Q(
       "hybrid_search_rrf",
-      (s, dir) =>
-        HybridSearch.searchIndexedRrf(s, Indexes.hybrid(s, dir), QueryTerms,
-          VectorFunctions.hashVectorValues(5L, D), K),
+      (s, dir) => {
+        val p = Indexes.hybrid(s, dir)
+        HybridSearch.searchIndexedRrf(s, IndexStore.table(s, s"$p/vectors"),
+          p, QueryTerms, VectorFunctions.hashVectorValues(5L, D), K)
+      },
       Some(HybridSearch.searchRrfSql(QueryTerms, 5L, D, K))
     ),
     // no query text → pure vector fallback with raw similarity scores
     // (hybrid_search.py:397-411)
     Q(
       "hybrid_search_notext",
-      (s, dir) =>
-        HybridSearch.searchIndexed(s, Indexes.hybrid(s, dir), Seq.empty,
-          VectorFunctions.hashVectorValues(5L, D), K, alpha = 0.6),
+      (s, dir) => hybrid(s, dir, Seq.empty, alpha = 0.6),
       Some(HybridSearch.vectorOnlySql(5L, D, K))
     )
   )
 
   private def hybridAlpha(alpha: Double): Q = Q(
     f"hybrid_search_a${(alpha * 10).toInt}%02d",
-    (s, dir) =>
-      HybridSearch.searchIndexed(s, Indexes.hybrid(s, dir), QueryTerms,
-        VectorFunctions.hashVectorValues(5L, D), K, alpha),
+    (s, dir) => hybrid(s, dir, QueryTerms, alpha),
     Some(HybridSearch.searchSql(QueryTerms, 5L, D, K, alpha))
   )
+
+  /** Blended search over the corpus hybrid index (graft.index.Indexes
+    * .hybrid): its own `vectors` table and its BM25 postings. */
+  private def hybrid(s: SparkSession, dir: String, terms: Seq[String],
+      alpha: Double, vectorWeight: Option[Double] = None,
+      keywordWeight: Option[Double] = None): DataFrame = {
+    val p = Indexes.hybrid(s, dir)
+    HybridSearch.searchIndexed(s, IndexStore.table(s, s"$p/vectors"), p,
+      terms, VectorFunctions.hashVectorValues(5L, D), K, alpha,
+      vectorWeight, keywordWeight)
+  }
 }

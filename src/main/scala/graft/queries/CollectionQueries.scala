@@ -10,9 +10,10 @@ import graft.index.IndexStore
 import graft.functions.VectorFunctions
 
 /** Collection-level text and hybrid retrieval: a VectorCollection that
-  * owns documents (id, text, vector, lang) and serves keyword / blended
-  * search from its own persistent BM25 / hybrid indexes, maintained
-  * across mutations like the ANN index. The scratch collection mirrors
+  * owns documents (id, text, vector, lang) and serves keyword search
+  * from its one persistent BM25 index, maintained across mutations like
+  * the ANN index; hybrid search blends that index with the collection's
+  * own vectors. The scratch collection mirrors
   * the documents⋈embeddings corpus and is keyed by the source
   * fingerprint (idempotent across runs, auto-fresh across regens).
   */

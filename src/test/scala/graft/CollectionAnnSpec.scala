@@ -72,6 +72,7 @@ class CollectionAnnSpec extends AnyFunSuite {
 
   test("searchText/searchHybrid serve from the collection's indexes and follow inserts") {
     import graft.bm25.Bm25
+    import graft.hybrid.HybridSearch
     val root = Files.createTempDirectory("graft_colltext").toString
     val coll = new VectorDb(spark, root).createCollection("t", dimensions = D)
     def docRows(rows: (String, Int, String)*) =
@@ -81,7 +82,8 @@ class CollectionAnnSpec extends AnyFunSuite {
     coll.insertBatch(docRows(
       ("a", 1, "spark joins filter the corpus quickly"),
       ("b", 2, "graph traversal with pattern filters"),
-      ("c", 3, "vector search and keyword search blend")))
+      ("c", 3, "vector search and keyword search blend"),
+      ("e", 6, "a filter before the search keeps search exact")))
     // keyword top-k equals ad-hoc BM25 over the same rows
     val terms = Seq("search", "filter")
     val a = coll.searchText(terms, 3).collect()
@@ -90,17 +92,41 @@ class CollectionAnnSpec extends AnyFunSuite {
         coll.df.select(col("id").as("doc_id"), col("text")), terms, 3)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(a == b && a.nonEmpty)
-    // hybrid returns the blended shape over the collection's own index
-    val h = coll.searchHybrid(terms,
-      VectorFunctions.hashVectorValues(2L, D), 3)
-    assert(h.columns.toSeq ==
-      Seq("id", "vector_score", "keyword_score", "score"))
-    assert(h.count() == 3)
+    // hybrid equals the ad-hoc reference blend over the collection's own
+    // rows, with and without terms, after every kind of mutation
+    val qv = VectorFunctions.hashVectorValues(2L, D)
+    def blended(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      .toSeq
+    def checkHybrid(step: String): Unit =
+      Seq(terms, Seq.empty[String]).foreach { t =>
+        val h = coll.searchHybrid(t, qv, 3)
+        assert(h.columns.toSeq ==
+          Seq("id", "vector_score", "keyword_score", "score"))
+        val corpus = coll.df.select(col("id").as("doc_id"), col("text"),
+          col("vector").as("embedding"))
+        val want = blended(HybridSearch.search(spark, corpus, t, qv, 3, 0.6))
+        val got = blended(h)
+        assert(got == want && got.size == 3, s"after $step, terms $t")
+      }
+    checkHybrid("first insert")
     // an insert is visible to the next keyword search with no manual
     // invalidation (text index advanced or rebuilt via the fingerprint)
     coll.insertBatch(docRows(("d", 4, "zanzibar zanzibar zanzibar")))
     val hit = coll.searchText(Seq("zanzibar"), 1).collect()(0)
     assert(hit.getString(0) == "d")
+    checkHybrid("insertBatch")
+    coll.upsert(docRows(("a", 5, "search filter search"),
+      ("f", 7, "keyword filter")))
+    checkHybrid("upsert")
+    assert(coll.deleteIds(Seq("c")) == 1)
+    checkHybrid("deleteIds")
+    // one ANN and one BM25 index: the hybrid blend keeps no copy
+    coll.ensureAnnIndex(); coll.ensureTextIndex(); coll.ensureHybridIndex()
+    val kinds = new java.io.File(
+        s"${IndexStore.root}/${IndexStore.slug(s"$root/t")}")
+      .list().toSeq.map(_.takeWhile(_ != '_')).sorted
+    assert(kinds == Seq("collbm25", "colllsh"), kinds)
   }
 
   test("reading an empty collection reports the contract, not a path error") {

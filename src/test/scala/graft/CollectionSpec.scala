@@ -159,6 +159,34 @@ class CollectionSpec extends AnyFunSuite {
     }
   }
 
+  test("an unknown metric is rejected at create, naming the allowed four") {
+    val root = Files.createTempDirectory("graft_vdb_metric").toString
+    val db = new VectorDb(spark, root)
+    val ex = intercept[IllegalArgumentException] {
+      db.createCollection("c", dimensions = 8, metric = "cosin")
+    }
+    Seq("'cosin'", "cosine", "l2", "ip", "none").foreach(m =>
+      assert(ex.getMessage.contains(m), ex.getMessage))
+    assert(db.getCollection("c").isEmpty)
+    // create-only: a stored config with any metric still opens
+    val cfg = java.nio.file.Paths.get(root, "old", "config.json")
+    Files.createDirectories(cfg.getParent)
+    Files.writeString(cfg,
+      """{"name": "old", "dimensions": 8, "metric": "euclid"}""")
+    assert(db.getCollection("old").map(_.config.metric) == Some("euclid"))
+  }
+
+  test("searchAnn on a 'none' collection fails naming the metric") {
+    val root = Files.createTempDirectory("graft_vdb_none").toString
+    val coll = new VectorDb(spark, root)
+      .createCollection("n", dimensions = 8, metric = "none")
+    coll.insertBatch(rows(("a", 1), ("b", 2)))
+    val ex = intercept[IllegalArgumentException] {
+      coll.searchAnn(VectorFunctions.hashVectorValues(1L, 8), 1).collect()
+    }
+    assert(ex.getMessage.contains("'none'"), ex.getMessage)
+  }
+
   test("compact merges mutation-era files and preserves content") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_vdb_compact").toString

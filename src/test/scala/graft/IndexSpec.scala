@@ -226,8 +226,10 @@ class IndexSpec extends AnyFunSuite {
     val corpus = Tables.documents(spark, sf)
       .join(Tables.embeddings(spark, sf), col("doc_id") === col("vec_id"))
       .select("doc_id", "text", "embedding")
-    val a = HybridSearch.searchIndexed(spark, Indexes.hybrid(spark, sf),
-      terms, qv, 10, 0.6).collect().toSeq
+    val p = Indexes.hybrid(spark, sf)
+    val a = HybridSearch.searchIndexed(spark,
+      IndexStore.table(spark, s"$p/vectors"), p, terms, qv, 10, 0.6)
+      .collect().toSeq
     val b = HybridSearch.search(spark, corpus, terms, qv, 10, 0.6)
       .collect().toSeq
     assert(a == b && a.nonEmpty)

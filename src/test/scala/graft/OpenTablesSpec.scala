@@ -69,7 +69,6 @@ class OpenTablesSpec extends AnyFunSuite {
     check("compact")
     IndexStore.invalidate(spark, coll.ensureAnnIndex())
     IndexStore.invalidate(spark, coll.ensureTextIndex())
-    IndexStore.invalidate(spark, coll.ensureHybridIndex())
     check("IndexStore.invalidate")
   }
 

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * python3+duckdb toolchain is absent (it is present on the driver box
   * and this one; oracle_check imports duckdb at module scope). Also
   * guards the tree's one session factory: code under `src/main/scala`
-  * builds sessions only through [[LocalSpark]].
+  * builds sessions only through [[LocalSpark]], and compiles and
+  * self-tests the benchmark (perfbench/), which sbt does not compile.
   */
 class ToolsSpec extends AnyFunSuite {
   test("oracle_check main-tier selection rules (tools/test_oracle_tier.py)") {
@@ -25,6 +26,22 @@ class ToolsSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.UTF_8)
     assert(p.waitFor() == 0, s"tier tests failed:\n$out")
     assert(out.contains("== all tier tests passed =="), out)
+  }
+
+  test("the benchmark compiles against the engine and passes its self-test") {
+    // perfbench/build.py compiles src/main/scala with perfbench/src, so an
+    // engine API change that breaks the benchmark fails here
+    val jars = new ProcessBuilder("python3", "-c",
+        "import sys; sys.path.insert(0, 'perfbench'); import build; " +
+          "build.spark_jars()")
+      .redirectErrorStream(true).start().waitFor() == 0
+    assume(jars, "perfbench/build.py finds no Spark jars — skipped")
+    val p = new ProcessBuilder("python3", "perfbench/run.py", "--selftest")
+      .redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8)
+    assert(p.waitFor() == 0, s"perfbench self-test failed:\n$out")
+    assert(out.contains("self-test passed"), out)
   }
 
   test("SparkSession.builder() is called only inside graft.LocalSpark") {
