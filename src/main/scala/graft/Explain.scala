@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool over named catalog queries, on the [[LocalSpark]] session.
   *
@@ -17,7 +18,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * LAST warm rep launched with its wall, the gap since the previous job,
   * tasks and executor run/CPU/GC time — so a rep decomposes into which
   * eager materializations and actions cost what. Jobs are attributed to a
-  * rep by a job group set around it.
+  * rep by a job group set around it. Each warm rep also prints how many
+  * SQL executions its jobs ran under (each job's `spark.sql.execution.id`)
+  * and how many of those were planned adaptively (an `AdaptiveSparkPlan`
+  * root), so a graph loop that falls back to AQE is a visible count.
   */
 object Explain {
   private val Usage = "usage: Explain <sfDir> <names_csv> plan [<outDir> <suffix>]" +
@@ -65,20 +69,28 @@ object Explain {
     }
   }
 
-  private final case class Job(id: Int, group: String, t0: Long,
-      var t1: Long = 0L, var tasks: Int = 0, var runMs: Long = 0L,
+  private final case class Job(id: Int, group: String, sqlId: Option[Long],
+      t0: Long, var t1: Long = 0L, var tasks: Int = 0, var runMs: Long = 0L,
       var gcMs: Long = 0L, var cpuMs: Long = 0L)
 
   private def profile(spark: SparkSession, sfDir: String, queries: Seq[Q],
       reps: Int): Unit = {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    // SQL execution id -> whether its plan root is AdaptiveSparkPlan
+    val adaptive = new java.util.concurrent.ConcurrentHashMap[Long, Boolean]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val group = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        def prop(k: String) =
+          Option(js.properties).flatMap(p => Option(p.getProperty(k)))
         js.stageIds.foreach(sid => stageJob.put(sid, js.jobId))
-        jobs.put(js.jobId, Job(js.jobId, group, js.time))
+        jobs.put(js.jobId, Job(js.jobId, prop("spark.jobGroup.id").getOrElse(""),
+          prop("spark.sql.execution.id").flatMap(_.toLongOption), js.time))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          adaptive.put(s.executionId, s.sparkPlanInfo.nodeName == "AdaptiveSparkPlan")
+        case _ =>
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         Option(jobs.get(je.jobId)).foreach(_.t1 = je.time)
@@ -94,6 +106,7 @@ object Explain {
       }
     })
 
+    import scala.jdk.CollectionConverters._
     for (q <- queries) {
       def rep(tag: String): Unit = {
         spark.sparkContext.setJobGroup(s"profile:${q.name}:$tag", s"profile:$tag")
@@ -102,14 +115,19 @@ object Explain {
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.clearJobGroup()
         System.gc()
-        println(f"[profile] ${q.name} $tag: $dt%.3f s ($n rows)")
+        val sql = if (!tag.startsWith("warm")) "" else {
+          org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
+          val ids = jobs.values.asScala
+            .filter(_.group == s"profile:${q.name}:$tag").flatMap(_.sqlId).toSet
+          s"  sql ${ids.size} (adaptive ${ids.count(id => adaptive.getOrDefault(id, false))})"
+        }
+        println(f"[profile] ${q.name} $tag: $dt%.3f s ($n rows)$sql")
       }
       rep("cold"); rep("settle")
       for (r <- 1 to reps) rep(s"warm$r")
       // the listener bus is async: drain it, or jobs whose onJobEnd has
       // not been delivered yet drop out of the breakdown
       org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
-      import scala.jdk.CollectionConverters._
       val last = jobs.values.asScala.toSeq
         .filter(j => j.group == s"profile:${q.name}:warm$reps" && j.t1 > 0)
         .sortBy(_.t0)

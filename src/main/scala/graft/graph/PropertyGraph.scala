@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge.{nonAdaptive, rebind}
 import graft.core.Tables
 
 /** Property graph over two DataFrames — the reference's GraphDB
@@ -81,9 +82,9 @@ final case class Graph(nodes: DataFrame, edges: DataFrame) {
     // hash-partitioned on dst and persisted WITH that partitioning
     // (InMemoryRelation preserves it — canChangeCachedPlanOutputPartitioning
     // is off by default): every rank hop ends in groupBy(dst), so the
-    // hop's aggregation needs NO exchange — one stage, no AQE boundary,
-    // per hop (guide §2.4: operations keyed the same way share one
-    // exchange, established here once at build time).
+    // hop's aggregation needs NO exchange — one stage per hop (guide
+    // §2.4: operations keyed the same way share one exchange,
+    // established here once at build time).
     e.join(maybeBc(outdeg), "src").select(col("src"), col("dst"), col("od"))
       .repartition(loopParts, col("dst")).persist()
   }
@@ -204,6 +205,19 @@ object TpchGraph {
       .stripMargin
 }
 
+/** Graph loops: traversal, BFS paths, pagerank and personalized pagerank.
+  *
+  * Every loop picks broadcast or shuffle for each hop from a MEASURED
+  * size, so adaptive execution has nothing left to decide there and only
+  * adds a stage wait, a re-optimization and a plan-string render per
+  * broadcast. Each loop therefore builds all of its frames — its inputs
+  * rebound, its per-hop checkpoints and counts, and its result — in
+  * `nonAdaptive(caller's session)`, a clone with AQE off that carries the
+  * caller's current conf. The caller's own action on the result is
+  * planned by that clone too; the caller's session is never changed. The
+  * graph's persisted relations are rebound, not re-derived: the clone
+  * shares the caller's cache.
+  */
 object GraphOps {
 
   /** Broadcast-hint ceiling for measured frontier/visited sizes: sets
@@ -234,8 +248,11 @@ object GraphOps {
     */
   def traverse(g: Graph, start: String, maxDepth: Int,
       edgeType: Option[String] = None): DataFrame = {
-    val e = edgeType.map(t => g.edges.filter(col("type") === t)).getOrElse(g.edges)
-    var frontier = g.nodes.sparkSession.createDataFrame(
+    require(maxDepth >= 1, s"traverse needs maxDepth >= 1, got $maxDepth")
+    val spark = nonAdaptive(g.nodes.sparkSession)
+    val edges = rebind(spark, g.edges)
+    val e = edgeType.map(t => edges.filter(col("type") === t)).getOrElse(edges)
+    var frontier = spark.createDataFrame(
       java.util.Arrays.asList(org.apache.spark.sql.Row(start, start, Seq(start))),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node", org.apache.spark.sql.types.StringType),
@@ -285,8 +302,10 @@ object GraphOps {
     */
   def bfsPaths(g: Graph, start: String, maxDepth: Int,
       targetLabel: Option[String] = None): DataFrame = {
-    val spark = g.nodes.sparkSession
+    require(maxDepth >= 1, s"bfsPaths needs maxDepth >= 1, got $maxDepth")
+    val spark = nonAdaptive(g.nodes.sparkSession)
     import spark.implicits._
+    val edges = rebind(spark, g.edges)
     var frontier = Seq((start, start)).toDF("node", "path")
     var visited = Seq(start).toDF("vnode")
     var acc: Option[DataFrame] = None
@@ -303,7 +322,7 @@ object GraphOps {
         broadcast(visited) else visited
       val last = d == maxDepth
       val next0 = f
-        .join(g.edges, col("node") === col("src"))
+        .join(edges, col("node") === col("src"))
         .select(col("dst").as("node"),
           concat(col("path"), lit("->"), col("dst")).as("path"))
         .join(v, col("node") === col("vnode"), "left_anti")
@@ -330,7 +349,7 @@ object GraphOps {
     val all = acc.get
     targetLabel match {
       case Some(l) =>
-        all.join(g.nodes.filter(col("label") === l).select(col("id")),
+        all.join(rebind(spark, g.nodes).filter(col("label") === l).select(col("id")),
           col("target") === col("id")).drop("id")
       case None => all
     }
@@ -349,6 +368,8 @@ object GraphOps {
     * (id, r6 BIGINT micro-units). */
   def pagerank(g: Graph, iters: Int): DataFrame = {
     require(iters >= 1, s"pagerank needs at least one iteration, got $iters")
+    val spark = nonAdaptive(g.nodes.sparkSession)
+    val dict = rebind(spark, g.dict)
     // The edge list is the big side: materialized ONCE with its per-src
     // out-degree attached (edgesOd below), then each iteration joins it
     // against the O(nodes) rank table. When the MEASURED node count is
@@ -365,7 +386,7 @@ object GraphOps {
     // PPR — the loop below is ONE broadcast-gated join + one
     // map-side-combined groupBy per hop, and the first hop (uniform
     // base rank) needs no join at all.
-    val edgesOd = g.edgesOd
+    val edgesOd = rebind(spark, g.edgesOd)
     // Sparse rank representation: `r` holds only nodes that RECEIVE
     // rank (contrib keys); every absent node implicitly sits at the
     // base value — 1e6 micro-units before the first iteration, the
@@ -392,7 +413,8 @@ object GraphOps {
       // broadcast build, and the former every-2nd-hop localCheckpoints
       // were pure duplicate materializations (measured: 22 → 9 jobs,
       // warm 4.99 → 2.9 s at sf0.1/32 cores). Past the hint ceiling
-      // the chain is one 5-join shuffle plan — ordinary AQE territory.
+      // the chain is one plan of shuffle joins, planned statically like
+      // every hop here.
       val next = contrib
         .groupBy("dst").agg(sum("c").as("sc"))
         .select(col("dst").as("id"),
@@ -400,7 +422,7 @@ object GraphOps {
       // Lineage cap for the NON-hinted regime (r18, advisor): past the
       // broadcast ceiling nothing materializes per hop, so a
       // caller-chosen large `iters` would chain 2·iters shuffles into
-      // one plan whose analysis/AQE cost grows superlinearly. A
+      // one plan whose analysis and planning cost grows superlinearly. A
       // checkpoint every 5th hop bounds the chain; in the hinted
       // regime (every bench graph) each hop already materializes
       // inside its broadcast build and this never fires.
@@ -413,11 +435,11 @@ object GraphOps {
     // reconstitute the dense per-node view exactly as before
     val decoded = r.get
       .join(if (g.dictCount <= FrontierHintRows)
-          broadcast(g.dict.select(col("nid"), col("id").as("sid")))
-        else g.dict.select(col("nid"), col("id").as("sid")),
+          broadcast(dict.select(col("nid"), col("id").as("sid")))
+        else dict.select(col("nid"), col("id").as("sid")),
         col("id") === col("nid"))
       .select(col("sid").as("id"), col("r6"))
-    g.nodes.select(col("id")).join(maybeBc(decoded), Seq("id"), "left")
+    rebind(spark, g.nodes).select(col("id")).join(maybeBc(decoded), Seq("id"), "left")
       .select(col("id"), coalesce(col("r6"), lit(150000L)).as("r6"))
   }
 
@@ -431,18 +453,20 @@ object GraphOps {
     * per-iteration cost is bounded by the reached set, not the graph. */
   def personalizedPagerank(g: Graph, seed: String, iters: Int): DataFrame = {
     require(iters >= 1, s"personalizedPagerank needs >= 1 iteration")
-    val spark = g.nodes.sparkSession
+    val spark = nonAdaptive(g.nodes.sparkSession)
     import spark.implicits._
+    val dict = rebind(spark, g.dict)
+    val edgesOd = rebind(spark, g.edgesOd)
     // the builder persists g.nodes — a localCheckpoint on top was a
     // duplicate materialization job per rep (r17)
-    val nodes = g.nodes.select(col("id"))
+    val nodes = rebind(spark, g.nodes).select(col("id"))
     // the loop runs on the dictionary's LONG nids (Graph.dict — guide
     // §2.3 narrower keys, shared with pagerank); the seed's nid is a
     // 1-row bounded lookup against the persisted dictionary. A seed
     // absent from the graph maps to the impossible nid −1: the teleport
     // row then matches no edge and no dict entry, reproducing the
     // string-keyed behavior (all-zero ranks) exactly.
-    val seedNid = g.dict.filter(col("id") === seed).select("nid")
+    val seedNid = dict.filter(col("id") === seed).select("nid")
       .limit(2).collect().headOption.map(_.getLong(0)).getOrElse(-1L)
     // teleport rides INSIDE the hop aggregation as a second summed
     // column (r18): contributions carry (c, t=0), the teleport row
@@ -478,7 +502,7 @@ object GraphOps {
       // Damping applies to the per-node SUM (0.85·Σ r/outdeg), same
       // recurrence as pagerank — per-edge flooring would zero out
       // low-mass frontier contributions.
-      val next = g.edgesOd.join(maybeBc(r), col("src") === col("id"))
+      val next = edgesOd.join(maybeBc(r), col("src") === col("id"))
         .select(col("dst").as("id"), expr("r6 div od").as("c"),
           lit(0L).as("t"))
         .unionByName(teleport)
@@ -499,8 +523,8 @@ object GraphOps {
     // drop in the nodes join), then the dense per-node view as before
     val decoded = r
       .join(if (g.dictCount <= FrontierHintRows)
-          broadcast(g.dict.select(col("nid"), col("id").as("sid")))
-        else g.dict.select(col("nid"), col("id").as("sid")),
+          broadcast(dict.select(col("nid"), col("id").as("sid")))
+        else dict.select(col("nid"), col("id").as("sid")),
         col("id") === col("nid"))
       .select(col("sid").as("id"), col("r6"))
     nodes.join(decoded, Seq("id"), "left")

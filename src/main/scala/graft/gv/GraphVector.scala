@@ -2,8 +2,10 @@ package graft.gv
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge.{nonAdaptive, rebind}
 import graft.functions.VectorFunctions
 import graft.graph.Graph
+import graft.graph.GraphOps.FrontierHintRows
 
 /** Graph + vector hybrid retrieval — the reference's
   * `HybridGraphVectorDB` (jcolano/fastpyvectordb
@@ -28,7 +30,13 @@ import graft.graph.Graph
   * Scale: seeds are one TakeOrderedAndProject; each hop is one join of a
   * frontier (≤ reachable set) against the edges table, anti-joined with
   * the visited set — the standard iterative-BFS-on-DataFrames shape with
-  * bounded depth.
+  * bounded depth, every join broadcast-gated on a measured row count.
+  * The rerank is one aggregation plus one outer join against the
+  * embeddings, which adaptive execution cannot re-plan either (a left
+  * outer join broadcasts only its right side). So both operators plan
+  * without AQE, like the graph loops (see `GraphOps`): each call builds
+  * its frames, inputs rebound, in `nonAdaptive(caller's session)` and
+  * returns a frame of that non-adaptive session.
   */
 object GraphVector {
 
@@ -45,8 +53,9 @@ object GraphVector {
       vw: Double,
       gw: Double,
       edgeType: Option[String] = None): DataFrame = {
+    val spark = nonAdaptive(g.nodes.sparkSession)
     val qv = typedlit(queryVec)
-    val seeds = embNodes
+    val seeds = rebind(spark, embNodes)
       .withColumn("sim", lit(1.0) - VectorFunctions.cosineDistance(col("embedding"), qv))
       .select("id", "sim")
       .orderBy(desc("sim"), col("id"))
@@ -54,7 +63,8 @@ object GraphVector {
       .localCheckpoint() // seeds are reused 2·hops times — cut lineage
     val maxSeed = seeds.agg(max("sim").as("max_sim"))
 
-    val e0 = edgeType.map(t => g.edges.filter(col("type") === t)).getOrElse(g.edges)
+    val edges = rebind(spark, g.edges)
+    val e0 = edgeType.map(t => edges.filter(col("type") === t)).getOrElse(edges)
     val und = e0.select(col("src").as("a"), col("dst").as("b"))
       .union(e0.select(col("dst").as("a"), col("src").as("b")))
 
@@ -70,9 +80,9 @@ object GraphVector {
     var frontierRows = 2L * k
     var visitedRows = 2L * k
     for (hop <- 1 to expandHops) {
-      val f = if (frontierRows <= graft.graph.GraphOps.FrontierHintRows)
+      val f = if (frontierRows <= FrontierHintRows)
         broadcast(frontier) else frontier
-      val v = if (visitedRows <= graft.graph.GraphOps.FrontierHintRows)
+      val v = if (visitedRows <= FrontierHintRows)
         broadcast(visited) else visited
       val last = hop == expandHops
       val next0 = f
@@ -148,20 +158,16 @@ object GraphVector {
       endEmbeddings: DataFrame, // (id, embedding) — nodes that have vectors
       queryVec: Seq[Double],
       k: Int): DataFrame = {
+    val spark = nonAdaptive(traversePaths.sparkSession)
     val qv = typedlit(queryVec)
-    // materialize the traversal once: the canonical-path groupBy and the
-    // depth-recovery join both consume it, and its lineage is maxDepth
-    // chained joins — re-executing that per consumer tripled the wall
-    // (2.8 s warm at sf0.1; the path set is one start node's bounded
-    // ≤ maxDepth-hop neighborhood, safe to pin at any corpus size)
-    val tp = traversePaths.localCheckpoint()
-    val canonical = tp
-      .groupBy("end_id").agg(min("path").as("path"))
-    val withDepth = canonical
-      .join(tp, Seq("end_id", "path")) // recover the path's depth
-      .select("end_id", "path", "depth")
-    withDepth
-      .join(endEmbeddings, col("end_id") === col("id"), "left_outer")
+    // one aggregation keeps each end's least path with that path's own
+    // depth (struct order compares path first): the traversal has a
+    // single consumer, so it runs once with no checkpoint, and no join
+    // back to it is needed to recover the depth
+    rebind(spark, traversePaths)
+      .groupBy("end_id").agg(min(struct(col("path"), col("depth"))).as("m"))
+      .select(col("end_id"), col("m.path").as("path"), col("m.depth").as("depth"))
+      .join(rebind(spark, endEmbeddings), col("end_id") === col("id"), "left_outer")
       .withColumn("score",
         round(coalesce(
           VectorFunctions.vecDot(col("embedding"), qv) /

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
 
 /** Spark 4 removed the public `new Column(expr)` constructor; the classic
   * bridge lives in `private[sql]` ExpressionUtils. This shim (compiled into
@@ -15,12 +16,56 @@ object bridge {
 
   /** Stable per-session identity (`sessionUUID` is `private[sql]`) —
     * used to key session-scoped registries like graft's IndexedTables. */
-  def sessionUuid(s: org.apache.spark.sql.SparkSession): String =
-    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+  def sessionUuid(s: SparkSession): String =
+    s.asInstanceOf[classic.SparkSession].sessionUUID
 
   /** Block until every posted event reached the listeners
     * (`listenerBus` is `private[spark]`): a listener read right after an
     * action otherwise misses events still in the async queue. */
-  def drainListenerBus(s: org.apache.spark.sql.SparkSession): Unit =
+  def drainListenerBus(s: SparkSession): Unit =
     s.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A session that plans without adaptive execution: `s` itself when
+    * AQE is already off, else a clone of `s` (`cloneSession` is
+    * `private[sql]`) with it off. The clone shares `s`'s SparkContext,
+    * cache and external catalog and never changes `s`. It is kept per caller
+    * session and replaced as soon as the caller's conf differs from the
+    * conf it was cloned from, so its queries always run under the
+    * caller's current settings. Kept, because a fresh session pays its
+    * lazy set-up on its first queries: a depth-2 traversal took about
+    * twice as long in a fresh clone as in a kept one. Temp views and
+    * functions registered on `s` after the clone was made are not seen
+    * by it; callers pass frames, which `rebind` carries over. A scoped
+    * `SQLConf.withExistingConf` would not do: the adaptive-plan rule
+    * reads the conf of the session that plans the query, not the
+    * thread's active conf. */
+  def nonAdaptive(s: SparkSession): SparkSession = {
+    val c = s.asInstanceOf[classic.SparkSession]
+    if (!c.sessionState.conf.adaptiveExecutionEnabled) c
+    else {
+      val settings = c.sessionState.conf.getAllConfs
+      val kept = nonAdaptiveClones.get(c.sessionUUID)
+      if (kept != null && kept._1 == settings) kept._2
+      else {
+        nonAdaptiveClones.values.removeIf(_._2.sparkContext.isStopped)
+        val clone = c.cloneSession()
+        clone.sessionState.conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+        nonAdaptiveClones.put(c.sessionUUID, (settings, clone))
+        clone
+      }
+    }
+  }
+
+  /** Caller session id -> (the caller's conf it was cloned from, clone). */
+  private val nonAdaptiveClones = new java.util.concurrent.ConcurrentHashMap[
+    String, (Map[String, String], classic.SparkSession)]()
+
+  /** `df`'s analyzed plan as a frame of session `s`, so every action on
+    * it (and on whatever is built from it) is planned by `s`. A persisted
+    * `df` stays a cache hit: the cache is shared by all sessions of one
+    * SparkContext. */
+  def rebind(s: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq s) df
+    else classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed)
 }

@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Results must be identical under different shuffle layouts — the
   * invariant that makes the engine's answers stable across cluster sizes,
   * retries, and AQE decisions (every score is rounded and every LIMIT
-  * follows a total order).
+  * follows a total order). The graph probes plan in a per-call
+  * non-adaptive clone of the session, so they also check that the clone
+  * takes the caller's current partition count.
   */
 class DeterminismSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -14,15 +16,18 @@ class DeterminismSpec extends AnyFunSuite {
   private val probes = Seq(
     "knn_batch", "dedup_minhash_lsh", "hybrid_search", "bm25_search",
     "graph_shortest_paths", "events_sessions", "ann_lsh_batch",
-    "ann_ivf_partitioned", "dedup_components", "sq_index_search")
+    "ann_ivf_partitioned", "dedup_components", "sq_index_search",
+    "graph_pagerank", "graph_ppr", "semantic_graph_search", "graph_rerank")
 
   test("representative queries are invariant to shuffle partition count") {
     val key = "spark.sql.shuffle.partitions"
     val original = spark.conf.get(key)
     def runAll(): Map[String, Seq[String]] =
       probes.map { name =>
-        name -> Catalog.byName(name).run(spark, sf)
-          .collect().map(_.toString).toSeq
+        val df = Catalog.byName(name).run(spark, sf)
+        assert(df.sparkSession.conf.get(key) == spark.conf.get(key),
+          s"$name planned with another partition count")
+        name -> df.collect().map(_.toString).toSeq
       }.toMap
     try {
       spark.conf.set(key, "5")

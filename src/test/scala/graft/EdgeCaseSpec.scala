@@ -166,4 +166,19 @@ class EdgeCaseSpec extends AnyFunSuite {
       graft.graph.GraphOps.pagerank(g, 0)
     }
   }
+
+  test("traversals reject a depth below 1 naming the argument") {
+    val g = graft.graph.Graph(
+      Seq(("a", "N", "a", 0.0, ""), ("b", "N", "b", 0.0, ""))
+        .toDF("id", "label", "name", "num", "seg"),
+      Seq(("a", "b", "E")).toDF("src", "dst", "type"))
+    val t = intercept[IllegalArgumentException] {
+      graft.graph.GraphOps.traverse(g, "a", 0)
+    }
+    assert(t.getMessage.contains("maxDepth >= 1, got 0"), t.getMessage)
+    val b = intercept[IllegalArgumentException] {
+      graft.graph.GraphOps.bfsPaths(g, "a", 0)
+    }
+    assert(b.getMessage.contains("maxDepth >= 1, got 0"), b.getMessage)
+  }
 }

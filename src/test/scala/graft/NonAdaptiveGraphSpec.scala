@@ -1,0 +1,138 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.bridge
+import org.scalatest.funsuite.AnyFunSuite
+import graft.graph.{Graph, GraphOps}
+import graft.gv.GraphVector
+
+/** The graph operators (traverse, bfsPaths, pagerank, personalized
+  * pagerank, semantic graph search, graph rerank) plan every query
+  * without adaptive execution, the caller's action on their result
+  * included, while the caller's own session keeps AQE and every setting
+  * it had. Warm job counts per call are pinned so that a loop falling
+  * back to per-stage adaptive jobs fails here on any box.
+  */
+class NonAdaptiveGraphSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  private val Aqe = "spark.sql.adaptive.enabled"
+  private val Parts = "spark.sql.shuffle.partitions"
+
+  private val rnd = new scala.util.Random(11)
+  private val ids = (0 until 30).map(i => s"v$i")
+  private val edgeList = (0 until 90).map { _ =>
+    (ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size)))
+  }.distinct.filter { case (a, b) => a != b }
+
+  /** Persisted and counted like a built graph (`TpchGraph.build`). */
+  private lazy val g = {
+    val graph = Graph(
+      ids.map(i => (i, if (i.last.isDigit && i.last.asDigit % 3 == 0) "T" else "V",
+        i, 0.0, "s")).toDF("id", "label", "name", "num", "seg").persist(),
+      edgeList.map { case (a, b) => (a, b, "E") }.toDF("src", "dst", "type")
+        .persist())
+    graph.nodeCount; graph.edgeCount; graph.dictCount; graph.edgesOd.count()
+    graph
+  }
+  private lazy val emb = ids.zipWithIndex.filter(_._2 % 2 == 0).map { case (i, k) =>
+    (i, Seq(math.sin(k), math.cos(k), k % 5 - 2.0, 1.0))
+  }.toDF("id", "embedding").persist()
+  private val q = Seq(0.3, -0.2, 1.0, 0.5)
+
+  /** Each operator's call; graph rerank's traversal input is built
+    * outside its call, as a pipeline hands it over. */
+  private def calls: Seq[(String, () => DataFrame)] = Seq(
+    "traverse" -> (() => GraphOps.traverse(g, "v0", 3)),
+    "bfsPaths" -> (() => GraphOps.bfsPaths(g, "v0", 3, Some("T"))),
+    "pagerank" -> (() => GraphOps.pagerank(g, 4)),
+    "personalizedPagerank" -> (() => GraphOps.personalizedPagerank(g, "v1", 3)),
+    "semanticGraphSearch" ->
+      (() => GraphVector.semanticGraphSearch(g, emb, q, 3, 2, 0.7, 0.3)),
+    "graphRerank" -> {
+      val paths = GraphOps.traverse(g, "v2", 2)
+      () => GraphVector.graphRerank(paths, emb, q, 5)
+    })
+
+  /** Jobs (by job group) and SQL executions (with their plan root)
+    * started while it is registered. */
+  private final class Log extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val roots = new ConcurrentLinkedQueue[String]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.add(Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => roots.add(s.sparkPlanInfo.nodeName)
+      case _ =>
+    }
+  }
+
+  /** Runs each call plus a collect of its result under a job group. */
+  private def logged(run: Seq[(String, () => DataFrame)]): Log = {
+    val log = new Log
+    spark.sparkContext.addSparkListener(log)
+    try {
+      run.foreach { case (name, call) =>
+        spark.sparkContext.setJobGroup(s"na:$name", name)
+        try call().collect() finally spark.sparkContext.clearJobGroup()
+      }
+      bridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(log)
+    log
+  }
+
+  test("graph operators plan without AQE and leave the caller's session adaptive") {
+    assert(spark.conf.get(Aqe) == "true")
+    calls.foreach { case (name, call) =>
+      call().collect() // cold: the test graph's caches fill
+      val log = logged(Seq(name -> call))
+      val roots = log.roots.asScala.toSeq
+      assert(roots.nonEmpty, s"$name ran no SQL execution")
+      assert(!roots.contains("AdaptiveSparkPlan"),
+        s"$name planned adaptively: ${roots.mkString(", ")}")
+    }
+    assert(spark.conf.get(Aqe) == "true")
+    val join = spark.range(10).toDF("a").join(spark.range(10).toDF("b"),
+      $"a" === $"b")
+    assert(join.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+  }
+
+  test("each result is bound to a session with the caller's current conf") {
+    val original = spark.conf.get(Parts)
+    try {
+      val before = calls.map(_._2().sparkSession)
+      assert(before.distinct.size == 1, "one conf, one non-adaptive session")
+      spark.conf.set(Parts, "7")
+      calls.foreach { case (name, call) =>
+        val df = call()
+        assert(!(df.sparkSession eq spark), s"$name returned a caller-bound frame")
+        assert(!(df.sparkSession eq before.head), s"$name kept a stale conf")
+        assert(df.sparkSession.conf.get(Parts) == "7", name)
+        assert(df.sparkSession.conf.get(Aqe) == "false", name)
+      }
+      assert(spark.conf.get(Aqe) == "true")
+    } finally spark.conf.set(Parts, original)
+  }
+
+  test("warm jobs per call are pinned") {
+    calls.foreach(_._2().collect()) // cold
+    val byCall = logged(calls).jobs.asScala.toSeq.groupBy(identity)
+    val counts = calls.map { case (name, _) =>
+      name -> byCall.get(s"na:$name").fold(0)(_.size)
+    }.toMap
+    // with AQE on these were 10, 17, 6, 21, 13 and 7: adaptive execution
+    // runs every shuffle and broadcast stage as a job of its own
+    val pinned = Map("traverse" -> 8, "bfsPaths" -> 12, "pagerank" -> 6,
+      "personalizedPagerank" -> 13, "semanticGraphSearch" -> 10,
+      "graphRerank" -> 3)
+    assert(counts == pinned, counts)
+  }
+}
