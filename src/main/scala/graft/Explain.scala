@@ -21,7 +21,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * rep by a job group set around it. Each warm rep also prints how many
   * SQL executions its jobs ran under (each job's `spark.sql.execution.id`)
   * and how many of those were planned adaptively (an `AdaptiveSparkPlan`
-  * root), so a graph loop that falls back to AQE is a visible count.
+  * root), so a graph loop that falls back to AQE is a visible count, and
+  * how many OS processes it started ([[ProcessStarts]]), so a read path
+  * that lists files through a forking filesystem call is one too.
   */
 object Explain {
   private val Usage = "usage: Explain <sfDir> <names_csv> plan [<outDir> <suffix>]" +
@@ -110,16 +112,19 @@ object Explain {
     for (q <- queries) {
       def rep(tag: String): Unit = {
         spark.sparkContext.setJobGroup(s"profile:${q.name}:$tag", s"profile:$tag")
-        val t0 = System.nanoTime()
-        val n = q.run(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val ((n, dt), procs) = ProcessStarts.during {
+          val t0 = System.nanoTime()
+          val n = q.run(spark, sfDir).count()
+          (n, (System.nanoTime() - t0) / 1e9)
+        }
         spark.sparkContext.clearJobGroup()
         System.gc()
         val sql = if (!tag.startsWith("warm")) "" else {
           org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
           val ids = jobs.values.asScala
             .filter(_.group == s"profile:${q.name}:$tag").flatMap(_.sqlId).toSet
-          s"  sql ${ids.size} (adaptive ${ids.count(id => adaptive.getOrDefault(id, false))})"
+          s"  sql ${ids.size} (adaptive ${ids.count(id => adaptive.getOrDefault(id, false))})" +
+            s"  procs ${procs.size}"
         }
         println(f"[profile] ${q.name} $tag: $dt%.3f s ($n rows)$sql")
       }

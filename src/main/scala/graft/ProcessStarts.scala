@@ -1,0 +1,33 @@
+package graft
+
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+
+/** Counts the OS processes this JVM starts while a block runs. Hadoop's
+  * local filesystem shells out (`ls -ld` to load permissions, `chmod` to
+  * set them) when native Hadoop is absent; a read path that does so pays
+  * a fork per file, which no Spark metric shows. An in-process JFR
+  * recording of `jdk.ProcessStart` sees every such start.
+  */
+object ProcessStarts {
+  /** `body`'s result and the command line of every process started
+    * meanwhile, in start order. */
+  def during[T](body: => T): (T, Seq[String]) = {
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try body finally rec.stop()
+      val file = Files.createTempFile("graft_procs", ".jfr")
+      try {
+        rec.dump(file)
+        val cmds = RecordingFile.readAllEvents(file).asScala.toSeq
+          .sortBy(_.getStartTime)
+          .map(_.getString("command"))
+        (out, cmds)
+      } finally Files.deleteIfExists(file)
+    } finally rec.close()
+  }
+}

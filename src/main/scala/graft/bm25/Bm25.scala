@@ -51,17 +51,12 @@ object Bm25 {
     col("idf") * col("tf") * (K1 + 1.0) /
       (col("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * col("dl") / col("avgdl")))
 
-  /** Score + top-k from index-shaped relations: query-term postings
-    * (term, doc_id, tf), per-term document frequencies (term, df), doc
-    * lengths (doc_id, dl), and the single-row corpus stats
-    * (n_docs, avgdl). Shared by the build-on-the-fly [[search]] and the
-    * prebuilt-index path (graft.index.Bm25Index). */
-  def scoreParts(qPost: DataFrame, docFreq: DataFrame, lens: DataFrame,
-      stats: DataFrame, k: Int): DataFrame =
-    qPost
-      .join(broadcast(docFreq), "term")
-      .join(lens, "doc_id")
-      .crossJoin(broadcast(stats))
+  /** Score + top-k over query-term posting rows that carry
+    * (doc_id, tf, dl, df, n_docs, avgdl): the per-term weights summed per
+    * doc, ties broken on doc_id. Shared by the build-on-the-fly [[search]]
+    * and the prebuilt index (graft.index.Bm25Index). */
+  def scoreTopK(rows: DataFrame, k: Int): DataFrame =
+    rows
       .withColumn("idf", idfCol)
       .withColumn("w", weightCol)
       .groupBy("doc_id")
@@ -87,7 +82,10 @@ object Bm25 {
     val qPost = postingsFromToks(toks).join(q, "term")
     val docFreq = qPost.groupBy("term")
       .agg(countDistinct("doc_id").cast("double").as("df"))
-    scoreParts(qPost, docFreq, lens, stats, k)
+    scoreTopK(qPost
+      .join(broadcast(docFreq), "term")
+      .join(lens, "doc_id")
+      .crossJoin(broadcast(stats)), k)
   }
 
   /** DuckDB oracle for [[search]] over `relation(doc_id, text)`.

@@ -54,18 +54,28 @@ final class VectorCollection(
   private def oldPath = new Path(s"$root/${config.name}/data_old")
   private def changelogPath = s"$root/${config.name}/changelog"
 
-  def df: DataFrame = {
+  def df: DataFrame = read(generation)
+
+  /** Fingerprint of the live data generation: it keys the opened data
+    * relation and every index path, so a call that needs both computes
+    * it once. */
+  private def generation: String = {
     recover()
     // a clear contract violation beats the path-not-found the parquet
     // reader would throw (the reference returns [] but a DataFrame needs
     // a schema, which an empty collection doesn't have yet)
     require(fs.exists(dataPath),
       s"collection '${config.name}' is empty — insert rows before reading")
-    // opened once per session and data generation: every commit writes
-    // new files (a new fingerprint) and drops the opened relation
-    graft.index.IndexStore.table(spark, dataPath.toString,
-      graft.index.IndexStore.fingerprint(spark, Seq(dataPath.toString)))
+    fingerprint
   }
+
+  private def fingerprint: String =
+    graft.index.IndexStore.fingerprint(spark, Seq(dataPath.toString))
+
+  /** The data generation `gen`, opened once per session: every commit
+    * writes new files (a new fingerprint) and drops the opened relation. */
+  private def read(gen: String): DataFrame =
+    graft.index.IndexStore.table(spark, dataPath.toString, gen)
 
   /** Crash recovery: if a swap died between retiring the old generation
     * and promoting the new one, exactly one of data_old/data_staging holds
@@ -232,20 +242,21 @@ final class VectorCollection(
       "duplicate ids within batch")
     if (isEmpty) commit(snap)
     else {
-      val dups = snap.join(df, Seq("id"), "left_semi").count()
+      // the generation being replaced, which keys its index paths
+      val prevGen = fingerprint
+      val data = read(prevGen)
+      val dups = snap.join(data, Seq("id"), "left_semi").count()
       require(dups == 0, s"$dups ids already exist")
-      // fingerprint paths of the generation being replaced
-      val hasText = snap.columns.contains("text")
-      val prevAnn = annIndexPath
-      val prevText = if (hasText) Some(textIndexPath) else None
-      commit(df.unionByName(snap))
+      commit(data.unionByName(snap))
+      val gen = fingerprint
       // Best-effort: indexes are derived state (advance() already
       // swallows its own failures and leaves the path not-ready, so the
       // next search rebuilds) — a maintenance failure must never make a
       // COMMITTED insert report failure or skip its CDC events. Only
       // indexes that already exist advance; absent ones build lazily.
       if (annKind.isDefined)
-        graft.index.IndexStore.advance(spark, prevAnn, annIndexPath)(p =>
+        graft.index.IndexStore.advance(spark, annIndexPath(prevGen),
+            annIndexPath(gen))(p =>
           config.metric match {
             case "cosine" =>
               graft.index.LshIndex.append(spark, snap, "vector", "id",
@@ -257,10 +268,11 @@ final class VectorCollection(
               graft.index.IvfIndex.append(spark, snap, "vector", "id", p,
                 metaColumns(snap), stringIds = true)
           })
-      prevText.foreach(pt =>
-        graft.index.IndexStore.advance(spark, pt, textIndexPath)(p =>
+      if (snap.columns.contains("text"))
+        graft.index.IndexStore.advance(spark, textIndexPath(prevGen),
+            textIndexPath(gen))(p =>
           graft.index.Bm25Index.append(spark,
-            snap.select(col("id").as("doc_id"), col("text")), p)))
+            snap.select(col("id").as("doc_id"), col("text")), p))
     }
     logEvents("insert", snap.select("id"))
   }
@@ -383,9 +395,9 @@ final class VectorCollection(
     case _        => None
   }
 
-  private def annIndexPath: String =
-    graft.index.IndexStore.path(spark, s"$root/${config.name}",
-      annKind.getOrElse("collnone"), Seq(dataPath.toString))
+  private def annIndexPath(gen: String): String =
+    graft.index.IndexStore.pathAt(s"$root/${config.name}",
+      annKind.getOrElse("collnone"), gen)
 
   /** A `none` collection is searched by text and metadata only. */
   private def noAnnFamily(metric: String) = new IllegalArgumentException(
@@ -408,20 +420,20 @@ final class VectorCollection(
         // advanced on every mutation — the ingest-heavy regime where a
         // 64-dir write per generation is pure small-file overhead
         // (guide §6); probes still prune on band_idx + push band_val
-        graft.index.IndexStore.ensure(spark, annIndexPath) { p =>
+        graft.index.IndexStore.ensure(spark, annIndexPath(fingerprint)) { p =>
           val data = df
           graft.index.LshIndex.build(spark, data, "vector", "id",
             config.dimensions, p, metaColumns(data), compact = true)
         }
       case "l2" =>
-        graft.index.IndexStore.ensure(spark, annIndexPath) { p =>
+        graft.index.IndexStore.ensure(spark, annIndexPath(fingerprint)) { p =>
           val data = df
           graft.index.IvfIndex.build(spark, data, "vector", "id",
             graft.knn.Ann.fixedIvfModel(IvfCells, config.dimensions), p,
             metaColumns(data), stringIds = true)
         }
       case "ip" =>
-        graft.index.IndexStore.ensure(spark, annIndexPath) { p =>
+        graft.index.IndexStore.ensure(spark, annIndexPath(fingerprint)) { p =>
           val data = df
           graft.index.MipsIndex.build(spark, data, "vector", "id",
             IvfCells, p, metaColumns(data), stringIds = true)
@@ -465,21 +477,24 @@ final class VectorCollection(
     }
   }
 
-  private def textIndexPath: String =
-    graft.index.IndexStore.path(spark, s"$root/${config.name}", "collbm25",
-      Seq(dataPath.toString))
+  /** The text index path of data generation `gen`. */
+  private def textIndexPath(gen: String): String =
+    graft.index.IndexStore.pathAt(s"$root/${config.name}", "collbm25", gen)
 
   /** Build-if-absent the collection's persistent BM25 index over its own
     * `text` column (same fingerprint lifecycle as [[ensureAnnIndex]]).
     * The one keyword index of the collection: [[searchText]] and
     * [[searchHybrid]] both read it. */
-  def ensureTextIndex(): String = ensureTextIndex(df)
+  def ensureTextIndex(): String = {
+    val gen = generation
+    ensureTextIndex(gen, read(gen))
+  }
 
-  /** [[ensureTextIndex]] over an already-opened generation `data`. */
-  private def ensureTextIndex(data: DataFrame): String = {
+  /** [[ensureTextIndex]] over generation `gen`, already opened as `data`. */
+  private def ensureTextIndex(gen: String, data: DataFrame): String = {
     require(data.columns.contains("text"),
       s"collection '${config.name}' has no 'text' column")
-    graft.index.IndexStore.ensure(spark, textIndexPath)(p =>
+    graft.index.IndexStore.ensure(spark, textIndexPath(gen))(p =>
       graft.index.Bm25Index.build(spark,
         data.select(col("id").as("doc_id"), col("text")), p))
   }
@@ -491,11 +506,14 @@ final class VectorCollection(
   def searchText(terms: Seq[String], k: Int = 10,
       filter: Option[Pred] = None): DataFrame = {
     logSearch("text", k)
-    val p = ensureTextIndex()
+    // one fingerprint serves the data relation and the index path
+    val gen = generation
+    val data = read(gen)
+    val p = ensureTextIndex(gen, data)
     val res = filter match {
       case Some(f) =>
         graft.index.Bm25Index.searchFiltered(spark, p,
-          df.filter(f.column).select(col("id").as("doc_id")), terms, k)
+          data.filter(f.column).select(col("id").as("doc_id")), terms, k)
       case None => graft.index.Bm25Index.search(spark, p, terms, k)
     }
     res.withColumnRenamed("doc_id", "id")
@@ -522,12 +540,13 @@ final class VectorCollection(
     require(config.metric == "cosine",
       s"hybrid search blends cosine similarity (reference semantics); " +
         s"collection '${config.name}' is '${config.metric}'")
-    // one open of the generation serves the text check, the index
-    // ensure and the vector branch
-    val data = df
+    // one fingerprint and one open of the generation serve the text
+    // check, the index ensure and the vector branch
+    val gen = generation
+    val data = read(gen)
     graft.hybrid.HybridSearch.searchIndexed(spark,
         data.select(col("id").as("doc_id"), col("vector").as("embedding")),
-        ensureTextIndex(data), terms, queryVec, k, alpha, vectorWeight,
+        ensureTextIndex(gen, data), terms, queryVec, k, alpha, vectorWeight,
         keywordWeight)
       .withColumnRenamed("doc_id", "id")
   }

@@ -2,6 +2,7 @@ package graft.index
 
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.bm25.Bm25
 
@@ -17,11 +18,19 @@ import graft.bm25.Bm25
   *
   * `term_bucket = crc32(term) % 64` is a partition column, so a query's
   * scan prunes to the buckets of its own terms (PartitionFilters — pinned
-  * in Bm25IndexSpec). df/idf are computed per query from the pruned
+  * in IndexSpec). df/idf are computed per query from the pruned
   * postings (they are corpus-global aggregates over a handful of terms),
   * which keeps incremental [[append]] cheap: new postings rows change df
   * implicitly, no stored weight goes stale — the same reason the
   * reference recomputes idf at query time from its df dict.
+  *
+  * df is a `count(1)` window over the term on the one pruned scan, so
+  * postings must be unique per (term, doc_id): [[build]] groups tokens by
+  * (doc_id, term), [[append]] takes new doc ids only, and summing weights
+  * per doc relies on the same uniqueness. The single stats row is read
+  * once per index path into [[IndexStore.cachedState]] and applied as
+  * literals; every path that drops the index's opened tables drops it
+  * too, [[append]] after its stats write.
   *
   * At 100 TB: postings is the big relation; bucket pruning bounds a query
   * to terms/64 of the files, and within a bucket Parquet min/max on the
@@ -77,7 +86,6 @@ object Bm25Index {
     * caller guarantees new doc_ids; wrap in IndexStore.mutate so a crash
     * mid-append invalidates the index instead of serving half an update. */
   def append(spark: SparkSession, newDocs: DataFrame, path: String): Unit = {
-    IndexStore.invalidateState(path)
     val toks = Bm25.tokenized(newDocs).persist()
     try {
       Bm25.docLensFromToks(toks)
@@ -91,7 +99,12 @@ object Bm25Index {
         .parquet(s"$path/postings")
       spark.catalog.refreshByPath(s"$path/doclens")
       writeStats(spark, path)
-    } finally { toks.unpersist(); () }
+    } finally {
+      // after the writes, failed or not: a table opened, or stats
+      // memoized, before or during the append describe another corpus
+      IndexStore.invalidateState(path)
+      toks.unpersist(); ()
+    }
   }
 
   /** stats = one-row aggregate of doclens; doubles over integer-valued
@@ -118,24 +131,30 @@ object Bm25Index {
       .select("term", "doc_id", "tf", "dl")
   }
 
+  /** (n_docs, avgdl) of the index at `path`, read once per path (avgdl
+    * is null for an empty index). */
+  private def corpusStats(spark: SparkSession, path: String): (Double, Any) =
+    IndexStore.cachedState(s"$path/stats#bm25") {
+      val r = IndexStore.table(spark, s"$path/stats").head()
+      (r.getDouble(0), r.get(1))
+    }
+
+  /** df of each query term, counted by a window on the same pruned rows,
+    * so the postings are scanned once. */
+  private def withDocFreq(qPost: DataFrame): DataFrame =
+    qPost.withColumn("df",
+      count(lit(1)).over(Window.partitionBy("term")).cast("double"))
+
   /** BM25 top-k against the prebuilt index: one pruned postings scan
-    * (rows carry tf AND dl), a tiny broadcast df aggregate, a broadcast
-    * stats row, score, top-k — no doclens join, no tokenization, no
+    * (rows carry tf AND dl), df from a window on it, memoized corpus stats
+    * as literals, score, top-k — no doclens join, no tokenization, no
     * corpus scan. */
   def search(spark: SparkSession, path: String, terms: Seq[String], k: Int)
       : DataFrame = {
-    val qPost = prunedPostings(spark, path, terms.distinct)
-    val docFreq = qPost.groupBy("term")
-      .agg(countDistinct("doc_id").cast("double").as("df"))
-    qPost
-      .join(broadcast(docFreq), "term")
-      .crossJoin(broadcast(IndexStore.table(spark, s"$path/stats")))
-      .withColumn("idf", Bm25.idfCol)
-      .withColumn("w", Bm25.weightCol)
-      .groupBy("doc_id")
-      .agg(round(sum("w"), 6).as("score"))
-      .orderBy(desc("score"), col("doc_id"))
-      .limit(k)
+    val (nDocs, avgdl) = corpusStats(spark, path)
+    Bm25.scoreTopK(withDocFreq(prunedPostings(spark, path, terms.distinct))
+      .withColumn("n_docs", lit(nDocs))
+      .withColumn("avgdl", lit(avgdl).cast("double")), k)
   }
 
   /** Filtered search with filter-before-scoring semantics: df, doc count
@@ -152,18 +171,9 @@ object Bm25Index {
     // aggregate); per-row dl comes from the postings rows themselves
     val stats = IndexStore.table(spark, s"$path/doclens").join(ids, "doc_id")
       .agg(count(lit(1)).cast("double").as("n_docs"), avg("dl").as("avgdl"))
-    val qPost = prunedPostings(spark, path, terms.distinct).join(ids, "doc_id")
-    val docFreq = qPost.groupBy("term")
-      .agg(countDistinct("doc_id").cast("double").as("df"))
-    qPost
-      .join(broadcast(docFreq), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", Bm25.idfCol)
-      .withColumn("w", Bm25.weightCol)
-      .groupBy("doc_id")
-      .agg(round(sum("w"), 6).as("score"))
-      .orderBy(desc("score"), col("doc_id"))
-      .limit(k)
+    Bm25.scoreTopK(
+      withDocFreq(prunedPostings(spark, path, terms.distinct).join(ids, "doc_id"))
+        .crossJoin(broadcast(stats)), k)
   }
 
   /** Per-term index stats (df, total tf) from the postings table. */

@@ -31,8 +31,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * changes what lies under it: a (re)build in [[ensure]] (and the
   * stale siblings it deletes), [[mutate]], [[advance]], [[invalidate]],
   * and every direct index `build`/`append`, which calls
-  * [[invalidateState]] first. A stopped SparkContext's relations are
-  * released when it stops.
+  * [[invalidateState]] first (BM25's append after its last write, since
+  * its stats change). A stopped SparkContext's relations are released
+  * when it stops.
   *
   * At cluster scale `root` is a durable store path (set GRAFT_INDEX_ROOT);
   * locally it defaults to the JVM tmpdir so read-only testdata dirs are
@@ -93,7 +94,15 @@ object IndexStore extends org.apache.spark.internal.Logging {
     * path relative to the source root and sorted before mixing — listing
     * order varies across filesystems, and two files in different
     * subdirectories can share a leaf name. Changes whenever the source
-    * generation is rewritten. */
+    * generation is rewritten.
+    *
+    * The walk is `listStatus` per directory, not `listFiles(p, true)`:
+    * `listFiles` wraps every entry in a `LocatedFileStatus`, whose
+    * constructor reads the file's permissions, and the local filesystem
+    * without native Hadoop loads those by running `ls -ld` — one OS
+    * process per file, on every collection read. `listStatus` loads them
+    * only when asked, and both hide the same checksum sidecars, so the
+    * digest is the one `listFiles` gave. */
   def fingerprint(spark: SparkSession, sources: Seq[String]): String = {
     var h = 1125899906842597L
     sources.foreach { s =>
@@ -102,12 +111,12 @@ object IndexStore extends org.apache.spark.internal.Logging {
       if (f.exists(p)) {
         val base = f.makeQualified(p).toString
         val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-        val it = f.listFiles(p, true)
-        while (it.hasNext) {
-          val st = it.next()
-          entries += ((st.getPath.toString.stripPrefix(base),
+        def walk(dir: Path): Unit = f.listStatus(dir).foreach { st =>
+          if (st.isDirectory) walk(st.getPath)
+          else entries += ((st.getPath.toString.stripPrefix(base),
             st.getLen, st.getModificationTime))
         }
+        walk(p)
         entries.sortInPlaceBy(_._1).foreach { case (rel, len, mtime) =>
           h = h * 31 + rel.hashCode
           h = h * 31 + len
@@ -120,7 +129,11 @@ object IndexStore extends org.apache.spark.internal.Logging {
 
   def path(spark: SparkSession, dataDir: String, kind: String,
       sources: Seq[String]): String =
-    s"$root/${slug(dataDir)}/${kind}_${fingerprint(spark, sources)}"
+    pathAt(dataDir, kind, fingerprint(spark, sources))
+
+  /** [[path]] for an already-computed source fingerprint. */
+  def pathAt(dataDir: String, kind: String, fingerprint: String): String =
+    s"$root/${slug(dataDir)}/${kind}_$fingerprint"
 
   def ready(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path, "_GRAFT_READY"))

@@ -79,6 +79,8 @@ object GraphVectorQueries {
       Some(GraphVector.semanticGraphSearchSql(C, 9L, D, K, vw = 0.7,
         gw = 0.3, edgeType = Some("PLACED_BY")))
     ),
+    // a parallel edge repeats a path in `tr`; DISTINCT keeps one row per
+    // end node (depth is a function of the path), as the engine returns
     Q(
       "graph_rerank",
       (s, dir) => {
@@ -109,7 +111,7 @@ object GraphVectorQueries {
            |       UNION ALL SELECT depth, path, end_id FROM d2
            |       UNION ALL SELECT depth, path, end_id FROM d3),
            |canon AS (SELECT end_id, min(path) AS path FROM tr GROUP BY end_id),
-           |wd AS (SELECT c.end_id, c.path, t.depth
+           |wd AS (SELECT DISTINCT c.end_id, c.path, t.depth
            |       FROM canon c JOIN tr t ON t.end_id = c.end_id
            |                              AND t.path = c.path)
            |SELECT wd.end_id, round(coalesce($sim, 0.0), 6) AS score,

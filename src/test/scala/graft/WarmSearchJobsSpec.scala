@@ -7,8 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.VectorDb
+import graft.expr.CosineDistance
 import graft.filter.Eq
 import graft.functions.VectorFunctions
+import graft.plans.{AnnTopK, IndexedTables}
 
 /** Structural job counts of the warm collection read path. Tables under a
   * ready index path (and the collection's data generation) are opened
@@ -16,7 +18,10 @@ import graft.functions.VectorFunctions
   * no file-listing job and no Parquet schema-inference job. The per-call
   * counts are pinned so that a per-query `spark.read.parquet` creeping
   * back into a search path fails here on any box, independent of its
-  * wall time.
+  * wall time; a keyword probe is one pruned postings scan (df from a
+  * window on it, corpus stats memoized), 3 jobs. A warm read also starts
+  * no OS process: a file listing that forks per file (Hadoop's local
+  * filesystem loading permissions through `ls`) fails the second case.
   */
 class WarmSearchJobsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -47,7 +52,10 @@ class WarmSearchJobsSpec extends AnyFunSuite {
   private def isMetadataJob(what: String): Boolean =
     what.contains("Listing leaf files") || what.contains("DataFrameReader")
 
-  test("warm collection searches launch no listing or schema job") {
+  private val q = VectorFunctions.hashVectorValues(7L, D)
+
+  /** A 400-row indexed collection and its five warm read calls. */
+  private lazy val (coll, calls) = {
     val n = 400
     val rows = (0 until n).map { i =>
       val r = new scala.util.Random(i)
@@ -61,7 +69,6 @@ class WarmSearchJobsSpec extends AnyFunSuite {
     coll.insertBatch(rows)
     coll.ensureAnnIndex(); coll.ensureTextIndex(); coll.ensureHybridIndex()
 
-    val q = VectorFunctions.hashVectorValues(7L, D)
     val terms = Seq("spark", "vector", "graph")
     val calls: Seq[(String, () => Unit)] = Seq(
       "searchAnn" -> (() => coll.searchAnn(q, 10).collect()),
@@ -72,7 +79,10 @@ class WarmSearchJobsSpec extends AnyFunSuite {
       "searchText" -> (() => coll.searchText(terms, 10).collect()),
       "searchHybrid" -> (() => coll.searchHybrid(terms, q, 10).collect()))
     calls.foreach(_._2()) // cold: opens every table once
+    (coll, calls)
+  }
 
+  test("warm collection searches launch no listing or schema job") {
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
     try {
@@ -93,6 +103,31 @@ class WarmSearchJobsSpec extends AnyFunSuite {
     }
     val counts = calls.map { case (name, _) => name -> jobs(name).size }.toMap
     assert(counts == Map("searchAnn" -> 2, "searchAnn_filter" -> 2,
-      "search" -> 1, "searchText" -> 6, "searchHybrid" -> 6), counts)
+      "search" -> 1, "searchText" -> 3, "searchHybrid" -> 3), counts)
+  }
+
+  test("warm reads and an index-served SQL top-k start no OS process") {
+    calls.size // builds and warms the collection
+    val data = s"${coll.root}/docs/data"
+    AnnTopK.install(spark)
+    IndexedTables.register(spark, data, "vector", "id", D, coll.ensureAnnIndex())
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+      .functionRegistry.createOrReplaceTempFunction("vec_cosine_distance",
+        es => CosineDistance(es(0), es(1)), "scala_udf")
+    spark.read.parquet(data).createOrReplaceTempView("warm_docs")
+    val v = q.map(x => s"${x}D").mkString("array(", ", ", ")")
+    def sqlTopK() = spark.sql(
+      s"SELECT id FROM warm_docs ORDER BY vec_cosine_distance(vector, $v), id LIMIT 10")
+    try {
+      assert(sqlTopK().queryExecution.executedPlan.toString.contains("band_idx"),
+        "the SQL top-k is served from the collection's LSH index")
+      sqlTopK().collect() // cold
+      val (_, procs) = ProcessStarts.during {
+        calls.foreach(_._2())
+        sqlTopK().collect()
+      }
+      if (procs.nonEmpty)
+        fail(s"${procs.size} process(es) started:\n" + procs.mkString("\n"))
+    } finally IndexedTables.clear()
   }
 }
