@@ -234,12 +234,7 @@ final class VectorCollection(
     // data) commit one version of the batch and index/log another — the
     // index is then marked ready at the new fingerprint and the wrong
     // stored vectors never self-heal.
-    val snap = rows.localCheckpoint()
-    val idStats = snap.agg(
-      org.apache.spark.sql.functions.count(lit(1)),
-      countDistinct(col("id"))).head
-    require(idStats.getLong(0) == idStats.getLong(1),
-      "duplicate ids within batch")
+    val snap = snapshot(rows)
     if (isEmpty) commit(snap)
     else {
       // the generation being replaced, which keys its index paths
@@ -277,6 +272,18 @@ final class VectorCollection(
     logEvents("insert", snap.select("id"))
   }
 
+  /** `rows` materialized once (localCheckpoint), rejecting a batch that
+    * repeats an id. */
+  private def snapshot(rows: DataFrame): DataFrame = {
+    val snap = rows.localCheckpoint()
+    val idStats = snap.agg(
+      org.apache.spark.sql.functions.count(lit(1)),
+      countDistinct(col("id"))).head
+    require(idStats.getLong(0) == idStats.getLong(1),
+      "duplicate ids within batch")
+    snap
+  }
+
   /** Delete-then-insert by id (reference upsert, `:418-423`). Rejects
     * intra-batch duplicate ids: the anti-join∪union below would otherwise
     * append BOTH duplicates and silently break the unique-id invariant
@@ -285,12 +292,7 @@ final class VectorCollection(
   def upsert(rows: DataFrame): Unit = {
     // same single-materialization rule as insertBatch: the committed rows
     // and the CDC ids must come from ONE evaluation of the caller's plan
-    val snap = rows.localCheckpoint()
-    val idStats = snap.agg(
-      org.apache.spark.sql.functions.count(lit(1)),
-      countDistinct(col("id"))).head
-    require(idStats.getLong(0) == idStats.getLong(1),
-      "duplicate ids within batch")
+    val snap = snapshot(rows)
     if (isEmpty) commit(snap)
     else commit(df.join(snap.select("id"), Seq("id"), "left_anti")
       .unionByName(snap))

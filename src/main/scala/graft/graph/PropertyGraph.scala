@@ -18,28 +18,24 @@ import graft.core.Tables
   * loops of joins (depth ≤ 3/10 like the reference defaults).
   */
 final case class Graph(nodes: DataFrame, edges: DataFrame) {
-  /** Memoized exact sizes (r17): the broadcast-hint gates in pagerank /
-    * PPR need them, both relations are persisted by the builder, and
-    * TpchGraph memoizes the Graph instance per (session, dir) — so the
-    * counts are one job per built graph (populated in the bench's build
-    * phase) instead of one count job per query rep. */
+  /** Memoized exact sizes for the broadcast gates of the rank loops.
+    * Both relations are persisted by the builder and TpchGraph memoizes
+    * the Graph per (session, dir), so each count is one job per built
+    * graph rather than one per query. */
   lazy val nodeCount: Long = nodes.count()
   lazy val edgeCount: Long = edges.count()
 
   /** Node-id dictionary — (id STRING, nid LONG) over every id appearing
     * as a node or an edge endpoint (superset of nodes, so encoding edges
     * through it never drops an endpoint and out-degrees stay exact on
-    * graphs whose edges reference missing nodes). The rank loops' join
-    * and group keys become 8-byte longs instead of strings (r18, guide
-    * §2.3 narrower types — measured ~35% per-hop CPU cut on the rank
-    * iteration shape, OPTIMIZATION_r18.md § "Graph.edgesOd +
-    * Graph.dict"). Ids are sorted before the
+    * graphs whose edges reference missing nodes). The rank loops join
+    * and group on these 8-byte longs instead of strings, which is
+    * narrower to hash, shuffle and compare. Ids are sorted before the
     * id assignment, so nid values are deterministic under partition
     * recompute (range boundaries and in-partition order are functions
     * of the data). The encoding is a bijection — results never depend
     * on the nid values themselves. */
   lazy val dict: DataFrame = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
     nodes.select(col("id"))
       .union(edges.select(col("src").as("id")))
       .union(edges.select(col("dst").as("id")))
@@ -53,39 +49,34 @@ final case class Graph(nodes: DataFrame, edges: DataFrame) {
   /** Materialized adjacency-with-degree — (src, dst, od) with src/dst
     * as [[dict]] nids, the GraphX trade of carrying the out-degree in
     * long-keyed edge storage — persisted once per built graph and
-    * shared by every rank iteration of pagerank and PPR (r18, VERDICT
-    * r17 #5: both loops re-derived it per rep, and PPR additionally
-    * re-joined a node-sized outdeg⋈rank table every hop). Partition
-    * count sized by DATA, not core count (guide §2.2): the loops
-    * re-scan this table `iters` times, and the r17 scaling block showed
-    * the 32-partition shape running the headline graph set FASTER at 8
-    * cores (pagerank ratio 0.58) — per-task fixed cost dominated. ~128k
-    * edge rows per task; saturates at defaultParallelism when the graph
-    * is big enough, so cluster-scale runs keep one task per core. Lazy:
-    * only the rank loops pay it (the bench build phase touches it
-    * alongside the counts). */
+    * shared by every rank iteration of pagerank and PPR, so neither loop
+    * derives out-degrees per call or joins a node-sized degree table per
+    * hop. Partition count sized by DATA, not core count: the loops
+    * re-scan this table `iters` times, and on a small graph the fixed
+    * cost per task outweighs the work a task does. ~128k edge rows per
+    * task; saturates at defaultParallelism when the graph is big
+    * enough, so cluster-scale runs keep one task per core. Lazy: only
+    * the rank loops pay it (the bench build phase touches it alongside
+    * the counts). */
   lazy val edgesOd: DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     val spark = edges.sparkSession
     val loopParts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong,
       edgeCount / 131072L + 1L)).toInt
-    def maybeBc(df: DataFrame) =
-      if (dictCount <= GraphOps.FrontierHintRows) broadcast(df) else df
     val e = edges
-      .join(maybeBc(dict.select(col("id"), col("nid").as("srcN"))),
+      .join(GraphOps.hinted(dict.select(col("id"), col("nid").as("srcN")), dictCount),
         col("src") === col("id")).drop("id")
-      .join(maybeBc(dict.select(col("id"), col("nid").as("dstN"))),
+      .join(GraphOps.hinted(dict.select(col("id"), col("nid").as("dstN")), dictCount),
         col("dst") === col("id")).drop("id")
       .select(col("srcN").as("src"), col("dstN").as("dst"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
     // hash-partitioned on dst and persisted WITH that partitioning
     // (InMemoryRelation preserves it — canChangeCachedPlanOutputPartitioning
     // is off by default): every rank hop ends in groupBy(dst), so the
-    // hop's aggregation needs NO exchange — one stage per hop (guide
-    // §2.4: operations keyed the same way share one exchange,
-    // established here once at build time).
-    e.join(maybeBc(outdeg), "src").select(col("src"), col("dst"), col("od"))
+    // hop's aggregation needs NO exchange — one stage per hop: operations
+    // keyed the same way share the one exchange, paid here once at build
+    // time.
+    e.join(GraphOps.hinted(outdeg, dictCount), "src").select(col("src"), col("dst"), col("od"))
       .repartition(loopParts, col("dst")).persist()
   }
 }
@@ -151,25 +142,23 @@ object TpchGraph {
     // Both relations are re-joined several times by every traversal
     // (each BFS hop, both var-length directions); persist so the
     // lineitem-distinct shuffles run once per query, not once per hop.
-    // Coalesce the persisted edge list before caching (r17, guide §2.2
-    // fewer-larger partitions): the raw union carries the two distinct
-    // shuffles' full width plus the scan splits (67 partitions at
-    // sf0.1/32 cores) and every graph query re-scans it — pagerank 6×
-    // per rep — at ~0.2 s of fixed per-task cost × 67 tasks per scan.
-    // Core count is the scale-adaptive floor for one-wave scheduling;
-    // at cluster scale the same expression keeps one task per core.
-    // range-repartition on (type, src), not coalesce and not round-robin
-    // (r17, all three measured): coalesce packs whole union children into
-    // merged partitions (one partition = all 150k PLACED_BY rows, another
-    // a near-empty distinct output) and the skewed wave time showed up in
-    // every downstream scan (graph_ppr 2.3→3.7 s); round-robin evens the
-    // sizes but interleaves the five relations, which destroys the
-    // columnar cache's clustering (type stops being RLE-runs, src loses
-    // prefix locality) and made every scan's decode slower (graph_ppr
-    // 2.1→2.6, shortest_paths 0.67→0.86). Range partitioning keeps rows
-    // clustered by (type, src) — the read-side locality the union had —
-    // while the range sampler splits the dominant type across partitions
-    // for even sizes. One build-time shuffle either way.
+    // Fewer, larger partitions for the persisted edge list: the raw
+    // union carries the two distinct shuffles' full width plus the scan
+    // splits, and every graph query re-scans it (pagerank once per
+    // iteration) at a fixed cost per task. Core count is the
+    // scale-adaptive floor for one-wave scheduling; at cluster scale the
+    // same expression keeps one task per core.
+    // range-repartition on (type, src), not coalesce and not round-robin:
+    // coalesce packs whole union children into merged partitions (one
+    // partition = all PLACED_BY rows, another a near-empty distinct
+    // output), and the skewed wave time shows up in every downstream
+    // scan; round-robin evens the sizes but interleaves the five
+    // relations, which destroys the columnar cache's clustering (type
+    // stops being RLE-runs, src loses prefix locality) and slows every
+    // scan's decode. Range partitioning keeps rows clustered by
+    // (type, src) — the read-side locality the union had — while the
+    // range sampler splits the dominant type across partitions for even
+    // sizes. One build-time shuffle either way.
     val np = spark.sparkContext.defaultParallelism
     Graph(nodes.coalesce(np).persist(),
       placedBy.union(custNation).union(suppNation).union(hasPart)
@@ -225,12 +214,59 @@ object GraphOps {
     * (a few MB of ids); larger sets shuffle. */
   val FrontierHintRows = 200000L
 
+  /** `df` hinted broadcast when its measured size `rows` is at or below
+    * [[FrontierHintRows]]; a larger `df` is left to shuffle, the right
+    * plan at that size. */
+  private[graft] def hinted(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= FrontierHintRows) broadcast(df) else df
+
+  /** `edges` of type `edgeType` only, or all of them. */
+  private[graft] def ofType(edges: DataFrame, edgeType: Option[String]): DataFrame =
+    edgeType.fold(edges)(t => edges.filter(col("type") === t))
+
+  /** The hop loop of [[traverse]], [[bfsPaths]], [[personalizedPagerank]]
+    * and `GraphVector.semanticGraphSearch`. `hop(frontier, visited)`
+    * builds a hop's frame from the frontier (`seed`, of `seedRows` rows,
+    * for hop 1, else the previous hop's frame) and, for a caller that
+    * keeps one, the visited set; both come hinted on their measured
+    * sizes, since the planner's estimate for a join-derived frontier is
+    * far too large to broadcast it. Every hop but the last is
+    * localCheckpoint'ed and counted: its frame feeds the next hop and
+    * the caller's result, and Spark shares no subtree between those
+    * consumers (nor across union branches), so a lazy hop would re-run
+    * its joins inside every later one; the count is cheap on the
+    * materialized frame and keeps the next gate exact. The last hop
+    * feeds only the result, so it stays lazy. `visited = Some((v, key))`
+    * starts the visited set at `v` (`seedRows` rows, one column) and
+    * grows it by each hop's `key` column. Returns the frame of each hop,
+    * hop 1 first. */
+  private[graft] def expand(seed: DataFrame, seedRows: Long, hops: Int,
+      visited: Option[(DataFrame, String)] = None)(
+      hop: (DataFrame, Option[DataFrame]) => DataFrame): Seq[DataFrame] = {
+    var frontier = seed
+    var frontierRows = seedRows
+    var seen = visited.map(_._1)
+    var seenRows = seedRows
+    (1 to hops).map { d =>
+      val next = hop(hinted(frontier, frontierRows), seen.map(hinted(_, seenRows)))
+      if (d == hops) next
+      else {
+        frontier = next.localCheckpoint()
+        frontierRows = frontier.count()
+        seenRows += frontierRows
+        seen = seen.map(v =>
+          v.union(frontier.select(col(visited.get._2).as(v.columns.head))))
+        frontier
+      }
+    }
+  }
+
   /** 1-hop neighbors (reference `graph.py:818-842`): direction out/in/
     * both, optional edge-type filter. Returns neighbor node rows.
     */
   def neighbors(g: Graph, nodeId: String, direction: String = "out",
       edgeType: Option[String] = None): DataFrame = {
-    val e = edgeType.map(t => g.edges.filter(col("type") === t)).getOrElse(g.edges)
+    val e = ofType(g.edges, edgeType)
     val outN = e.filter(col("src") === nodeId).select(col("dst").as("nid"))
     val inN = e.filter(col("dst") === nodeId).select(col("src").as("nid"))
     val ids = direction match {
@@ -250,49 +286,19 @@ object GraphOps {
       edgeType: Option[String] = None): DataFrame = {
     require(maxDepth >= 1, s"traverse needs maxDepth >= 1, got $maxDepth")
     val spark = nonAdaptive(g.nodes.sparkSession)
-    val edges = rebind(spark, g.edges)
-    val e = edgeType.map(t => edges.filter(col("type") === t)).getOrElse(edges)
-    var frontier = spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(start, start, Seq(start))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("seen", org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)))))
-    var acc: Option[DataFrame] = None
-    // Frontiers are localCheckpoint'ed below, so exact sizes are cheap
-    // driver facts (the bfsPaths discipline, applied here in r18): hint
-    // the broadcast only when the MEASURED frontier is bounded — the
-    // planner's own estimate for a join-derived frontier is large, and
-    // it was sort-merge-joining (sorting + shuffling) the million-row
-    // edge cache against a ~10-row frontier every hop. A huge frontier
-    // at scale skips the hint and shuffles — the right plan at that
-    // size.
-    var frontierRows = 1L
-    for (d <- 1 to maxDepth) {
-      val f = if (frontierRows <= FrontierHintRows) broadcast(frontier)
-        else frontier
-      val next0 = f
-        .join(e, col("node") === col("src"))
+    import spark.implicits._
+    val e = ofType(rebind(spark, g.edges), edgeType)
+    val seed = Seq((start, start, Seq(start))).toDF("node", "path", "seen")
+    expand(seed, 1L, maxDepth) { (f, _) =>
+      f.join(e, col("node") === col("src"))
         .filter(!array_contains(col("seen"), col("dst")))
         .select(
           col("dst").as("node"),
           concat(col("path"), lit("->"), col("dst")).as("path"),
           array_append(col("seen"), col("dst")).as("seen"))
-      // materialize every non-final hop (r18): the result is a UNION of
-      // per-depth branches and Spark does not share common subtrees
-      // across union branches — without the checkpoint, depth d's join
-      // chain re-executes inside every deeper branch (d1 ran three
-      // times in a depth-3 traversal: 1+2+3 = 6 hop joins where 3
-      // suffice). The final hop feeds only its own branch — no
-      // checkpoint. The frontier is one start node's bounded ≤ maxDepth
-      // neighborhood, the same set the consumer materializes anyway.
-      val next = if (d < maxDepth) next0.localCheckpoint() else next0
-      if (d < maxDepth) frontierRows = next.count() // materialized: cheap
-      val step = next.select(lit(d).as("depth"), col("path"), col("node").as("end_id"))
-      acc = Some(acc.map(_.union(step)).getOrElse(step))
-      frontier = next
-    }
-    acc.get
+    }.zipWithIndex.map { case (next, i) =>
+      next.select(lit(i + 1).as("depth"), col("path"), col("node").as("end_id"))
+    }.reduce(_ union _)
   }
 
   /** Minimal-depth reachability with canonical (lexicographically least)
@@ -306,53 +312,19 @@ object GraphOps {
     val spark = nonAdaptive(g.nodes.sparkSession)
     import spark.implicits._
     val edges = rebind(spark, g.edges)
-    var frontier = Seq((start, start)).toDF("node", "path")
-    var visited = Seq(start).toDF("vnode")
-    var acc: Option[DataFrame] = None
-    // Frontiers are localCheckpoint'ed, so exact sizes are cheap driver
-    // facts: hint the broadcast only when the MEASURED size is bounded
-    // (hop 1 is the single start row; a reachable-set-sized frontier at
-    // scale skips the hint and shuffles — the right plan at that size).
-    var frontierRows = 1L
-    var visitedRows = 1L
-    for (d <- 1 to maxDepth) {
-      val f = if (frontierRows <= FrontierHintRows)
-        broadcast(frontier) else frontier
-      val v = if (visitedRows <= FrontierHintRows)
-        broadcast(visited) else visited
-      val last = d == maxDepth
-      val next0 = f
-        .join(edges, col("node") === col("src"))
+    val all = expand(Seq((start, start)).toDF("node", "path"), 1L, maxDepth,
+        Some(Seq(start).toDF("vnode") -> "node")) { (f, v) =>
+      f.join(edges, col("node") === col("src"))
         .select(col("dst").as("node"),
           concat(col("path"), lit("->"), col("dst")).as("path"))
-        .join(v, col("node") === col("vnode"), "left_anti")
+        .join(v.get, col("node") === col("vnode"), "left_anti")
         .groupBy("node").agg(min("path").as("path"))
-      // materialize the hop: next feeds acc, visited AND the next
-      // frontier — without the checkpoint each later hop re-executes
-      // every earlier hop's joins (lineage growth). The LAST hop feeds
-      // only acc, so its checkpoint + gate count were two
-      // pure-overhead jobs per rep (r17).
-      val next = if (last) next0 else next0.localCheckpoint()
-      if (!last) {
-        val n = next.count() // materialized: metadata-cheap
-        frontierRows = n
-        visitedRows += n
-      }
-      val step = next.select(col("node").as("target"), lit(d).as("depth"),
-        col("path"))
-      acc = Some(acc.map(_.union(step)).getOrElse(step))
-      if (!last) {
-        visited = visited.union(next.select(col("node").as("vnode")))
-        frontier = next
-      }
-    }
-    val all = acc.get
-    targetLabel match {
-      case Some(l) =>
-        all.join(rebind(spark, g.nodes).filter(col("label") === l).select(col("id")),
-          col("target") === col("id")).drop("id")
-      case None => all
-    }
+    }.zipWithIndex.map { case (next, i) =>
+      next.select(col("node").as("target"), lit(i + 1).as("depth"), col("path"))
+    }.reduce(_ union _)
+    targetLabel.fold(all)(l =>
+      all.join(rebind(spark, g.nodes).filter(col("label") === l).select(col("id")),
+        col("target") === col("id")).drop("id"))
   }
 
   /** Static PageRank in fixed-point arithmetic: GraphX-style semantics
@@ -369,23 +341,13 @@ object GraphOps {
   def pagerank(g: Graph, iters: Int): DataFrame = {
     require(iters >= 1, s"pagerank needs at least one iteration, got $iters")
     val spark = nonAdaptive(g.nodes.sparkSession)
-    val dict = rebind(spark, g.dict)
-    // The edge list is the big side: materialized ONCE with its per-src
-    // out-degree attached (edgesOd below), then each iteration joins it
-    // against the O(nodes) rank table. When the MEASURED node count is
-    // bounded the rank side is hinted broadcast, so each iteration is
-    // one broadcast join + one map-side-combined groupBy shuffle of
-    // per-dst partial sums; past the ceiling the joins fall back to
-    // shuffles on src/dst — the right plan at that size.
-    // memoized size (Graph.nodeCount): the gate no longer costs a
-    // checkpoint + count job per rep (r17)
-    val hint = g.nodeCount <= FrontierHintRows
-    def maybeBc(df: DataFrame) = if (hint) broadcast(df) else df
-    // Materialized adjacency (Graph.edgesOd, r18): per-src out-degree
-    // carried in persisted edge storage, shared across reps and with
-    // PPR — the loop below is ONE broadcast-gated join + one
-    // map-side-combined groupBy per hop, and the first hop (uniform
-    // base rank) needs no join at all.
+    // The edge list is the big side, materialized once with its per-src
+    // out-degree attached (Graph.edgesOd, shared with PPR); each
+    // iteration joins it against the O(nodes) rank table, hinted
+    // broadcast while the memoized node count is bounded, so an
+    // iteration is one broadcast join + one map-side-combined groupBy
+    // shuffle of per-dst partial sums. The first iteration (uniform base
+    // rank) needs no join at all.
     val edgesOd = rebind(spark, g.edgesOd)
     // Sparse rank representation: `r` holds only nodes that RECEIVE
     // rank (contrib keys); every absent node implicitly sits at the
@@ -397,51 +359,45 @@ object GraphOps {
     for (k <- 1 to iters) {
       val base = if (k == 1) 1000000L else 150000L
       // contribution per EDGE is coalesce(rank(src), base) div od(src) —
-      // a function of src only, so the per-edge division sums to exactly
-      // the same integers as the former per-src precomputation
+      // a function of src only, so summing it per dst over edge rows is
+      // the same integer as dividing once per src
       val contrib = r match {
         case Some(rr) => edgesOd
-          .join(maybeBc(rr), col("src") === col("id"), "left")
+          .join(hinted(rr, g.nodeCount), col("src") === col("id"), "left")
           .select(col("dst"), expr(s"coalesce(r6, ${base}L) div od").as("c"))
         case None => edgesOd
           .select(col("dst"), expr(s"${base}L div od").as("c"))
       }
-      // No mid-loop checkpoints (r17): each hop's rank table feeds
-      // exactly ONE parent (the next hop's broadcast or the final
-      // join), so the whole loop is a single lazy plan — in the hinted
-      // regime every hop materializes exactly once anyway, inside its
-      // broadcast build, and the former every-2nd-hop localCheckpoints
-      // were pure duplicate materializations (measured: 22 → 9 jobs,
-      // warm 4.99 → 2.9 s at sf0.1/32 cores). Past the hint ceiling
-      // the chain is one plan of shuffle joins, planned statically like
-      // every hop here.
+      // No mid-loop checkpoints, unlike the `expand` loops: each hop's
+      // rank table feeds exactly ONE parent (the next hop's broadcast or
+      // the final join), so the loop is a single lazy plan in which every
+      // hinted hop materializes exactly once, inside its broadcast build;
+      // a checkpoint would materialize it a second time.
       val next = contrib
         .groupBy("dst").agg(sum("c").as("sc"))
         .select(col("dst").as("id"),
           (lit(150000L) + expr("sc * 17 div 20")).as("r6"))
-      // Lineage cap for the NON-hinted regime (r18, advisor): past the
-      // broadcast ceiling nothing materializes per hop, so a
-      // caller-chosen large `iters` would chain 2·iters shuffles into
-      // one plan whose analysis and planning cost grows superlinearly. A
-      // checkpoint every 5th hop bounds the chain; in the hinted
-      // regime (every bench graph) each hop already materializes
-      // inside its broadcast build and this never fires.
+      // Lineage cap past the broadcast ceiling: there nothing
+      // materializes per hop, so a large `iters` would chain 2·iters
+      // shuffles into one plan whose analysis and planning cost grows
+      // superlinearly. A checkpoint every 5th hop bounds the chain.
       r = Some(
-        if (!hint && k % 5 == 0 && k < iters) next.localCheckpoint()
+        if (g.nodeCount > FrontierHintRows && k % 5 == 0 && k < iters)
+          next.localCheckpoint()
         else next)
     }
-    // decode the long-keyed rank table back to string ids (one
-    // broadcast-gated join against the persisted dictionary), then
-    // reconstitute the dense per-node view exactly as before
-    val decoded = r.get
-      .join(if (g.dictCount <= FrontierHintRows)
-          broadcast(dict.select(col("nid"), col("id").as("sid")))
-        else dict.select(col("nid"), col("id").as("sid")),
-        col("id") === col("nid"))
-      .select(col("sid").as("id"), col("r6"))
-    rebind(spark, g.nodes).select(col("id")).join(maybeBc(decoded), Seq("id"), "left")
+    rebind(spark, g.nodes).select(col("id"))
+      .join(hinted(decode(g, r.get), g.nodeCount), Seq("id"), "left")
       .select(col("id"), coalesce(col("r6"), lit(150000L)).as("r6"))
   }
+
+  /** A rank table `r` (id = [[Graph.dict]] nid, r6) keyed by the string
+    * id again: one broadcast-gated join against the persisted
+    * dictionary. A key that is no nid drops. */
+  private def decode(g: Graph, r: DataFrame): DataFrame =
+    r.join(hinted(rebind(r.sparkSession, g.dict).select(col("nid"), col("id").as("sid")),
+        g.dictCount), col("id") === col("nid"))
+      .select(col("sid").as("id"), col("r6"))
 
   /** Personalized PageRank: the random walk restarts at `seed` instead
     * of teleporting uniformly — the relevance-to-a-node ranking a
@@ -455,79 +411,39 @@ object GraphOps {
     require(iters >= 1, s"personalizedPagerank needs >= 1 iteration")
     val spark = nonAdaptive(g.nodes.sparkSession)
     import spark.implicits._
-    val dict = rebind(spark, g.dict)
     val edgesOd = rebind(spark, g.edgesOd)
-    // the builder persists g.nodes — a localCheckpoint on top was a
-    // duplicate materialization job per rep (r17)
-    val nodes = rebind(spark, g.nodes).select(col("id"))
-    // the loop runs on the dictionary's LONG nids (Graph.dict — guide
-    // §2.3 narrower keys, shared with pagerank); the seed's nid is a
-    // 1-row bounded lookup against the persisted dictionary. A seed
-    // absent from the graph maps to the impossible nid −1: the teleport
-    // row then matches no edge and no dict entry, reproducing the
-    // string-keyed behavior (all-zero ranks) exactly.
-    val seedNid = dict.filter(col("id") === seed).select("nid")
+    // the loop runs on the dictionary's LONG nids (Graph.dict, shared
+    // with pagerank); the seed's nid is a 1-row bounded lookup against
+    // the persisted dictionary. A seed absent from the graph maps to the
+    // impossible nid −1: the teleport row then matches no edge and no
+    // dict entry, so every rank is zero.
+    val seedNid = rebind(spark, g.dict).filter(col("id") === seed).select("nid")
       .limit(2).collect().headOption.map(_.getLong(0)).getOrElse(-1L)
     // teleport rides INSIDE the hop aggregation as a second summed
-    // column (r18): contributions carry (c, t=0), the teleport row
-    // (seed, c=0, t=150000) — r6 = sum(c)·17 div 20 + sum(t) is exactly
-    // the former two-aggregation form (the extra c=0 row never moves
-    // sum(c); a teleport-only node gets 0·17 div 20 + 150000), and the
-    // per-hop plan drops from two groupBy Exchanges to one.
+    // column, so a hop has one groupBy exchange: contributions carry
+    // (c, t=0), the teleport row (seed, c=0, t=150000), and
+    // r6 = sum(c)·17 div 20 + sum(t) (the c=0 row never moves sum(c); a
+    // teleport-only node gets 0·17 div 20 + 150000).
     val teleport = Seq((seedNid, 0L, 150000L)).toDF("id", "c", "t")
-    var r = Seq((seedNid, 1000000L)).toDF("id", "r6").localCheckpoint()
-    var rRows = 1L
-    for (k <- 1 to iters) {
-      // the broadcast gate MEASURES the sparse rank table — a small
-      // reached set stays broadcast even on a huge graph; past the
-      // ceiling it falls back to a shuffle join, the right plan at that
-      // size. EVERY hop is materialized + counted (r18): the r17 shape
-      // (checkpoint every 2nd hop, final-hop elision) left chained
-      // two-hop plans whose broadcast builds and final action re-ran
-      // each uncheckpointed hop's full edge scan — 6 edge-cache scans
-      // per rep where the hop count needs only 4 (and the driver's
-      // 32-core run blew to 5.7 s vs its 2.0-3.2 band on exactly that
-      // shape). Per-hop checkpoints make each hop execute exactly once;
-      // the counts are metadata-cheap on the materialized table and keep
-      // the gate exact on every hop (the stale-count/max-out-degree
-      // machinery this replaces existed only because counts were
-      // skipped on odd hops).
-      def maybeBc(df: DataFrame) =
-        if (rRows <= FrontierHintRows) broadcast(df) else df
-      // contribution per EDGE from the shared adjacency (Graph.edgesOd,
-      // r18): r6(src) div od(src) is a function of src only, so summing
-      // it per dst over edge rows equals the former per-src
-      // precomputation exactly — and the node-sized outdeg⋈rank join
-      // (plus its per-rep outdeg checkpoint) drops out of every hop.
-      // Damping applies to the per-node SUM (0.85·Σ r/outdeg), same
-      // recurrence as pagerank — per-edge flooring would zero out
-      // low-mass frontier contributions.
-      val next = edgesOd.join(maybeBc(r), col("src") === col("id"))
+    val r0 = Seq((seedNid, 1000000L)).toDF("id", "r6").localCheckpoint()
+    // The rank table is measured on every hop, so a small reached set
+    // stays broadcast even on a huge graph. A hop's contribution is per
+    // EDGE of the shared adjacency (Graph.edgesOd): r6(src) div od(src)
+    // is a function of src only, so summing it per dst over edge rows
+    // is the same integer as dividing once per src. Damping applies to
+    // the per-node SUM (0.85·Σ r/outdeg), the recurrence of pagerank —
+    // per-edge flooring would zero out low-mass frontier contributions.
+    val r = expand(r0, 1L, iters) { (rank, _) =>
+      edgesOd.join(rank, col("src") === col("id"))
         .select(col("dst").as("id"), expr("r6 div od").as("c"),
           lit(0L).as("t"))
         .unionByName(teleport)
         .groupBy("id")
         .agg((expr("sum(c) * 17 div 20") + sum("t")).as("r6"))
-      if (k == iters) {
-        // final rank table feeds only the closing join — checkpointing
-        // and counting it were two pure-overhead jobs per rep (r17)
-        r = next
-      } else {
-        r = next.localCheckpoint()
-        rRows = r.count()
-      }
-    }
-    // decode nids back to string ids (inner join against the dictionary
-    // — every rank key is a dict nid by construction; a −1 sentinel
-    // teleport row drops here, exactly like a non-node seed id used to
-    // drop in the nodes join), then the dense per-node view as before
-    val decoded = r
-      .join(if (g.dictCount <= FrontierHintRows)
-          broadcast(dict.select(col("nid"), col("id").as("sid")))
-        else dict.select(col("nid"), col("id").as("sid")),
-        col("id") === col("nid"))
-      .select(col("sid").as("id"), col("r6"))
-    nodes.join(decoded, Seq("id"), "left")
+    }.last
+    // the −1 sentinel teleport row drops in the decode, and nodes never
+    // reached carry zero mass
+    rebind(spark, g.nodes).select(col("id")).join(decode(g, r), Seq("id"), "left")
       .select(col("id"), coalesce(col("r6"), lit(0L)).as("r6"))
   }
 

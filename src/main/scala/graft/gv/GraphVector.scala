@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge.{nonAdaptive, rebind}
 import graft.functions.VectorFunctions
-import graft.graph.Graph
-import graft.graph.GraphOps.FrontierHintRows
+import graft.graph.{Graph, GraphOps}
 
 /** Graph + vector hybrid retrieval — the reference's
   * `HybridGraphVectorDB` (jcolano/fastpyvectordb
@@ -30,7 +29,8 @@ import graft.graph.GraphOps.FrontierHintRows
   * Scale: seeds are one TakeOrderedAndProject; each hop is one join of a
   * frontier (≤ reachable set) against the edges table, anti-joined with
   * the visited set — the standard iterative-BFS-on-DataFrames shape with
-  * bounded depth, every join broadcast-gated on a measured row count.
+  * bounded depth, run by the graph loops' `GraphOps.expand`, every join
+  * broadcast-gated on a measured row count.
   * The rerank is one aggregation plus one outer join against the
   * embeddings, which adaptive execution cannot re-plan either (a left
   * outer join broadcasts only its right side). So both operators plan
@@ -60,57 +60,25 @@ object GraphVector {
       .select("id", "sim")
       .orderBy(desc("sim"), col("id"))
       .limit(k * 2)
-      .localCheckpoint() // seeds are reused 2·hops times — cut lineage
+      .localCheckpoint() // seeds feed the seed scores, max_sim and every hop
     val maxSeed = seeds.agg(max("sim").as("max_sim"))
-
-    val edges = rebind(spark, g.edges)
-    val e0 = edgeType.map(t => edges.filter(col("type") === t)).getOrElse(edges)
-    val und = e0.select(col("src").as("a"), col("dst").as("b"))
-      .union(e0.select(col("dst").as("a"), col("src").as("b")))
-
-    var visited = seeds.select(col("id").as("vid"))
-    var frontier = seeds.select(col("id"))
-    var acc = seeds.select(col("id"), round(col("sim"), 6).as("score"),
-      lit(0).as("hop"))
-    // Every frontier is localCheckpoint'ed, so its exact row count is a
-    // cheap driver-side fact — hint the broadcast only when the MEASURED
-    // size is safely bounded (never a forced broadcast of an unbounded
-    // set: a huge hop-2 frontier at scale simply skips the hint and the
-    // edges side shuffles, which is then the right plan anyway).
-    var frontierRows = 2L * k
-    var visitedRows = 2L * k
-    for (hop <- 1 to expandHops) {
-      val f = if (frontierRows <= FrontierHintRows)
-        broadcast(frontier) else frontier
-      val v = if (visitedRows <= FrontierHintRows)
-        broadcast(visited) else visited
-      val last = hop == expandHops
-      val next0 = f
-        .join(und, col("id") === col("a"))
+    val e = GraphOps.ofType(rebind(spark, g.edges), edgeType)
+    val und = e.select(col("src").as("a"), col("dst").as("b"))
+      .union(e.select(col("dst").as("a"), col("src").as("b")))
+    // the seed set's size is bounded by its limit: 2k rows
+    val hops = GraphOps.expand(seeds.select(col("id")), 2L * k, expandHops,
+        Some(seeds.select(col("id").as("vid")) -> "id")) { (f, v) =>
+      f.join(und, col("id") === col("a"))
         .select(col("b").as("id")).distinct()
-        .join(v, col("id") === col("vid"), "left_anti")
-      // The LAST hop's frontier has exactly one consumer (acc) — no
-      // next hop reads it and the visited union is dead — so its
-      // checkpoint + gate count were two pure-overhead jobs per rep
-      // (r17); earlier hops keep the materialize-and-measure contract
-      // (reused by acc + visited + the next hop over the 2×-edges
-      // union, and the count drives the broadcast gate).
-      val next = if (last) next0 else next0.localCheckpoint()
-      if (!last) {
-        val n = next.count() // materialized: counting is metadata-cheap
-        frontierRows = n
-        visitedRows += n
-      }
-      acc = acc.union(
-        next.crossJoin(broadcast(maxSeed))
-          .selectExpr("id", s"round(${hopScore(vw, gw, hop)}, 6) as score",
-            s"$hop as hop"))
-      if (!last) {
-        visited = visited.union(next.select(col("id").as("vid")))
-        frontier = next
-      }
+        .join(v.get, col("id") === col("vid"), "left_anti")
     }
-    acc.orderBy(desc("score"), col("id")).limit(k)
+    val seedScores = seeds.select(col("id"), round(col("sim"), 6).as("score"),
+      lit(0).as("hop"))
+    hops.zipWithIndex.foldLeft(seedScores) { case (acc, (next, i)) =>
+      acc.union(next.crossJoin(broadcast(maxSeed))
+        .selectExpr("id", s"round(${hopScore(vw, gw, i + 1)}, 6) as score",
+          s"${i + 1} as hop"))
+    }.orderBy(desc("score"), col("id")).limit(k)
   }
 
   /** DuckDB oracle: embedded nodes = customers with hash-vector

@@ -221,10 +221,10 @@ object IndexStore extends org.apache.spark.internal.Logging {
                 val sibling =
                   path.take(path.lastIndexOf('/') + 1) + st.getPath.getName
                 built.remove(sibling)
-                clearState(sibling)
+                invalidateState(sibling)
               }
             f.delete(new Path(path), true)
-            clearState(path)
+            invalidateState(path)
             build(path)
             f.create(new Path(path, "_GRAFT_READY"), true).close()
             spark.catalog.refreshByPath(path)
@@ -251,7 +251,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
       change(path)
       // after the change: a table opened before or during it (an open
       // still in flight is refused by the epoch) must not be served
-      clearState(path)
+      invalidateState(path)
       f.create(new Path(path, "_GRAFT_READY"), true).close()
       spark.catalog.refreshByPath(path)
       built.add(path)
@@ -286,7 +286,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
           // mutation.
           try {
             built.remove(from)
-            clearState(from); clearState(to)
+            invalidateState(from); invalidateState(to)
             f.delete(new Path(from, "_GRAFT_READY"), false)
             val toP = new Path(to)
             f.delete(toP, true)
@@ -295,7 +295,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
               s"advance rename failed: $from -> $to")
             spark.catalog.refreshByPath(to)
             change(to)
-            clearState(to)
+            invalidateState(to)
             f.create(new Path(to, "_GRAFT_READY"), true).close()
             spark.catalog.refreshByPath(to)
             built.add(to)
@@ -314,7 +314,7 @@ object IndexStore extends org.apache.spark.internal.Logging {
   /** Force a rebuild on next ensure (test/benchmark hook). */
   def invalidate(spark: SparkSession, path: String): Unit = {
     built.remove(path)
-    clearState(path)
+    invalidateState(path)
     fs(spark, path).delete(new Path(path), true)
   }
 
@@ -361,7 +361,6 @@ object IndexStore extends org.apache.spark.internal.Logging {
     stateCache.keySet.removeIf(_.startsWith(pathPrefix))
     tables.keySet.removeIf(_._1.startsWith(pathPrefix)); ()
   }
-  private def clearState(pathPrefix: String): Unit = invalidateState(pathPrefix)
 
   // ---- opened tables: one resolved parquet relation per (path,
   // generation, session). A `spark.read.parquet` lists the table's files

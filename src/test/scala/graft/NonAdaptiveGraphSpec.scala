@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.bridge
@@ -134,5 +134,45 @@ class NonAdaptiveGraphSpec extends AnyFunSuite {
       "personalizedPagerank" -> 13, "semanticGraphSearch" -> 10,
       "graphRerank" -> 3)
     assert(counts == pinned, counts)
+  }
+
+  /** The six operators' answers, as sorted rows, for a caller on session
+    * `s`: the test graph and embeddings rebound to `s`, each result
+    * paired with the session it is bound to. */
+  private def answers(s: SparkSession): Seq[(String, SparkSession, Seq[String])] = {
+    val gs = Graph(bridge.rebind(s, g.nodes), bridge.rebind(s, g.edges))
+    val es = bridge.rebind(s, emb)
+    Seq(
+      "traverse" -> GraphOps.traverse(gs, "v0", 3),
+      "bfsPaths" -> GraphOps.bfsPaths(gs, "v0", 3, Some("T")),
+      "pagerank" -> GraphOps.pagerank(gs, 4),
+      "personalizedPagerank" -> GraphOps.personalizedPagerank(gs, "v1", 3),
+      "semanticGraphSearch" -> GraphVector.semanticGraphSearch(gs, es, q, 3, 2, 0.7, 0.3),
+      "graphRerank" -> GraphVector.graphRerank(GraphOps.traverse(gs, "v2", 2), es, q, 5)
+    ).map { case (name, df) =>
+      (name, df.sparkSession, df.collect().map(_.toString).toSeq.sorted)
+    }
+  }
+
+  test("a caller with AQE off gets frames of its own session and the answers of an AQE-on caller") {
+    for (parts <- Seq("1", "7")) {
+      def caller(aqe: String) = {
+        val s = spark.newSession()
+        s.conf.set(Aqe, aqe)
+        s.conf.set(Parts, parts)
+        s
+      }
+      val off = caller("false")
+      val byOff = answers(off)
+      byOff.foreach { case (name, session, _) =>
+        assert(session eq off, s"$name parts=$parts returned a frame of another session")
+      }
+      val byOn = answers(caller("true"))
+      assert(byOn.forall(_._3.nonEmpty), byOn)
+      byOn.zip(byOff).foreach { case ((name, _, a), (_, _, b)) =>
+        assert(a == b, s"$name parts=$parts")
+      }
+      assert(off.conf.get(Aqe) == "false" && off.conf.get(Parts) == parts)
+    }
   }
 }
