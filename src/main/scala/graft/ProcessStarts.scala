@@ -13,8 +13,19 @@ import jdk.jfr.consumer.RecordingFile
   */
 object ProcessStarts {
   /** `body`'s result and the command line of every process started
-    * meanwhile, in start order. */
+    * meanwhile, in start order. Objects dropped before the block are
+    * cleaned up whenever a GC finds them, and some cleanups start a
+    * process (a dropped Spark session's artifact dir is removed with
+    * `rm -rf`), so they are collected first: GC, then a 200 ms spell with
+    * no process start (at most 10 tries). */
   def during[T](body: => T): (T, Seq[String]) = {
+    var tries = 0
+    while (tries < 10 && { System.gc(); recorded(Thread.sleep(200))._2.nonEmpty })
+      tries += 1
+    recorded(body)
+  }
+
+  private def recorded[T](body: => T): (T, Seq[String]) = {
     val rec = new Recording()
     try {
       rec.enable("jdk.ProcessStart")

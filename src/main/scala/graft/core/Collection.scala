@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
 import graft.filter.Pred
@@ -50,9 +50,54 @@ final class VectorCollection(
   private def fs = new Path(root).getFileSystem(
     spark.sparkContext.hadoopConfiguration)
   private def dataPath = new Path(s"$root/${config.name}/data")
-  private def stagingPath = new Path(s"$root/${config.name}/data_staging")
-  private def oldPath = new Path(s"$root/${config.name}/data_old")
   private def changelogPath = s"$root/${config.name}/changelog"
+
+  /** A live dir replaced whole by a generation swap: write `staging`,
+    * retire `live` to `retired`, promote `staging`, drop `retired`. The
+    * previous generation is never deleted before the new one is in
+    * place, and [[recover]] restores exactly one of them after a crash
+    * at any step. */
+  private final class Generations(live: Path, staging: Path, retired: Path) {
+    /** If a swap died with no live dir, restore the surviving
+      * generation: the retired one when it exists (a swap that had
+      * retired the old generation but not promoted the new one rolls
+      * back), else the staged one, trusted only when its _SUCCESS
+      * marker exists. An unmarked staging dir is a write that died
+      * midway (no marker) and is torn down. */
+    def recover(): Unit =
+      if (!fs.exists(live)) {
+        if (fs.exists(retired)) fs.rename(retired, live)
+        else if (fs.exists(new Path(staging, "_SUCCESS")))
+          fs.rename(staging, live)
+        else fs.delete(staging, true)
+      }
+
+    /** Replace the live generation with what `write` puts at the staging
+      * path. */
+    def swap(write: String => Unit): Unit = {
+      recover()
+      fs.delete(staging, true)
+      write(staging.toString)
+      fs.delete(retired, true)
+      if (fs.exists(live))
+        require(fs.rename(live, retired), s"retire failed for $live")
+      if (!fs.rename(staging, live)) {
+        if (fs.exists(retired)) fs.rename(retired, live) // roll back
+        throw new IllegalStateException(s"swap failed for $live")
+      }
+      fs.delete(retired, true)
+      // Spark's FileStatusCache keeps the old listing for this path — a
+      // reader created after the swap would still see the previous
+      // generation's files (observed: stale search hits after upsert).
+      spark.catalog.refreshByPath(live.toString)
+    }
+  }
+
+  private def dataSwap = new Generations(dataPath,
+    new Path(s"$root/${config.name}/data_staging"),
+    new Path(s"$root/${config.name}/data_old"))
+  private def logSwap = new Generations(new Path(changelogPath),
+    new Path(s"$changelogPath.staging"), new Path(s"$changelogPath.old"))
 
   def df: DataFrame = read(generation)
 
@@ -60,7 +105,7 @@ final class VectorCollection(
     * relation and every index path, so a call that needs both computes
     * it once. */
   private def generation: String = {
-    recover()
+    dataSwap.recover()
     // a clear contract violation beats the path-not-found the parquet
     // reader would throw (the reference returns [] but a DataFrame needs
     // a schema, which an empty collection doesn't have yet)
@@ -77,20 +122,6 @@ final class VectorCollection(
   private def read(gen: String): DataFrame =
     graft.index.IndexStore.table(spark, dataPath.toString, gen)
 
-  /** Crash recovery: if a swap died between retiring the old generation
-    * and promoting the new one, exactly one of data_old/data_staging holds
-    * the surviving generation — restore it. Staging is only trusted when
-    * its _SUCCESS marker exists (a first-commit crash mid-write leaves a
-    * partial staging dir with no marker — that must not become the live
-    * generation); an unmarked staging dir is torn down instead. */
-  private def recover(): Unit =
-    if (!fs.exists(dataPath)) {
-      if (fs.exists(oldPath)) fs.rename(oldPath, dataPath)
-      else if (fs.exists(new Path(stagingPath, "_SUCCESS")))
-        fs.rename(stagingPath, dataPath)
-      else fs.delete(stagingPath, true)
-    }
-
   /** CDC: every mutation appends (collection, event_type, id, ts) rows —
     * the reference's ObservableCollection event emission (realtime.py:
     * 325-442). Consume in batch via [[changelog]] or as a stream via
@@ -98,7 +129,7 @@ final class VectorCollection(
     * microbatch).
     */
   private def logEvents(eventType: String, ids: DataFrame): Unit = {
-    recoverChangelog()
+    logSwap.recover()
     ids.select(
         lit(config.name).as("collection"),
         lit(eventType).as("event_type"),
@@ -107,64 +138,32 @@ final class VectorCollection(
       .write.mode("append").parquet(changelogPath)
   }
 
-  /** Changelog analog of [[recover]]: a [[trimChangelog]] crash between
-    * retiring the live log and promoting the staged one leaves NO log at
-    * the live path — the surviving generation is the staged trim when
-    * its _SUCCESS marker exists (the write completed before the swap
-    * began; promoting finishes the trim), else the retired original
-    * (roll back). Without this, every changelog read fails until someone
-    * renames the sibling dir back by hand. */
-  private def recoverChangelog(): Unit = {
-    val live = new Path(changelogPath)
-    if (!fs.exists(live)) {
-      val staging = new Path(s"$changelogPath.staging")
-      val retired = new Path(s"$changelogPath.old")
-      if (fs.exists(new Path(staging, "_SUCCESS"))) {
-        fs.rename(staging, live)
-        fs.delete(retired, true)
-      } else if (fs.exists(retired)) fs.rename(retired, live)
-    }
-  }
-
   def changelog: DataFrame = {
-    recoverChangelog()
+    logSwap.recover()
     spark.read.parquet(changelogPath)
   }
 
   /** Trim the CDC changelog to its most recent `keepLast` events (the
     * reference's bounded history buffer, realtime.py:187-190, at
-    * collection-storage granularity). The retained tail is written to a
-    * staging dir first and swapped in; a crash mid-swap can leave the
-    * live path briefly empty, and [[recoverChangelog]] (run by every
-    * changelog reader and by the next trim) restores the surviving
-    * generation — so readers always see either the old or the new log,
-    * never a truncated one. Returns events dropped.
+    * collection-storage granularity). The retained tail goes through the
+    * same generation swap as the data; a crash mid-swap is recovered by
+    * every changelog reader and by the next trim, so readers always see
+    * either the old or the new log, never a truncated one. Returns
+    * events dropped.
     * NOTE this rewrites history a changeFeed stream has already
     * consumed — run it between streaming restarts, as the reference
     * does with its replay buffer. */
   def trimChangelog(keepLast: Int): Long = {
     require(keepLast >= 0, s"keepLast must be >= 0, got $keepLast")
-    recoverChangelog()
+    logSwap.recover()
     if (!fs.exists(new Path(changelogPath))) return 0L
     val total = changelog.count()
     val drop = total - keepLast
     if (drop <= 0) return 0L
-    val staging = new Path(s"$changelogPath.staging")
-    val retired = new Path(s"$changelogPath.old")
-    fs.delete(staging, true)
-    changelog
+    logSwap.swap(changelog
       .orderBy(col("ts").desc, col("id").desc)
       .limit(keepLast)
-      .write.parquet(staging.toString)
-    fs.delete(retired, true)
-    require(fs.rename(new Path(changelogPath), retired),
-      s"retire failed for $changelogPath")
-    if (!fs.rename(staging, new Path(changelogPath))) {
-      fs.rename(retired, new Path(changelogPath)) // roll back
-      throw new IllegalStateException(s"swap failed for $changelogPath")
-    }
-    fs.delete(retired, true)
-    spark.catalog.refreshByPath(changelogPath)
+      .write.parquet(_))
     drop
   }
 
@@ -186,33 +185,17 @@ final class VectorCollection(
     }
 
   def changeFeed: DataFrame = {
-    recoverChangelog()
+    logSwap.recover()
     spark.readStream.schema(
       "collection string, event_type string, id string, ts timestamp")
       .parquet(changelogPath)
   }
 
-  def isEmpty: Boolean = { recover(); !fs.exists(dataPath) }
+  def isEmpty: Boolean = { dataSwap.recover(); !fs.exists(dataPath) }
 
-  /** Replace the data generation: write staging, retire the old
-    * generation to data_old, promote staging, drop data_old. A crash at
-    * any point leaves a recoverable state ([[recover]]) — the previous
-    * generation is never deleted before the new one is in place. */
+  /** Replace the data generation through the crash-safe swap. */
   private def commit(newDf: DataFrame): Unit = {
-    fs.delete(stagingPath, true)
-    newDf.write.parquet(stagingPath.toString)
-    fs.delete(oldPath, true)
-    if (fs.exists(dataPath))
-      require(fs.rename(dataPath, oldPath), s"retire failed for $dataPath")
-    if (!fs.rename(stagingPath, dataPath)) {
-      if (fs.exists(oldPath)) fs.rename(oldPath, dataPath) // roll back
-      throw new IllegalStateException(s"swap failed for $dataPath")
-    }
-    fs.delete(oldPath, true)
-    // Spark's FileStatusCache keeps the old listing for this path — a
-    // reader created after the swap would still see the previous
-    // generation's files (observed: stale search hits after upsert).
-    spark.catalog.refreshByPath(dataPath.toString)
+    dataSwap.swap(newDf.write.parquet(_))
     graft.index.IndexStore.invalidateState(dataPath.toString)
   }
 
@@ -249,20 +232,9 @@ final class VectorCollection(
       // next search rebuilds) — a maintenance failure must never make a
       // COMMITTED insert report failure or skip its CDC events. Only
       // indexes that already exist advance; absent ones build lazily.
-      if (annKind.isDefined)
-        graft.index.IndexStore.advance(spark, annIndexPath(prevGen),
-            annIndexPath(gen))(p =>
-          config.metric match {
-            case "cosine" =>
-              graft.index.LshIndex.append(spark, snap, "vector", "id",
-                config.dimensions, p, metaColumns(snap), compact = true)
-            case "ip" =>
-              graft.index.MipsIndex.append(spark, snap, "vector", "id", p,
-                metaColumns(snap), stringIds = true)
-            case _ =>
-              graft.index.IvfIndex.append(spark, snap, "vector", "id", p,
-                metaColumns(snap), stringIds = true)
-          })
+      annFamily.foreach(f =>
+        graft.index.IndexStore.advance(spark, annIndexPath(f, prevGen),
+          annIndexPath(f, gen))(f.append(_, snap)))
       if (snap.columns.contains("text"))
         graft.index.IndexStore.advance(spark, textIndexPath(prevGen),
             textIndexPath(gen))(p =>
@@ -383,65 +355,86 @@ final class VectorCollection(
     * committed mutation moves the path and a stale index can never be
     * served — the wiring that makes the persistent index layer follow
     * the collection the way the reference's in-memory indexes follow its
-    * mutations (`vectordb_optimized.py:337-365, 467-501`). The index
-    * family follows the metric: sign-hyperplane LSH is a cosine family,
-    * so cosine collections carry LSH buckets, l2 collections carry an
-    * IVF cell layout (k-means Voronoi = native l2 geometry), and ip
-    * collections carry the MIPS augmented-cell layout (the L2
-    * augmentation turns inner-product order into augmented-L2 order —
-    * graft.index.MipsIndex). */
-  private def annKind: Option[String] = config.metric match {
-    case "cosine" => Some("colllsh")
-    case "l2"     => Some("collivf")
-    case "ip"     => Some("collmips")
-    case _        => None
-  }
+    * mutations (`vectordb_optimized.py:337-365, 467-501`). */
+  private def annIndexPath(f: AnnFamily, gen: String): String =
+    graft.index.IndexStore.pathAt(s"$root/${config.name}", f.kind, gen)
 
-  private def annIndexPath(gen: String): String =
-    graft.index.IndexStore.pathAt(s"$root/${config.name}",
-      annKind.getOrElse("collnone"), gen)
-
-  /** A `none` collection is searched by text and metadata only. */
-  private def noAnnFamily(metric: String) = new IllegalArgumentException(
-    s"no ANN index family for metric '$metric'")
+  /** One ANN index layout: its index-store kind, and how to build it over
+    * a data generation, append new rows to it, probe it for one query
+    * (`multiProbe` is every family's recall knob) and for a (qid, qvec)
+    * relation. The first argument of each is the index path. */
+  private final class AnnFamily(val kind: String,
+      val build: (String, DataFrame) => Unit,
+      val append: (String, DataFrame) => Unit,
+      val search: (String, Seq[Double], Int, Option[Column], Boolean) => DataFrame,
+      val searchBatch: (String, DataFrame, Int) => DataFrame)
 
   /** Fixed deterministic IVF geometry for l2 collections (same
     * oracle-friendly codebook family as the testdata IVF paths). */
   private val IvfCells = 16
   private val IvfNprobe = 4
+  private def nprobe(multiProbe: Boolean) =
+    if (multiProbe) IvfNprobe * 2 else IvfNprobe
+
+  /** The index family follows the metric: sign-hyperplane LSH is a
+    * cosine family, so cosine collections carry LSH buckets, l2
+    * collections carry an IVF cell layout (k-means Voronoi = native l2
+    * geometry), and ip collections carry the MIPS augmented-cell layout
+    * (the L2 augmentation turns inner-product order into augmented-L2
+    * order — graft.index.MipsIndex). Other metrics have none. */
+  private val annFamily: Option[AnnFamily] = {
+    import graft.index.{IvfIndex, LshIndex, MipsIndex}
+    config.metric match {
+      // compact bucket layout: collection indexes are rebuilt or advanced
+      // on every mutation — the ingest-heavy regime where a 64-dir write
+      // per generation is pure small-file overhead; probes still prune on
+      // band_idx and push band_val
+      case "cosine" => Some(new AnnFamily("colllsh",
+        (p, d) => LshIndex.build(spark, d, "vector", "id",
+          config.dimensions, p, metaColumns(d), compact = true),
+        (p, d) => LshIndex.append(spark, d, "vector", "id",
+          config.dimensions, p, metaColumns(d), compact = true),
+        (p, q, k, f, mp) => LshIndex.search(spark, p, "vector", "id", q,
+          config.dimensions, k, f, multiProbe = mp),
+        (p, qs, k) => LshIndex.searchBatch(spark, p, "vector", "id", qs,
+          config.dimensions, k)))
+      case "l2" => Some(new AnnFamily("collivf",
+        (p, d) => IvfIndex.build(spark, d, "vector", "id",
+          graft.knn.Ann.fixedIvfModel(IvfCells, config.dimensions), p,
+          metaColumns(d), stringIds = true),
+        (p, d) => IvfIndex.append(spark, d, "vector", "id", p, metaColumns(d),
+          stringIds = true),
+        (p, q, k, f, mp) => IvfIndex.search(spark, p, "vector", "id", q,
+          nprobe(mp), k, f, metric = "l2"),
+        (p, qs, k) => IvfIndex.searchBatchDf(spark, p, "vector", "id", qs,
+          IvfNprobe, k, metric = "l2")))
+      case "ip" => Some(new AnnFamily("collmips",
+        (p, d) => MipsIndex.build(spark, d, "vector", "id", IvfCells, p,
+          metaColumns(d), stringIds = true),
+        (p, d) => MipsIndex.append(spark, d, "vector", "id", p, metaColumns(d),
+          stringIds = true),
+        (p, q, k, f, mp) => MipsIndex.search(spark, p, "vector", "id", q,
+          nprobe(mp), k, f),
+        (p, qs, k) => MipsIndex.searchBatchDf(spark, p, "vector", "id", qs,
+          IvfNprobe, k)))
+      case _ => None
+    }
+  }
+
+  /** A `none` collection is searched by text and metadata only. */
+  private def family: AnnFamily = annFamily.getOrElse(
+    throw new IllegalArgumentException(
+      s"no ANN index family for metric '${config.metric}'"))
 
   /** Build-if-absent the collection's persistent ANN index (build once,
     * probe many; rebuilds only when the data generation changed and no
     * incremental advance covered it). Returns the index path. */
   def ensureAnnIndex(): String = {
-    // the data is opened only inside a build closure: a ready index
+    val f = family
+    // the data is opened only inside the build closure: a ready index
     // serves without touching the collection's files
-    config.metric match {
-      case "cosine" =>
-        // compact bucket layout (r18): collection indexes are rebuilt or
-        // advanced on every mutation — the ingest-heavy regime where a
-        // 64-dir write per generation is pure small-file overhead
-        // (guide §6); probes still prune on band_idx + push band_val
-        graft.index.IndexStore.ensure(spark, annIndexPath(fingerprint)) { p =>
-          val data = df
-          graft.index.LshIndex.build(spark, data, "vector", "id",
-            config.dimensions, p, metaColumns(data), compact = true)
-        }
-      case "l2" =>
-        graft.index.IndexStore.ensure(spark, annIndexPath(fingerprint)) { p =>
-          val data = df
-          graft.index.IvfIndex.build(spark, data, "vector", "id",
-            graft.knn.Ann.fixedIvfModel(IvfCells, config.dimensions), p,
-            metaColumns(data), stringIds = true)
-        }
-      case "ip" =>
-        graft.index.IndexStore.ensure(spark, annIndexPath(fingerprint)) { p =>
-          val data = df
-          graft.index.MipsIndex.build(spark, data, "vector", "id",
-            IvfCells, p, metaColumns(data), stringIds = true)
-        }
-      case m => throw noAnnFamily(m)
-    }
+    graft.index.IndexStore.ensure(spark, annIndexPath(f, fingerprint))(
+      f.build(_, df))
   }
 
   /** ANN search over the collection's own persistent LSH index: 4-of-64
@@ -453,7 +446,7 @@ final class VectorCollection(
     * search rebuilds (or, after a pure insert, reuses the
     * incrementally-advanced index).
     *
-    * The index family follows the metric ([[annKind]]): cosine probes
+    * The index family follows the metric ([[annFamily]]): cosine probes
     * LSH buckets, l2 probes IVF cells (reranked with the true l2
     * distance), ip probes MIPS augmented cells (reranked with the true
     * dot product). `multiProbe` is the recall knob of every family —
@@ -462,21 +455,8 @@ final class VectorCollection(
   def searchAnn(queryVec: Seq[Double], k: Int = 10,
       filter: Option[Pred] = None, multiProbe: Boolean = false): DataFrame = {
     logSearch("ann", k)
-    config.metric match {
-      case "cosine" =>
-        graft.index.LshIndex.search(spark, ensureAnnIndex(), "vector",
-          "id", queryVec, config.dimensions, k, filter.map(_.column),
-          multiProbe = multiProbe)
-      case "l2" =>
-        graft.index.IvfIndex.search(spark, ensureAnnIndex(), "vector",
-          "id", queryVec, if (multiProbe) IvfNprobe * 2 else IvfNprobe, k,
-          filter.map(_.column), metric = "l2")
-      case "ip" =>
-        graft.index.MipsIndex.search(spark, ensureAnnIndex(), "vector",
-          "id", queryVec, if (multiProbe) IvfNprobe * 2 else IvfNprobe, k,
-          filter.map(_.column))
-      case m => throw noAnnFamily(m)
-    }
+    family.search(ensureAnnIndex(), queryVec, k, filter.map(_.column),
+      multiProbe)
   }
 
   /** The text index path of data generation `gen`. */
@@ -561,18 +541,7 @@ final class VectorCollection(
     * augmented-cell probe with true-dot rerank. */
   def searchAnnBatch(queries: DataFrame, k: Int = 10): DataFrame = {
     logSearch("ann_batch", k)
-    config.metric match {
-      case "cosine" =>
-        graft.index.LshIndex.searchBatch(spark, ensureAnnIndex(),
-          "vector", "id", queries, config.dimensions, k)
-      case "l2" =>
-        graft.index.IvfIndex.searchBatchDf(spark, ensureAnnIndex(),
-          "vector", "id", queries, IvfNprobe, k, metric = "l2")
-      case "ip" =>
-        graft.index.MipsIndex.searchBatchDf(spark, ensureAnnIndex(),
-          "vector", "id", queries, IvfNprobe, k)
-      case m => throw noAnnFamily(m)
-    }
+    family.searchBatch(ensureAnnIndex(), queries, k)
   }
 
   def get(ids: Seq[String]): DataFrame = df.filter(col("id").isin(ids: _*))

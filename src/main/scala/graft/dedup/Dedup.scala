@@ -64,8 +64,6 @@ object Dedup {
     while (m.find()) out += m.group()
     out.toArray
   }
-  def charHashOf(s: String): Long =
-    s.foldLeft(0L)((a, c) => (a * CharB + c.toInt) % HashM)
   /** Sorted ascending: the candidate-verification kernel
     * ([[intersectSize]]) is a merge scan over sorted arrays. Sorting
     * changes no downstream value — minhash is a min over the set,

@@ -50,9 +50,6 @@ object StorageCompression {
   def int8DecodeExpr(codeCol: String): String =
     s"transform($codeCol, c -> c * scale + mn)"
 
-  def int8EncodeSql(vecCol: String): String =
-    s"list_transform($vecCol, x -> floor((x::DOUBLE - mn) / scale)::INT)"
-
   /** Round-trip summary for the catalog oracle: corpus size, bytes and
     * ratios per method, and the int8 reconstruction stats (max abs error
     * must stay below one quantization step). fp16 bytes are exact

@@ -120,6 +120,54 @@ class CollectionSpec extends AnyFunSuite {
     assert(coll.count() == 1)
   }
 
+  test("a swap that crashed reads back exactly the old or the new generation") {
+    import org.apache.spark.sql.DataFrame
+    val root = Files.createTempDirectory("graft_vdb_swap")
+    val db = new VectorDb(spark, root.toString)
+    val oldIds = Seq("a", "b")
+    val newIds = Seq("c", "d", "e")
+    def events(ids: Seq[String]) = ids.toDF("id").select(
+      lit("c").as("collection"), lit("insert").as("event_type"), col("id"),
+      current_timestamp().as("ts"))
+    // the two swapped dirs: (live, staging, retired, a generation holding
+    // `ids`, how the collection reads it back)
+    val dirs = Seq[(String, String, String, Seq[String] => DataFrame,
+        graft.core.VectorCollection => DataFrame)](
+      ("data", "data_staging", "data_old",
+        ids => rows(ids.zipWithIndex: _*), _.df),
+      ("changelog", "changelog.staging", "changelog.old", events, _.changelog))
+    // every state a swap can die in with no live dir: (retired generation
+    // present, staging present and whether its _SUCCESS marker is, the
+    // generation that must read back — None: nothing, staging torn down)
+    val states = Seq(
+      ("unmarked staging only", false, Some(false), None),
+      ("marked staging only", false, Some(true), Some(newIds)),
+      ("retired only", true, None, Some(oldIds)),
+      ("retired plus marked staging", true, Some(true), Some(oldIds)))
+    for ((live, staging, retired, gen, read) <- dirs;
+         ((state, hasRetired, stagingMarked, want), i) <- states.zipWithIndex) {
+      val name = s"$live$i"
+      val coll = db.createCollection(name, dimensions = 8)
+      val dir = root.resolve(name)
+      if (hasRetired) gen(oldIds).write.parquet(dir.resolve(retired).toString)
+      stagingMarked.foreach { marked =>
+        gen(newIds).write.parquet(dir.resolve(staging).toString)
+        if (!marked) Files.delete(dir.resolve(staging).resolve("_SUCCESS"))
+      }
+      want match {
+        case Some(ids) =>
+          assert(read(coll).select("id").as[String].collect().sorted.toSeq ==
+            ids, s"$live, $state")
+        case None =>
+          intercept[Exception](read(coll).collect())
+          assert(!Files.exists(dir.resolve(staging)),
+            s"$live, $state: the unmarked staging dir was left behind")
+      }
+      assert(Files.exists(dir.resolve(live)) == want.isDefined,
+        s"$live, $state")
+    }
+  }
+
   test("collection-level search honors config metric and pre-score filter") {
     val root = Files.createTempDirectory("graft_vdb_search").toString
     val db = new VectorDb(spark, root)

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * python3+duckdb toolchain is absent (it is present on the driver box
   * and this one; oracle_check imports duckdb at module scope). Also
   * guards the tree's one session factory: code under `src/main/scala`
-  * builds sessions only through [[LocalSpark]], and compiles and
-  * self-tests the benchmark (perfbench/), which sbt does not compile.
+  * builds sessions only through [[LocalSpark]], compiles and self-tests
+  * the benchmark (perfbench/), which sbt does not compile, and keeps the
+  * verify skill's list of `SPARK_GRAFT_*` knobs equal to the ones the
+  * code reads.
   * One case runs an oracle against the engine on a modified fixture: a
   * corpus shape the testdata lacks (a parallel graph edge).
   */
@@ -85,6 +87,28 @@ class ToolsSpec extends AnyFunSuite {
     val (code, out) = run("python3", "perfbench/run.py", "--selftest")
     assert(code == 0, s"perfbench self-test failed:\n$out")
     assert(out.contains("self-test passed"), out)
+  }
+
+  test("the SPARK_GRAFT_* knobs the code reads are the ones the verify skill documents") {
+    import scala.jdk.CollectionConverters._
+    val Knob = """SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]""".r
+    def knobs(text: String): Set[String] = Knob.findAllIn(text).toSet
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val code = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+      .map(f => java.nio.file.Files.readString(f)
+        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", ""))
+    val read = knobs(code.mkString("\n"))
+    assert(read.nonEmpty, s"no SPARK_GRAFT_* name under $root")
+    val documented = knobs(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(".claude/skills/verify/SKILL.md")))
+    assert(read == documented,
+      s"read but undocumented: ${read -- documented}; " +
+        s"documented but never read: ${documented -- read}")
+    val preflight = knobs(java.nio.file.Files.readString(
+      java.nio.file.Paths.get("tools/preflight_driver.sh")))
+    assert(preflight.subsetOf(read),
+      s"tools/preflight_driver.sh sets knobs the code never reads: ${preflight -- read}")
   }
 
   test("SparkSession.builder() is called only inside graft.LocalSpark") {
