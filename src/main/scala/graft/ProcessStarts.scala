@@ -34,7 +34,10 @@ object ProcessStarts {
       val file = Files.createTempFile("graft_procs", ".jfr")
       try {
         rec.dump(file)
+        // the dump holds every event the JVM recorded over the window,
+        // those of any other recording included
         val cmds = RecordingFile.readAllEvents(file).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
           .sortBy(_.getStartTime)
           .map(_.getString("command"))
         (out, cmds)

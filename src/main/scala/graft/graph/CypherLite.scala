@@ -82,10 +82,9 @@ object CypherLite {
         // transitive materialization: when the pattern pins `a` (e.g.
         // {id: 'x'}) each hop joins a tiny frontier against edges
         // (19 s -> sub-second on the sf0.1 2-hop query). The edge side
-        // reads the builder's PERSISTED edge cache directly (r18 — the
-        // former per-query localCheckpoint duplicated the whole edge
-        // table into fresh storage on every invocation; the persisted
-        // relation already serves repeated column-pruned scans).
+        // reads the builder's PERSISTED edge cache directly: it already
+        // serves repeated column-pruned scans, and a per-query checkpoint
+        // would copy the whole edge table into fresh storage every call.
         val ec = e.select(col("src"), col("dst"))
         var frontier = a.select(col(s"${va}_id").as("a_id"),
           col(s"${va}_id").as("cur")).distinct()
@@ -102,10 +101,10 @@ object CypherLite {
             .join(ec, col("cur") === col("src"))
             .select(col("a_id"), col("dst").as("cur"))
             .distinct()
-          // materialize every non-final frontier (r18): `reach` is a
-          // UNION of per-hop branches and Spark does not share common
-          // subtrees across union branches — without the barrier hop h
-          // re-executes inside every deeper branch
+          // materialize every non-final frontier: `reach` is a UNION of
+          // per-hop branches and Spark does not share common subtrees
+          // across union branches, so a lazy hop h would re-execute
+          // inside every deeper branch
           frontier = if (h < hops._2) next.localCheckpoint() else next
           if (h >= hops._1)
             reach = if (reach == null) frontier else reach.union(frontier)

@@ -1,8 +1,17 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, AttributeReference, Coalesce,
+  EqualTo, IntegralDivide, Literal, Multiply}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, UsingJoin}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, HintInfo, Join,
+  JoinHint, LocalRelation, LogicalPlan, Project, ResolvedHint, Union}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge.{nonAdaptive, rebind}
+import org.apache.spark.sql.graft.bridge.{analyzedOnce, leaf, nonAdaptive, rebind}
+import org.apache.spark.sql.types.LongType
 import graft.core.Tables
 
 /** Property graph over two DataFrames — the reference's GraphDB
@@ -18,7 +27,7 @@ import graft.core.Tables
   * loops of joins (depth ≤ 3/10 like the reference defaults).
   */
 final case class Graph(nodes: DataFrame, edges: DataFrame) {
-  /** Memoized exact sizes for the broadcast gates of the rank loops.
+  /** Memoized exact sizes: `edgeCount` sizes [[edgesOd]]'s partitions.
     * Both relations are persisted by the builder and TpchGraph memoizes
     * the Graph per (session, dir), so each count is one job per built
     * graph rather than one per query. */
@@ -34,7 +43,8 @@ final case class Graph(nodes: DataFrame, edges: DataFrame) {
     * id assignment, so nid values are deterministic under partition
     * recompute (range boundaries and in-partition order are functions
     * of the data). The encoding is a bijection — results never depend
-    * on the nid values themselves. */
+    * on the nid values themselves. Its exact size [[dictCount]] bounds
+    * every nid-keyed table, so it is the rank loops' broadcast gate. */
   lazy val dict: DataFrame = {
     nodes.select(col("id"))
       .union(edges.select(col("src").as("id")))
@@ -196,8 +206,9 @@ object TpchGraph {
 
 /** Graph loops: traversal, BFS paths, pagerank and personalized pagerank.
   *
-  * Every loop picks broadcast or shuffle for each hop from a MEASURED
-  * size, so adaptive execution has nothing left to decide there and only
+  * Every loop picks broadcast or shuffle for each hop from an exact size,
+  * measured or, for the rank loops, the dictionary's bound on their
+  * tables, so adaptive execution has nothing left to decide there and only
   * adds a stage wait, a re-optimization and a plan-string render per
   * broadcast. Each loop therefore builds all of its frames — its inputs
   * rebound, its per-hop checkpoints and counts, and its result — in
@@ -224,8 +235,8 @@ object GraphOps {
   private[graft] def ofType(edges: DataFrame, edgeType: Option[String]): DataFrame =
     edgeType.fold(edges)(t => edges.filter(col("type") === t))
 
-  /** The hop loop of [[traverse]], [[bfsPaths]], [[personalizedPagerank]]
-    * and `GraphVector.semanticGraphSearch`. `hop(frontier, visited)`
+  /** The hop loop of [[traverse]], [[bfsPaths]] and
+    * `GraphVector.semanticGraphSearch`. `hop(frontier, visited)`
     * builds a hop's frame from the frontier (`seed`, of `seedRows` rows,
     * for hop 1, else the previous hop's frame) and, for a caller that
     * keeps one, the visited set; both come hinted on their measured
@@ -333,156 +344,156 @@ object GraphOps {
     * every division an integer division — so the result is EXACTLY
     * reproducible across engines and partition orders (float PageRank
     * sums contributions in nondeterministic order; at 6-decimal
-    * rounding that's a latent cross-engine mismatch). Each iteration is
-    * the canonical distributed shape: one hash join on src + one
-    * map-side-combined groupBy on dst — k iterations = k shuffles of
-    * the edge list, independent of graph diameter. Returns
-    * (id, r6 BIGINT micro-units). */
+    * rounding that's a latent cross-engine mismatch). The
+    * [[rankLoop]] with a uniform start and teleport: k iterations = k
+    * joins against the rank table and k groupBys of the edge list,
+    * independent of graph diameter. Returns (id, r6 BIGINT micro-units). */
   def pagerank(g: Graph, iters: Int): DataFrame = {
     require(iters >= 1, s"pagerank needs at least one iteration, got $iters")
-    val spark = nonAdaptive(g.nodes.sparkSession)
-    // The edge list is the big side, materialized once with its per-src
-    // out-degree attached (Graph.edgesOd, shared with PPR); each
-    // iteration joins it against the O(nodes) rank table, hinted
-    // broadcast while the memoized node count is bounded, so an
-    // iteration is one broadcast join + one map-side-combined groupBy
-    // shuffle of per-dst partial sums. The first iteration (uniform base
-    // rank) needs no join at all.
-    val edgesOd = rebind(spark, g.edgesOd)
-    // Sparse rank representation: `r` holds only nodes that RECEIVE
-    // rank (contrib keys); every absent node implicitly sits at the
-    // base value — 1e6 micro-units before the first iteration, the
-    // 0.15 floor afterwards (a node with no in-edges lands on the floor
-    // after one step and never moves). The dense (id, r6) view is
-    // reconstituted once at the end.
-    var r: Option[DataFrame] = None
-    for (k <- 1 to iters) {
-      val base = if (k == 1) 1000000L else 150000L
-      // contribution per EDGE is coalesce(rank(src), base) div od(src) —
-      // a function of src only, so summing it per dst over edge rows is
-      // the same integer as dividing once per src
-      val contrib = r match {
-        case Some(rr) => edgesOd
-          .join(hinted(rr, g.nodeCount), col("src") === col("id"), "left")
-          .select(col("dst"), expr(s"coalesce(r6, ${base}L) div od").as("c"))
-        case None => edgesOd
-          .select(col("dst"), expr(s"${base}L div od").as("c"))
-      }
-      // No mid-loop checkpoints, unlike the `expand` loops: each hop's
-      // rank table feeds exactly ONE parent (the next hop's broadcast or
-      // the final join), so the loop is a single lazy plan in which every
-      // hinted hop materializes exactly once, inside its broadcast build;
-      // a checkpoint would materialize it a second time.
-      val next = contrib
-        .groupBy("dst").agg(sum("c").as("sc"))
-        .select(col("dst").as("id"),
-          (lit(150000L) + expr("sc * 17 div 20")).as("r6"))
-      // Lineage cap past the broadcast ceiling: there nothing
-      // materializes per hop, so a large `iters` would chain 2·iters
-      // shuffles into one plan whose analysis and planning cost grows
-      // superlinearly. A checkpoint every 5th hop bounds the chain.
-      r = Some(
-        if (g.nodeCount > FrontierHintRows && k % 5 == 0 && k < iters)
-          next.localCheckpoint()
-        else next)
-    }
-    rebind(spark, g.nodes).select(col("id"))
-      .join(hinted(decode(g, r.get), g.nodeCount), Seq("id"), "left")
-      .select(col("id"), coalesce(col("r6"), lit(150000L)).as("r6"))
+    // Past the broadcast ceiling nothing materializes per hop, so a large
+    // `iters` would chain 2·iters shuffles into one plan whose planning
+    // cost grows with it; a checkpoint every 5th hop bounds the chain.
+    // A whole-graph rank table nears the dictionary in size, so it is not
+    // measured.
+    rankLoop(g, None, iters)(k => Option.when(k % 5 == 0 && k < iters)(_ => g.dictCount))
   }
-
-  /** A rank table `r` (id = [[Graph.dict]] nid, r6) keyed by the string
-    * id again: one broadcast-gated join against the persisted
-    * dictionary. A key that is no nid drops. */
-  private def decode(g: Graph, r: DataFrame): DataFrame =
-    r.join(hinted(rebind(r.sparkSession, g.dict).select(col("nid"), col("id").as("sid")),
-        g.dictCount), col("id") === col("nid"))
-      .select(col("sid").as("id"), col("r6"))
 
   /** Personalized PageRank: the random walk restarts at `seed` instead
     * of teleporting uniformly — the relevance-to-a-node ranking a
-    * graph+vector pipeline reranks with. Same integer fixed-point
-    * recurrence as [[pagerank]] with the teleport mass concentrated on
-    * the seed: r₀ = 1e6·e_seed, r' = 0.15e6·e_seed + 0.85·Σ r/outdeg.
-    * The rank table stays SPARSE (only nodes actually reached carry a
-    * row — absent = zero mass, exactly the PPR semantics), so the
-    * per-iteration cost is bounded by the reached set, not the graph. */
+    * graph+vector pipeline reranks with. The [[rankLoop]] with the start
+    * and teleport mass on the seed: r₀ = 1e6·e_seed,
+    * r' = 0.15e6·e_seed + 0.85·Σ r/outdeg. Its rank table holds only the
+    * nodes reached, so a hop's cost is bounded by the reached set, not
+    * the graph. */
   def personalizedPagerank(g: Graph, seed: String, iters: Int): DataFrame = {
     require(iters >= 1, s"personalizedPagerank needs >= 1 iteration")
-    val spark = nonAdaptive(g.nodes.sparkSession)
-    import spark.implicits._
-    val edgesOd = rebind(spark, g.edgesOd)
-    // the loop runs on the dictionary's LONG nids (Graph.dict, shared
-    // with pagerank); the seed's nid is a 1-row bounded lookup against
-    // the persisted dictionary. A seed absent from the graph maps to the
-    // impossible nid −1: the teleport row then matches no edge and no
-    // dict entry, so every rank is zero.
-    val seedNid = rebind(spark, g.dict).filter(col("id") === seed).select("nid")
+    // the seed's nid is a 1-row lookup against the persisted dictionary.
+    // A seed absent from the graph maps to the impossible nid −1: its
+    // start and teleport rows then match no edge and no dictionary entry,
+    // so every rank is zero.
+    val seedNid = rebind(nonAdaptive(g.nodes.sparkSession), g.dict)
+      .filter(col("id") === seed).select("nid")
       .limit(2).collect().headOption.map(_.getLong(0)).getOrElse(-1L)
-    // teleport rides INSIDE the hop aggregation as a second summed
-    // column, so a hop has one groupBy exchange: contributions carry
-    // (c, t=0), the teleport row (seed, c=0, t=150000), and
-    // r6 = sum(c)·17 div 20 + sum(t) (the c=0 row never moves sum(c); a
-    // teleport-only node gets 0·17 div 20 + 150000).
-    val teleport = Seq((seedNid, 0L, 150000L)).toDF("id", "c", "t")
-    val r0 = Seq((seedNid, 1000000L)).toDF("id", "r6").localCheckpoint()
-    // The rank table is measured on every hop, so a small reached set
-    // stays broadcast even on a huge graph. A hop's contribution is per
-    // EDGE of the shared adjacency (Graph.edgesOd): r6(src) div od(src)
-    // is a function of src only, so summing it per dst over edge rows
-    // is the same integer as dividing once per src. Damping applies to
-    // the per-node SUM (0.85·Σ r/outdeg), the recurrence of pagerank —
-    // per-edge flooring would zero out low-mass frontier contributions.
-    val r = expand(r0, 1L, iters) { (rank, _) =>
-      edgesOd.join(rank, col("src") === col("id"))
-        .select(col("dst").as("id"), expr("r6 div od").as("c"),
-          lit(0L).as("t"))
-        .unionByName(teleport)
-        .groupBy("id")
-        .agg((expr("sum(c) * 17 div 20") + sum("t")).as("r6"))
-    }.last
-    // the −1 sentinel teleport row drops in the decode, and nodes never
-    // reached carry zero mass
-    rebind(spark, g.nodes).select(col("id")).join(decode(g, r), Seq("id"), "left")
-      .select(col("id"), coalesce(col("r6"), lit(0L)).as("r6"))
+    // Past the ceiling every hop but the last is checkpointed and
+    // counted, so a reached set that is still small stays broadcast even
+    // on a huge graph.
+    rankLoop(g, Some(seedNid), iters)(k => Option.when(k < iters)(_.count()))
   }
 
-  /** DuckDB twin of [[personalizedPagerank]] as chained CTEs (dense
-    * over nodes — equivalent: unreached nodes carry zero mass). */
-  def pprCtesSql(seed: String, iters: Int): String = {
-    val sq = seed.replace("'", "''")
+  /** The rank loop of [[pagerank]] (`seed` None) and
+    * [[personalizedPagerank]] (`seed` = the seed's [[Graph.dict]] nid):
+    * from r₀ = 1e6·t, `iters` hops of r' = 0.15e6·t + 0.85·Σ r(src) div
+    * od(src), where the teleport vector t is 1 on every node for pagerank
+    * and e_seed for PPR.
+    *
+    * The rank table (id = nid, r6) is SPARSE: it holds only the nodes
+    * that receive rank. An absent node sits on pagerank's 0.15 floor (at
+    * 1e6 before the first hop, which so needs no join) and carries zero
+    * mass in PPR. A hop joins the shared adjacency ([[Graph.edgesOd]])
+    * against the previous table, then groups once by dst: the
+    * contribution is per EDGE, but r(src) div od(src) is a function of
+    * src only, so summing it per dst is the same integer as dividing once
+    * per src. Damping applies to the per-node sum; per-edge flooring
+    * would zero out low-mass contributions. PPR's teleport row rides
+    * inside the same aggregation as a second summed column, so a hop has
+    * one exchange.
+    *
+    * Each table feeds one parent only, the next hop or the result, so the
+    * hops form one plan in which a broadcast table materializes once,
+    * inside its broadcast build; a checkpoint would materialize it twice.
+    * The plan is built from catalyst nodes, with a fresh edge leaf per
+    * hop, and analyzed once: a chain of `Dataset` steps would analyze the
+    * growing plan at every step, a cost that grows with iters². While the
+    * dictionary, the bound of a nid-keyed table, is within
+    * [[FrontierHintRows]], every table is hinted broadcast unmeasured.
+    * Past it, `above(k)` is the rule for hop k's table: None leaves it in
+    * the plan; Some(rows) checkpoints it, and `rows` of the checkpoint
+    * bounds it for the next hop's gate. Returns (id, r6) over every node
+    * of `g`, keyed by the string id. */
+  private def rankLoop(g: Graph, seed: Option[Long], iters: Int)(
+      above: Int => Option[DataFrame => Long]): DataFrame = {
+    val spark = nonAdaptive(g.nodes.sparkSession)
+    // the table and its row bound; pagerank's uniform start is implicit
+    var r: Option[(LogicalPlan, Long)] =
+      seed.map(s => (longRow("id" -> s, "r6" -> 1000000L), 1L))
+    for (k <- 1 to iters) {
+      val edges = leaf(g.edgesOd)
+      val contrib = r.fold(
+        Project(Seq(ref("dst"), Alias(IntegralDivide(Literal(1000000L), ref("od")), "c")()), edges)) {
+        case (rank, rows) =>
+          val rs = if (seed.isEmpty) Coalesce(Seq(ref("r6"), Literal(150000L))) else ref("r6")
+          Project(Seq(ref("dst"), Alias(IntegralDivide(rs, ref("od")), "c")()),
+            Join(edges, broadcastIf(rank, rows), if (seed.isEmpty) LeftOuter else Inner,
+              Some(EqualTo(ref("src"), ref("id"))), JoinHint.NONE))
+      }
+      // contributions carry t = 0 and the teleport row (seed, c = 0,
+      // t = 150000): the c = 0 row never moves sum(c)
+      val summed = seed.fold[LogicalPlan](contrib)(s => Union(Seq(
+        Project(Seq(ref("dst"), ref("c"), Alias(Literal(0L), "t")()), contrib),
+        longRow("dst" -> s, "c" -> 0L, "t" -> 150000L))))
+      val sums = Aggregate(Seq(ref("dst")),
+        Seq(ref("dst"), Alias(Sum(ref("c")).toAggregateExpression(), "sc")()) ++
+          seed.map(_ => Alias(Sum(ref("t")).toAggregateExpression(), "st")()),
+        summed)
+      val teleport = if (seed.isEmpty) Literal(150000L) else ref("st")
+      val hop: LogicalPlan = Project(Seq(Alias(ref("dst"), "id")(), Alias(Add(teleport,
+        IntegralDivide(Multiply(ref("sc"), Literal(17L)), Literal(20L))), "r6")()), sums)
+      r = Some(
+        if (g.dictCount <= FrontierHintRows) (hop, g.dictCount)
+        else above(k).fold((hop, g.dictCount)) { rows =>
+          val cut = analyzedOnce(spark, hop).localCheckpoint()
+          (leaf(cut), rows(cut))
+        })
+    }
+    val (rank, rows) = r.get
+    // keyed by the string id again through the persisted dictionary; the
+    // −1 sentinel of an absent seed drops here
+    val dict = Project(Seq(ref("nid"), Alias(ref("id"), "sid")()), leaf(g.dict))
+    val decoded = Project(Seq(Alias(ref("sid"), "id")(), ref("r6")),
+      Join(rank, broadcastIf(dict, g.dictCount), Inner, Some(EqualTo(ref("id"), ref("nid"))),
+        JoinHint.NONE))
+    analyzedOnce(spark, Project(
+      Seq(ref("id"), Alias(Coalesce(Seq(ref("r6"), Literal(if (seed.isEmpty) 150000L else 0L))),
+        "r6")()),
+      Join(Project(Seq(ref("id")), leaf(g.nodes)), broadcastIf(decoded, rows),
+        UsingJoin(LeftOuter, Seq("id")), None, JoinHint.NONE)))
+  }
+
+  // The rank loop's plan is built from catalyst nodes whose only
+  // unresolved parts are column names. Every expression is typed as the
+  // analyzer would type it, so one bottom-up pass resolves all hops: an
+  // unresolved function or an implicit cast would take another pass of
+  // the whole analyzer batch per hop.
+
+  /** The column `name` of the node's child, resolved in the analysis. */
+  private def ref(name: String): UnresolvedAttribute = UnresolvedAttribute(name)
+
+  /** `p` hinted broadcast when its row bound is within [[FrontierHintRows]]. */
+  private def broadcastIf(p: LogicalPlan, rows: Long): LogicalPlan =
+    if (rows <= FrontierHintRows) ResolvedHint(p, HintInfo(strategy = Some(BROADCAST))) else p
+
+  /** One row of non-null BIGINT columns, with attribute ids of its own. */
+  private def longRow(cols: (String, Long)*): LogicalPlan =
+    LocalRelation(cols.map(c => AttributeReference(c._1, LongType, nullable = false)()),
+      Seq(InternalRow(cols.map(_._2): _*)))
+
+  /** DuckDB twin of [[rankLoop]] as chained CTEs: `seed` None is
+    * [[pagerank]], Some(id) [[personalizedPagerank]] from that id. Dense
+    * over nodes, which is equivalent: an absent node sits on pagerank's
+    * floor and carries zero PPR mass. Same integer semantics: `//` floor
+    * division over nonnegative values == Spark `div`. Emits
+    * `outdeg, r0, …, r$iters`. */
+  def rankCtesSql(seed: Option[String], iters: Int): String = {
+    // the teleport vector t, scaled: 1 on every node, or on the seed only
+    def t(scale: Int, id: String): String = seed.fold(s"$scale")(sd =>
+      s"CASE WHEN $id = '${sd.replace("'", "''")}' THEN $scale ELSE 0 END")
     val head =
       s"""outdeg AS MATERIALIZED (SELECT src, count(*) AS od FROM edges GROUP BY src),
-         |r0 AS (SELECT id, CASE WHEN id = '$sq'
-         |         THEN CAST(1000000 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS r6
-         |       FROM nodes)""".stripMargin
+         |r0 AS (SELECT id, CAST(${t(1000000, "id")} AS BIGINT) AS r6 FROM nodes)""".stripMargin
     val steps = (1 to iters).map { k =>
       s"""r$k AS (
          |  SELECT n.id,
-         |         (CASE WHEN n.id = '$sq' THEN 150000 ELSE 0 END)
-         |           + COALESCE(s.sc, 0) * 17 // 20 AS r6
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT e.dst AS id, sum(r.r6 // o.od) AS sc
-         |    FROM edges e
-         |    JOIN r${k - 1} r ON r.id = e.src
-         |    JOIN outdeg o ON o.src = e.src
-         |    GROUP BY e.dst) s USING (id))""".stripMargin
-    }
-    (head +: steps).mkString(",\n")
-  }
-
-  /** DuckDB twin of [[pagerank]] as chained CTEs (same integer
-    * semantics: `//` floor division over nonnegative values ==
-    * Spark `div`). Emits `outdeg, r0, …, r$iters`. */
-  def pagerankCtesSql(iters: Int): String = {
-    val head =
-      """outdeg AS MATERIALIZED (SELECT src, count(*) AS od FROM edges GROUP BY src),
-        |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r6 FROM nodes)"""
-        .stripMargin
-    val steps = (1 to iters).map { k =>
-      s"""r$k AS (
-         |  SELECT n.id,
-         |         150000 + COALESCE(s.sc, 0) * 17 // 20 AS r6
+         |         ${t(150000, "n.id")} + COALESCE(s.sc, 0) * 17 // 20 AS r6
          |  FROM nodes n LEFT JOIN (
          |    SELECT e.dst AS id, sum(r.r6 // o.od) AS sc
          |    FROM edges e

@@ -322,7 +322,7 @@ object GraphQueries {
           .limit(20),
       Some(
         s"""WITH $C,
-           |${GraphOps.pagerankCtesSql(5)}
+           |${GraphOps.rankCtesSql(None, 5)}
            |SELECT id, round(r6 / 1000000.0, 6) AS rank
            |FROM r5 ORDER BY rank DESC, id LIMIT 20""".stripMargin),
       bench = true
@@ -340,7 +340,7 @@ object GraphQueries {
           .limit(20),
       Some(
         s"""WITH $C,
-           |${GraphOps.pprCtesSql("o:1", 4)}
+           |${GraphOps.rankCtesSql(Some("o:1"), 4)}
            |SELECT id, round(r6 / 1000000.0, 6) AS rank
            |FROM r4 WHERE r6 > 0 ORDER BY rank DESC, id LIMIT 20""".stripMargin)
     )

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.internal.SQLConf
 
@@ -68,4 +69,29 @@ object bridge {
     if (df.sparkSession eq s) df
     else classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
       df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed)
+
+  /** The frame of `plan`, a logical plan built without analysis,
+    * analyzed once by session `s` (`sessionState.executePlan`). Every
+    * `Dataset` step analyzes the whole plan beneath it, so a loop that
+    * chains k steps pays k analyses of a growing plan; a loop that builds
+    * its plan from [[leaf]]s and catalyst nodes and hands it over here
+    * pays one. */
+  def analyzedOnce(s: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
+
+  /** `df` as a leaf of a plan under construction: the cached relation
+    * with fresh attribute ids when `df` is persisted, so a plan that reads
+    * one relation in k places leaves `DeduplicateRelations` nothing to
+    * renew; else `df`'s analyzed plan. The ids are renewed through
+    * `withOutput`, which carries them into the relation's output
+    * ordering; `newInstance()` keeps the old ids there, and the next
+    * `withOutput` on the copy (a deduplication, say) fails on them. */
+  def leaf(df: DataFrame): LogicalPlan = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .fold(ds.queryExecution.analyzed) { c =>
+        val m = c.cachedRepresentation
+        m.withOutput(m.output.map(_.newInstance()))
+      }
+  }
 }

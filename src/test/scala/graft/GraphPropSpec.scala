@@ -4,6 +4,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{Graph, GraphOps}
 import graft.gv.GraphVector
+import RankReference.refPpr
 
 /** Differential test of the iterative graph operators against in-memory
   * reference implementations over random graphs (cycles included; the
@@ -98,21 +99,6 @@ class GraphPropSpec extends AnyFunSuite {
   private def toGraph(ns: Seq[String], es: Seq[(String, String, String)]): Graph =
     Graph(ns.map(i => (i, "V", i, 0.0, "s")).toDF("id", "label", "name", "num", "seg"),
       es.toDF("src", "dst", "type"))
-
-  /** Reference: the integer fixed-point PPR recurrence, dense over the
-    * nodes; a seed that is no node or endpoint reaches nothing. */
-  private def refPpr(ns: Seq[String], es: Seq[(String, String, String)],
-      seed: String, iters: Int): Map[String, Long] = {
-    val od = es.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-    var r = Map(seed -> 1000000L)
-    for (_ <- 1 to iters) {
-      val c = scala.collection.mutable.Map.empty[String, Long]
-      for ((s, d, _) <- es; rs <- r.get(s)) c(d) = c.getOrElse(d, 0L) + rs / od(s)
-      r = (c.keySet + seed).map(n =>
-        n -> (c.getOrElse(n, 0L) * 17 / 20 + (if (n == seed) 150000L else 0L))).toMap
-    }
-    ns.map(n => n -> r.getOrElse(n, 0L)).toMap
-  }
 
   test("personalizedPagerank matches the reference on random multigraphs") {
     for (trial <- 1 to 2) {

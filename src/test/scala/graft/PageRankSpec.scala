@@ -1,11 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{Graph, GraphOps}
+import RankReference.{refPagerank, refPpr}
 
-/** Fixed-point PageRank: hand-computed ranks on a star graph, and the
+/** Fixed-point PageRank: hand-computed ranks on a star graph, the
   * integer-arithmetic invariants (determinism across partition layouts,
-  * sinks keep the base rank). */
+  * sinks keep the base rank), the rule for graphs past the broadcast
+  * ceiling, and one analysis per rank loop. */
 class PageRankSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -82,5 +88,59 @@ class PageRankSpec extends AnyFunSuite {
     val r2 = GraphOps.pagerank(g2, 5).collect()
       .map(x => x.getString(0) -> x.getLong(1)).toMap
     assert(r2 == r)
+  }
+
+  private def ranks(df: DataFrame): Map[String, Long] =
+    df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+
+  test("past the broadcast ceiling pagerank and PPR match the references") {
+    import spark.implicits._
+    // one node more than the ceiling: pagerank checkpoints its 5th of 6
+    // hops, PPR checkpoints and counts each hop but the last
+    val n = GraphOps.FrontierHintRows.toInt + 1
+    val rnd = new scala.util.Random(29)
+    val ns = (0 until n).map(i => s"n$i")
+    val es = Seq.fill(2 * n)((ns(rnd.nextInt(n)), ns(rnd.nextInt(n)))).distinct
+    val g = Graph(
+      spark.range(n).selectExpr("concat('n', id) AS id", "'N' AS label",
+        "concat('n', id) AS name", "0.0 AS num", "'' AS seg"),
+      spark.sparkContext.parallelize(es, 4).toDF("src", "dst").withColumn("type", lit("E")))
+    try {
+      assert(g.dictCount > GraphOps.FrontierHintRows)
+      // the result plan reads the last checkpoint as its leaf
+      def cuts(df: DataFrame) = df.queryExecution.analyzed.collect { case l: LogicalRDD => l }.size
+      val pr = GraphOps.pagerank(g, 6)
+      assert(cuts(pr) == 1)
+      assert(ranks(pr) == refPagerank(ns, es, 6))
+      val seed = es.head._1
+      val ppr = GraphOps.personalizedPagerank(g, seed, 3)
+      assert(cuts(ppr) == 1)
+      assert(ranks(ppr) == refPpr(ns, es.map { case (s, d) => (s, d, "E") }, seed, 3))
+    } finally {
+      g.edgesOd.unpersist()
+      g.dict.unpersist()
+    }
+  }
+
+  test("one construction analyzes the rank loop once, whatever its length") {
+    val g = graph("a" -> "b", "b" -> "c", "c" -> "a", "c" -> "d")
+    // catalyst rule runs while `build` makes its frame, after a warm
+    // construction (the first fills the graph's caches and counts). The
+    // metering is JVM-wide, so the least of three draws is taken: any
+    // other query running meanwhile only adds runs.
+    def ruleRuns(build: => DataFrame): Long = {
+      build
+      (1 to 3).map { _ =>
+        val before = RuleExecutor.getCurrentMetrics().numRuns
+        build
+        RuleExecutor.getCurrentMetrics().numRuns - before
+      }.min
+    }
+    for ((name, op) <- Seq[(String, Int => DataFrame)](
+        "pagerank" -> (k => GraphOps.pagerank(g, k)),
+        "personalizedPagerank" -> (k => GraphOps.personalizedPagerank(g, "a", k)))) {
+      val (at2, at10) = (ruleRuns(op(2)), ruleRuns(op(10)))
+      assert(at10 <= at2 + 10, s"$name: $at2 rule runs at k = 2, $at10 at k = 10")
+    }
   }
 }
