@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge.narrowChild
 import graft.text.TextAnalysis._
 
 /** Deduplication operators for training-data pipelines over a text corpus:
@@ -27,20 +28,6 @@ object Dedup {
   val NumHashes = 8
   val Bands = 4 // r = 2 rows per band
   val Knuth = 2654435761L
-
-  // memoized narrow children for the component-propagation loop, keyed
-  // (parent session, width) — the streamChild / sql_ann_topk precedent
-  private val componentSessions = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.SparkSession]()
-  private def componentChild(s0: org.apache.spark.sql.SparkSession,
-      w: Int): org.apache.spark.sql.SparkSession =
-    componentSessions.computeIfAbsent(
-      org.apache.spark.sql.graft.bridge.sessionUuid(s0) + s"#$w",
-      _ => {
-        val c = s0.newSession()
-        c.conf.set("spark.sql.shuffle.partitions", w.toString)
-        c
-      })
 
   /** Affine permutation constants for minhash i (deterministic, odd a). */
   def hashA(i: Int): Long = (1103515245L * (i + 1) + 12345L) % P | 1L
@@ -494,14 +481,14 @@ object Dedup {
     // cluster at width 32: ~0.5 s/round of pure overhead × ~13 rounds).
     // Size the width to the MEASURED graph instead — bounded counts,
     // both frames are checkpointed — and run the loop on the memoized
-    // child session at that width (the stream/sql-ann child-session
-    // precedent). At cluster scale the measured width saturates at the
+    // child session at that width (`narrowChild`, as the live stream
+    // entries do). At cluster scale the measured width saturates at the
     // session width and this is the identity.
     val spark0 = docs.sparkSession
     val sessW = spark0.sessionState.conf.numShufflePartitions
     val graphRows = labels0.count() + 2 * pairs.count()
     val w = math.max(2L, math.min(sessW.toLong, graphRows / 50000L + 1L)).toInt
-    val loopS = if (w < sessW) componentChild(spark0, w) else spark0
+    val loopS = if (w < sessW) narrowChild(spark0, w) else spark0
     def reroot(df: DataFrame): DataFrame =
       if (loopS eq spark0) df
       else loopS.createDataFrame(df.rdd, df.schema) // shared context: the

@@ -14,9 +14,12 @@ import org.apache.spark.sql.functions._
   *   [ORDER BY item] [LIMIT n]       — graft extension for determinism
   *
   * Compilation: node pattern = filter on the nodes DF; relationship =
-  * nodes ⋈ edges ⋈ nodes (Catalyst broadcasts the small side); var-length
-  * = bounded union of 1..k chained joins — a driver-side loop exactly as
-  * wide as the hop bound, never a recursive fixpoint.
+  * nodes ⋈ edges ⋈ nodes; the reach between the two node patterns is
+  * `GraphOps.expand` from the `a` side, one hop per step up to the bound,
+  * never a recursive fixpoint, and the union of the hops in the range.
+  * It runs in the caller's session, adaptive if the caller's is: the
+  * final `a ⋈ pairs ⋈ b` joins have no measured size, and adaptive
+  * execution broadcasts their small sides at run time.
   */
 object CypherLite {
 
@@ -73,10 +76,8 @@ object CypherLite {
         val (vb, lb, pb) = (m.group(7), m.group(8), m.group(9))
         val a = prefixed(nodeDf(g, la, parseProps(pa)), va)
         val b = prefixed(nodeDf(g, lb, parseProps(pb)), vb)
-        val e = Option(relType)
-          .map(t => g.edges.filter(col("type") === t)).getOrElse(g.edges)
-        val hops: (Int, Int) =
-          if (minH != null) (minH.toInt, maxH.toInt) else (1, 1)
+        val (lo, hi) = if (minH != null) (minH.toInt, maxH.toInt) else (1, 1)
+        require(lo <= hi, s"empty hop range *$lo..$hi")
         // Var-length reach is seeded from the (already filtered) `a`
         // side and expanded frontier-by-frontier — never a global
         // transitive materialization: when the pattern pins `a` (e.g.
@@ -85,31 +86,17 @@ object CypherLite {
         // reads the builder's PERSISTED edge cache directly: it already
         // serves repeated column-pruned scans, and a per-query checkpoint
         // would copy the whole edge table into fresh storage every call.
-        val ec = e.select(col("src"), col("dst"))
-        var frontier = a.select(col(s"${va}_id").as("a_id"),
-          col(s"${va}_id").as("cur")).distinct()
-        // *0..N includes the zero-length path (a reaches itself)
-        var reach: DataFrame = if (hops._1 == 0) frontier else null
-        for (h <- 1 to hops._2) {
-          // No broadcast hint: the frontier starts as ALL nodes matching
-          // the `a` pattern (unbounded for a broad label) and each hop's
-          // .distinct() is a shuffle, so AQE has exact runtime sizes and
-          // converts to a broadcast join exactly when the frontier is
-          // small (the pinned-{id:'x'} case) without risking a forced
-          // broadcast of millions of rows at scale.
-          val next = frontier
-            .join(ec, col("cur") === col("src"))
+        // The seed holds one row per distinct `a` id, so the graph's
+        // node count bounds it for the first hop's broadcast gate.
+        val ec = GraphOps.ofType(g.edges, Option(relType)).select(col("src"), col("dst"))
+        val seed = a.select(col(s"${va}_id").as("a_id"), col(s"${va}_id").as("cur")).distinct()
+        val frames = GraphOps.expand(seed, g.nodeCount, hi) { (f, _) =>
+          f.join(ec, col("cur") === col("src"))
             .select(col("a_id"), col("dst").as("cur"))
             .distinct()
-          // materialize every non-final frontier: `reach` is a UNION of
-          // per-hop branches and Spark does not share common subtrees
-          // across union branches, so a lazy hop h would re-execute
-          // inside every deeper branch
-          frontier = if (h < hops._2) next.localCheckpoint() else next
-          if (h >= hops._1)
-            reach = if (reach == null) frontier else reach.union(frontier)
         }
-        require(reach != null, s"empty hop range *${hops._1}..${hops._2}")
+        // *0..N includes the zero-length path (a reaches itself)
+        val reach = ((if (lo == 0) Seq(seed) else Nil) ++ frames.drop(lo - 1)).reduce(_ union _)
         val pairs = reach.distinct()
         rows = a.join(pairs, col(s"${va}_id") === col("a_id"))
           .join(b, col("cur") === col(s"${vb}_id"))

@@ -1,17 +1,15 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Add, Alias, AttributeReference, Coalesce,
-  EqualTo, IntegralDivide, Literal, Multiply}
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, Coalesce, EqualTo,
+  IntegralDivide, Literal, Multiply}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, UsingJoin}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, HintInfo, Join,
-  JoinHint, LocalRelation, LogicalPlan, Project, ResolvedHint, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, HintInfo,
+  Join, JoinHint, LogicalPlan, Project, Repartition, ResolvedHint, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge.{analyzedOnce, leaf, nonAdaptive, rebind}
-import org.apache.spark.sql.types.LongType
 import graft.core.Tables
 
 /** Property graph over two DataFrames — the reference's GraphDB
@@ -216,7 +214,9 @@ object TpchGraph {
   * caller's current conf. The caller's own action on the result is
   * planned by that clone too; the caller's session is never changed. The
   * graph's persisted relations are rebound, not re-derived: the clone
-  * shares the caller's cache.
+  * shares the caller's cache. `CypherLite`'s var-length match runs
+  * [[expand]] in the caller's own session: its final joins have no
+  * measured size, so it leaves them to adaptive execution.
   */
 object GraphOps {
 
@@ -235,10 +235,11 @@ object GraphOps {
   private[graft] def ofType(edges: DataFrame, edgeType: Option[String]): DataFrame =
     edgeType.fold(edges)(t => edges.filter(col("type") === t))
 
-  /** The hop loop of [[traverse]], [[bfsPaths]] and
-    * `GraphVector.semanticGraphSearch`. `hop(frontier, visited)`
-    * builds a hop's frame from the frontier (`seed`, of `seedRows` rows,
-    * for hop 1, else the previous hop's frame) and, for a caller that
+  /** The hop loop of [[traverse]], [[bfsPaths]],
+    * `GraphVector.semanticGraphSearch` and `CypherLite`'s var-length
+    * match. `hop(frontier, visited)` builds a hop's frame from the
+    * frontier (`seed`, of `seedRows` rows, for hop 1, else the previous
+    * hop's frame) and, for a caller that
     * keeps one, the visited set; both come hinted on their measured
     * sizes, since the planner's estimate for a join-derived frontier is
     * far too large to broadcast it. Every hop but the last is
@@ -367,21 +368,14 @@ object GraphOps {
     * the graph. */
   def personalizedPagerank(g: Graph, seed: String, iters: Int): DataFrame = {
     require(iters >= 1, s"personalizedPagerank needs >= 1 iteration")
-    // the seed's nid is a 1-row lookup against the persisted dictionary.
-    // A seed absent from the graph maps to the impossible nid −1: its
-    // start and teleport rows then match no edge and no dictionary entry,
-    // so every rank is zero.
-    val seedNid = rebind(nonAdaptive(g.nodes.sparkSession), g.dict)
-      .filter(col("id") === seed).select("nid")
-      .limit(2).collect().headOption.map(_.getLong(0)).getOrElse(-1L)
     // Past the ceiling every hop but the last is checkpointed and
     // counted, so a reached set that is still small stays broadcast even
     // on a huge graph.
-    rankLoop(g, Some(seedNid), iters)(k => Option.when(k < iters)(_.count()))
+    rankLoop(g, Some(seed), iters)(k => Option.when(k < iters)(_.count()))
   }
 
   /** The rank loop of [[pagerank]] (`seed` None) and
-    * [[personalizedPagerank]] (`seed` = the seed's [[Graph.dict]] nid):
+    * [[personalizedPagerank]] (`seed` = the seed's string id):
     * from r₀ = 1e6·t, `iters` hops of r' = 0.15e6·t + 0.85·Σ r(src) div
     * od(src), where the teleport vector t is 1 on every node for pagerank
     * and e_seed for PPR.
@@ -389,7 +383,10 @@ object GraphOps {
     * The rank table (id = nid, r6) is SPARSE: it holds only the nodes
     * that receive rank. An absent node sits on pagerank's 0.15 floor (at
     * 1e6 before the first hop, which so needs no join) and carries zero
-    * mass in PPR. A hop joins the shared adjacency ([[Graph.edgesOd]])
+    * mass in PPR. PPR's start table and each hop's teleport row are the
+    * seed's [[Graph.dict]] entry, filtered inside the plan, so a seed
+    * absent from the graph leaves both empty and every rank zero. A hop
+    * joins the shared adjacency ([[Graph.edgesOd]])
     * against the previous table, then groups once by dst: the
     * contribution is per EDGE, but r(src) div od(src) is a function of
     * src only, so summing it per dst is the same integer as dividing once
@@ -410,12 +407,19 @@ object GraphOps {
     * the plan; Some(rows) checkpoints it, and `rows` of the checkpoint
     * bounds it for the next hop's gate. Returns (id, r6) over every node
     * of `g`, keyed by the string id. */
-  private def rankLoop(g: Graph, seed: Option[Long], iters: Int)(
+  private def rankLoop(g: Graph, seed: Option[String], iters: Int)(
       above: Int => Option[DataFrame => Long]): DataFrame = {
     val spark = nonAdaptive(g.nodes.sparkSession)
+    // the seed's one dictionary row (none if absent) as the columns
+    // `nid` becomes and `cols`, read through a fresh leaf each time, in
+    // one task: the row sits in one cached batch, which the filter
+    // prunes to, and a task per dictionary partition would add that
+    // many tasks to the start table's broadcast and to every hop's stage
+    def seedRow(nid: String, cols: (String, Long)*): LogicalPlan = Project(
+      Alias(ref("nid"), nid)() +: cols.map(c => Alias(Literal(c._2), c._1)()),
+      Repartition(1, shuffle = false, Filter(EqualTo(ref("id"), Literal(seed.get)), leaf(g.dict))))
     // the table and its row bound; pagerank's uniform start is implicit
-    var r: Option[(LogicalPlan, Long)] =
-      seed.map(s => (longRow("id" -> s, "r6" -> 1000000L), 1L))
+    var r: Option[(LogicalPlan, Long)] = seed.map(_ => (seedRow("id", "r6" -> 1000000L), 1L))
     for (k <- 1 to iters) {
       val edges = leaf(g.edgesOd)
       val contrib = r.fold(
@@ -428,9 +432,9 @@ object GraphOps {
       }
       // contributions carry t = 0 and the teleport row (seed, c = 0,
       // t = 150000): the c = 0 row never moves sum(c)
-      val summed = seed.fold[LogicalPlan](contrib)(s => Union(Seq(
+      val summed = seed.fold[LogicalPlan](contrib)(_ => Union(Seq(
         Project(Seq(ref("dst"), ref("c"), Alias(Literal(0L), "t")()), contrib),
-        longRow("dst" -> s, "c" -> 0L, "t" -> 150000L))))
+        seedRow("dst", "c" -> 0L, "t" -> 150000L))))
       val sums = Aggregate(Seq(ref("dst")),
         Seq(ref("dst"), Alias(Sum(ref("c")).toAggregateExpression(), "sc")()) ++
           seed.map(_ => Alias(Sum(ref("t")).toAggregateExpression(), "st")()),
@@ -446,8 +450,7 @@ object GraphOps {
         })
     }
     val (rank, rows) = r.get
-    // keyed by the string id again through the persisted dictionary; the
-    // −1 sentinel of an absent seed drops here
+    // keyed by the string id again through the persisted dictionary
     val dict = Project(Seq(ref("nid"), Alias(ref("id"), "sid")()), leaf(g.dict))
     val decoded = Project(Seq(Alias(ref("sid"), "id")(), ref("r6")),
       Join(rank, broadcastIf(dict, g.dictCount), Inner, Some(EqualTo(ref("id"), ref("nid"))),
@@ -471,11 +474,6 @@ object GraphOps {
   /** `p` hinted broadcast when its row bound is within [[FrontierHintRows]]. */
   private def broadcastIf(p: LogicalPlan, rows: Long): LogicalPlan =
     if (rows <= FrontierHintRows) ResolvedHint(p, HintInfo(strategy = Some(BROADCAST))) else p
-
-  /** One row of non-null BIGINT columns, with attribute ids of its own. */
-  private def longRow(cols: (String, Long)*): LogicalPlan =
-    LocalRelation(cols.map(c => AttributeReference(c._1, LongType, nullable = false)()),
-      Seq(InternalRow(cols.map(_._2): _*)))
 
   /** DuckDB twin of [[rankLoop]] as chained CTEs: `seed` None is
     * [[pagerank]], Some(id) [[personalizedPagerank]] from that id. Dense

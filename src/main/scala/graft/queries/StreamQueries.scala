@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge.narrowChild
 import graft.Q
 import graft.core.Tables
 import graft.filter.Lt
@@ -295,7 +296,7 @@ object StreamQueries {
     Q(
       "stream_tumbling_live",
       (s0, dir) => {
-        val s = streamChild(s0)
+        val s = narrowChild(s0, 8)
         val src = eventsStreamDir(s, dir)
         val sink = "stream_tumbling_live_sink"
         withScratchCheckpoint(s) { ckpt =>
@@ -385,7 +386,7 @@ object StreamQueries {
         // 10.0 → 6.5 → 4.8 s warm at widths 32/8/4; width 2 gains ~0.3 s
         // more but strands parallelism, the rest is fixed micro-batch
         // machinery)
-        val s = streamChild(s0, 4)
+        val s = narrowChild(s0, 4)
         val src = eventsStreamDir(s, dir)
         val sink = "stream_interval_join_live_sink"
         val ev = Tables.events(s, dir)
@@ -462,7 +463,7 @@ object StreamQueries {
         // union, probes — otherwise schedules at the session's full
         // width over a few hundred rows; width 4 matches the other live
         // entries' child discipline
-        val s = streamChild(s0, 4)
+        val s = narrowChild(s0, 4)
         val D = Tables.EmbeddingDim
         val K = 10
         val qv = hashVectorValues(11L, D)
@@ -567,7 +568,7 @@ object StreamQueries {
       "stream_asof_live",
       (s0, dir) => {
         import graft.stream.StreamAsOf
-        val s = streamChild(s0) // keyed state stores — width 8
+        val s = narrowChild(s0, 8) // keyed state stores
         val ev = Tables.events(s, dir)
         // the operator's input relation: rights = purchases carrying
         // `value`, lefts = clicks; event time in epoch seconds (the
@@ -652,7 +653,7 @@ object StreamQueries {
       "stream_dedup_live",
       (s0, dir) => {
         import graft.stream.StatefulDedup
-        val s = streamChild(s0) // keyed state stores — width 8
+        val s = narrowChild(s0, 8) // keyed state stores
         val ev = Tables.events(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type"))
         val tmp = graft.core.Scratch.dir("graft_stream_dedup_live")
@@ -696,32 +697,6 @@ object StreamQueries {
           .agg(min(col("ts").cast("long")), max(col("ts").cast("long")))
           .head
         (mm.getLong(0), mm.getLong(1))
-      })
-
-  /** Child sessions scoping the streaming state width for the live
-    * entries, memoized per parent session (same pattern as the IVF-PQ
-    * serving scope in AnnQueries — repeated bench reps reuse one child
-    * instead of leaking a session per call). A streaming stateful op
-    * creates one state store per shuffle partition and EVERY micro-batch
-    * commits every store; at the shared session's width of 32 that
-    * commit overhead dominated the measured wall (tumbling r8: 3.9 →
-    * 1.8 s at width 8; the interval join keeps TWO stores per partition,
-    * so it gains even more). Width tuning is per-query serving state —
-    * it must never touch the shared session (the sql_ann_topk_pq
-    * lesson; StreamWidthSpec pins the isolation). */
-  private val tumblingSessions =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.SparkSession]()
-
-  /** The memoized width-`w` child for a parent session. */
-  private def streamChild(s0: org.apache.spark.sql.SparkSession,
-      w: Int = 8): org.apache.spark.sql.SparkSession =
-    tumblingSessions.computeIfAbsent(
-      org.apache.spark.sql.graft.bridge.sessionUuid(s0) + s"#$w",
-      _ => {
-        val c = s0.newSession()
-        c.conf.set("spark.sql.shuffle.partitions", w.toString)
-        c
       })
 
   /** Per-run streaming checkpoint dir under the index-store scratch root,

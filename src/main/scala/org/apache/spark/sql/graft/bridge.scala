@@ -61,6 +61,24 @@ object bridge {
   private val nonAdaptiveClones = new java.util.concurrent.ConcurrentHashMap[
     String, (Map[String, String], classic.SparkSession)]()
 
+  /** A child of `s` (`newSession()`: its own conf and temp views, the
+    * shared SparkContext and cache) that plans with
+    * `spark.sql.shuffle.partitions = w`, kept per (`s`, `w`) so repeated
+    * calls reuse one child instead of opening a session each. For work
+    * whose stages are bound by per-task overhead at the session's full
+    * width (live streams' state stores, small iterative loops); `s` is
+    * never changed. */
+  def narrowChild(s: SparkSession, w: Int): SparkSession =
+    narrowChildren.computeIfAbsent(s"${sessionUuid(s)}#$w", _ => {
+      val c = s.newSession()
+      c.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, w.toString)
+      c
+    })
+
+  /** `<parent session id>#<width>` -> child. */
+  private val narrowChildren =
+    new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
+
   /** `df`'s analyzed plan as a frame of session `s`, so every action on
     * it (and on whatever is built from it) is planned by `s`. A persisted
     * `df` stays a cache hit: the cache is shared by all sessions of one

@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.{Graph, GraphOps}
+import graft.graph.{CypherLite, Graph, GraphOps}
 import graft.gv.GraphVector
 import RankReference.refPpr
 
@@ -109,6 +109,35 @@ class GraphPropSpec extends AnyFunSuite {
           .map(x => x.getString(0) -> x.getLong(1)).toMap
         assert(got == refPpr(ns, es, seed, iters),
           s"trial=$trial seed=$seed iters=$iters")
+      }
+    }
+  }
+
+  /** Reference var-length match: the (a, b) pairs joined by a walk (nodes
+    * and edges may repeat) of `lo` to `hi` edges of type `edgeType`, or of
+    * any type, from a start node in `starts`. */
+  private def refVarLength(es: Seq[(String, String, String)], starts: Seq[String],
+      lo: Int, hi: Int, edgeType: Option[String]): Set[(String, String)] = {
+    val next = es.filter(e => edgeType.forall(_ == e._3))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    val byLength = Iterator.iterate(starts.map(a => (a, a)).toSet) { walks =>
+      walks.flatMap { case (a, c) => next.getOrElse(c, Set.empty).map(a -> _) }
+    }.take(hi + 1).toSeq
+    byLength.drop(lo).flatten.toSet
+  }
+
+  test("cypher var-length matches the reference walk pairs on random multigraphs") {
+    for (trial <- 1 to 2) {
+      val (ns, es) = multigraph(400 + trial)
+      val g = toGraph(ns, es)
+      for ((lo, hi) <- Seq((0, 2), (1, 1), (1, 3), (2, 3)); edgeType <- Seq(None, Some("A"));
+           (start, starts) <- Seq(("(s:V {id: 'm1'})", Seq("m1")), ("(s:V)", ns))) {
+        val rel = edgeType.fold("")(t => s":$t") + s"*$lo..$hi"
+        val got = CypherLite.query(g, s"MATCH $start-[$rel]->(t) RETURN s.id, t.id")
+          .collect().map(x => (x.getString(0), x.getString(1))).toSeq
+        val want = refVarLength(es, starts, lo, hi, edgeType)
+        assert(got.size == got.toSet.size && got.toSet == want,
+          s"trial=$trial $start-[$rel]->(t)")
       }
     }
   }

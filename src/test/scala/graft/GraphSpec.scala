@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.bridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{CypherLite, Graph, GraphOps}
 
@@ -126,5 +129,21 @@ class GraphSpec extends AnyFunSuite {
       "MATCH (s {id: 'a'})-[*0..1]->(t) RETURN t.id ORDER BY t.id")
       .collect().map(_.getString(0))
     assert(out.toSeq == Seq("a", "b", "c"))
+  }
+
+  test("cypher: an empty hop range is rejected before any job starts") {
+    val jobs = new AtomicInteger
+    val log = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val err = intercept[IllegalArgumentException] {
+        CypherLite.query(g, "MATCH (s {id: 'a'})-[*3..2]->(t) RETURN t.id")
+      }
+      assert(err.getMessage.contains("*3..2"), err.getMessage)
+      bridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(log)
+    assert(jobs.get == 0, s"${jobs.get} jobs started")
   }
 }

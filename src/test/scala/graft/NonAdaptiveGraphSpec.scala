@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.bridge
 import org.scalatest.funsuite.AnyFunSuite
-import graft.graph.{Graph, GraphOps}
+import graft.graph.{CypherLite, Graph, GraphOps}
 import graft.gv.GraphVector
 
 /** The graph operators (traverse, bfsPaths, pagerank, personalized
@@ -17,7 +17,9 @@ import graft.gv.GraphVector
   * without adaptive execution, the caller's action on their result
   * included, while the caller's own session keeps AQE and every setting
   * it had. Warm job counts per call are pinned so that a loop falling
-  * back to per-stage adaptive jobs fails here on any box.
+  * back to per-stage adaptive jobs fails here on any box. Their answers,
+  * and a CypherLite var-length match's, do not depend on the caller's
+  * conf.
   */
 class NonAdaptiveGraphSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -75,18 +77,23 @@ class NonAdaptiveGraphSpec extends AnyFunSuite {
     }
   }
 
-  /** Runs each call plus a collect of its result under a job group. */
-  private def logged(run: Seq[(String, () => DataFrame)]): Log = {
+  /** What `body` starts. */
+  private def during(body: => Unit): Log = {
     val log = new Log
     spark.sparkContext.addSparkListener(log)
     try {
-      run.foreach { case (name, call) =>
-        spark.sparkContext.setJobGroup(s"na:$name", name)
-        try call().collect() finally spark.sparkContext.clearJobGroup()
-      }
+      body
       bridge.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(log)
     log
+  }
+
+  /** Runs each call plus a collect of its result under a job group. */
+  private def logged(run: Seq[(String, () => DataFrame)]): Log = during {
+    run.foreach { case (name, call) =>
+      spark.sparkContext.setJobGroup(s"na:$name", name)
+      try call().collect() finally spark.sparkContext.clearJobGroup()
+    }
   }
 
   test("graph operators plan without AQE and leave the caller's session adaptive") {
@@ -131,15 +138,41 @@ class NonAdaptiveGraphSpec extends AnyFunSuite {
     // with AQE on these were 10, 17, 6, 21, 13 and 7: adaptive execution
     // runs every shuffle and broadcast stage as a job of its own
     val pinned = Map("traverse" -> 8, "bfsPaths" -> 12, "pagerank" -> 6,
-      "personalizedPagerank" -> 9, "semanticGraphSearch" -> 10,
+      "personalizedPagerank" -> 6, "semanticGraphSearch" -> 10,
       "graphRerank" -> 3)
     assert(counts == pinned, counts)
     // SQL executions per warm call, the collect of its result included:
-    // a rank loop is one plan, which PPR's seed lookup alone precedes
+    // a rank loop is one plan, PPR's seed lookup inside it
     val sqlExecs = Seq("pagerank", "personalizedPagerank").map { name =>
       name -> logged(calls.filter(_._1 == name)).roots.size
     }.toMap
-    assert(sqlExecs("pagerank") == 1 && sqlExecs("personalizedPagerank") <= 2, sqlExecs)
+    assert(sqlExecs("pagerank") == 1 && sqlExecs("personalizedPagerank") == 1, sqlExecs)
+    val building = during(GraphOps.personalizedPagerank(g, "v1", 3)).jobs
+    assert(building.isEmpty, s"building PPR's frame started ${building.size} jobs")
+  }
+
+  test("answers stay the same while the caller switches partitions and AQE between calls") {
+    val ops = calls :+ ("cypherVarLength" ->
+      (() => CypherLite.query(g, "MATCH (s:T)-[*1..3]->(t) RETURN s.id, t.id")))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    val want = ops.map { case (name, call) => name -> sorted(call()) }.toMap
+    assert(want.values.forall(_.nonEmpty), want)
+    val settings = for (parts <- Seq(1, 7, 2 * spark.sparkContext.defaultParallelism);
+                        aqe <- Seq(true, false)) yield (parts, aqe)
+    val (parts0, aqe0) = (spark.conf.get(Parts), spark.conf.get(Aqe))
+    try {
+      // each call runs under another setting than the call before it,
+      // and every operator meets every setting
+      for (round <- settings.indices; ((name, call), i) <- ops.zipWithIndex) {
+        val (parts, aqe) = settings((round + i) % settings.size)
+        spark.conf.set(Parts, parts.toString)
+        spark.conf.set(Aqe, aqe.toString)
+        assert(sorted(call()) == want(name), s"$name parts=$parts aqe=$aqe")
+      }
+    } finally {
+      spark.conf.set(Parts, parts0)
+      spark.conf.set(Aqe, aqe0)
+    }
   }
 
   /** The six operators' answers, as sorted rows, for a caller on session

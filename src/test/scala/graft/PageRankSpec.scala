@@ -136,11 +136,18 @@ class PageRankSpec extends AnyFunSuite {
         RuleExecutor.getCurrentMetrics().numRuns - before
       }.min
     }
-    for ((name, op) <- Seq[(String, Int => DataFrame)](
+    val runs = Seq[(String, Int => DataFrame)](
         "pagerank" -> (k => GraphOps.pagerank(g, k)),
-        "personalizedPagerank" -> (k => GraphOps.personalizedPagerank(g, "a", k)))) {
-      val (at2, at10) = (ruleRuns(op(2)), ruleRuns(op(10)))
-      assert(at10 <= at2 + 10, s"$name: $at2 rule runs at k = 2, $at10 at k = 10")
+        "personalizedPagerank" -> (k => GraphOps.personalizedPagerank(g, "a", k))).map {
+      case (name, op) =>
+        val (at2, at10) = (ruleRuns(op(2)), ruleRuns(op(10)))
+        assert(at10 <= at2 + 10, s"$name: $at2 rule runs at k = 2, $at10 at k = 10")
+        name -> Seq(at2, at10)
+    }.toMap
+    // PPR's seed resolves inside its one plan, so it costs about what
+    // pagerank's plan costs to analyze, not a second query's planning
+    runs("personalizedPagerank").zip(runs("pagerank")).foreach { case (ppr, pr) =>
+      assert(ppr <= 2 * pr, runs)
     }
   }
 }
