@@ -1,9 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
@@ -23,7 +25,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * and how many of those were planned adaptively (an `AdaptiveSparkPlan`
   * root), so a graph loop that falls back to AQE is a visible count, and
   * how many OS processes it started ([[ProcessStarts]]), so a read path
-  * that lists files through a forking filesystem call is one too.
+  * that lists files through a forking filesystem call is one too, and how
+  * many classes codegen compiled and the milliseconds that took, so a
+  * query whose generated code does not stay in Spark's class cache
+  * between reps is one too.
   */
 object Explain {
   private val Usage = "usage: Explain <sfDir> <names_csv> plan [<outDir> <suffix>]" +
@@ -112,6 +117,8 @@ object Explain {
     for (q <- queries) {
       def rep(tag: String): Unit = {
         spark.sparkContext.setJobGroup(s"profile:${q.name}:$tag", s"profile:$tag")
+        val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+          CodeGenerator.compileTime)
         val ((n, dt), procs) = ProcessStarts.during {
           val t0 = System.nanoTime()
           val n = q.run(spark, sfDir).count()
@@ -124,7 +131,9 @@ object Explain {
           val ids = jobs.values.asScala
             .filter(_.group == s"profile:${q.name}:$tag").flatMap(_.sqlId).toSet
           s"  sql ${ids.size} (adaptive ${ids.count(id => adaptive.getOrDefault(id, false))})" +
-            s"  procs ${procs.size}"
+            s"  procs ${procs.size}" +
+            s"  compiled ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0}" +
+            s" (${(CodeGenerator.compileTime - ns0) / 1000000} ms)"
         }
         println(f"[profile] ${q.name} $tag: $dt%.3f s ($n rows)$sql")
       }

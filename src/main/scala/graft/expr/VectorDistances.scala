@@ -108,10 +108,12 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** 1 − dot/(‖a‖·‖b‖) — reference `vectordb_optimized.py:669-676`. */
-case class CosineDistance(left: Expression, right: Expression)
-    extends VectorDistanceExpr {
-  override def prettyName: String = "vec_cosine_distance"
+/** One pass over both vectors for dot(a, b), ‖a‖² and ‖b‖²; `finish`
+  * maps the cosine dot/(‖a‖·‖b‖) to the result. */
+abstract class CosineKernel extends VectorDistanceExpr {
+  protected def finish(cos: Double): Double
+  /** [[finish]] as Java source over the cosine's expression. */
+  protected def finishJava(cos: String): String
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
@@ -124,7 +126,7 @@ case class CosineDistance(left: Expression, right: Expression)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
-    1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
+    finish(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -142,10 +144,29 @@ case class CosineDistance(left: Expression, right: Expression)
          |  double $y = ${getterJava(elementType(right), b, i)};
          |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
          |}
-         |${ev.value} = 1.0 - $dot /
-         |  (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+         |${ev.value} = ${finishJava(
+           s"($dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb)))")};
        """.stripMargin
     })
+}
+
+/** 1 − dot/(‖a‖·‖b‖) — reference `vectordb_optimized.py:669-676`. */
+case class CosineDistance(left: Expression, right: Expression) extends CosineKernel {
+  override def prettyName: String = "vec_cosine_distance"
+  protected def finish(cos: Double): Double = 1.0 - cos
+  protected def finishJava(cos: String): String = s"1.0 - $cos"
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** dot/(‖a‖·‖b‖), the same value as vec_dot(a, b) / (sqrt(vec_dot(a, a))
+  * · sqrt(vec_dot(b, b))). */
+case class CosineSimilarity(left: Expression, right: Expression) extends CosineKernel {
+  override def prettyName: String = "vec_cosine_similarity"
+  protected def finish(cos: Double): Double = cos
+  protected def finishJava(cos: String): String = cos
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
-import graft.expr.{AdcLutScore, CosineDistance, DotProduct, L2Distance, NearestCellExpr, PqEncodeExpr}
+import graft.expr.{AdcLutScore, CosineDistance, CosineSimilarity, DotProduct, L2Distance,
+  NearestCellExpr, PqEncodeExpr}
 
 /** Column-level vector functions: codegen'd distance kernels plus the
   * deterministic hash→vector generator (graft's MockEmbedder analog —
@@ -20,6 +21,12 @@ object VectorFunctions {
   /** cosine distance = 1 − dot/(‖a‖‖b‖); lower = better. */
   def cosineDistance(a: Column, b: Column): Column =
     bridge.column(CosineDistance(bridge.expression(a), bridge.expression(b)))
+
+  /** cosine similarity dot/(‖a‖‖b‖), the same pass as [[cosineDistance]]:
+    * a constant `b`'s norm is computed per row, not folded into a literal
+    * of the generated code, so queries share one compiled class. */
+  def cosineSimilarity(a: Column, b: Column): Column =
+    bridge.column(CosineSimilarity(bridge.expression(a), bridge.expression(b)))
 
   /** euclidean distance ‖a−b‖. */
   def l2Distance(a: Column, b: Column): Column =

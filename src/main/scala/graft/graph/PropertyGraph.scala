@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, UsingJoin}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, HintInfo,
   Join, JoinHint, LogicalPlan, Project, Repartition, ResolvedHint, Union}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.bridge.{analyzedOnce, leaf, nonAdaptive, rebind}
+import org.apache.spark.sql.graft.bridge.{analyzedOnce, countedLocalCheckpoint, leaf,
+  nonAdaptive, rebind}
 import graft.core.Tables
 
 /** Property graph over two DataFrames — the reference's GraphDB
@@ -209,10 +210,17 @@ object TpchGraph {
   * tables, so adaptive execution has nothing left to decide there and only
   * adds a stage wait, a re-optimization and a plan-string render per
   * broadcast. Each loop therefore builds all of its frames — its inputs
-  * rebound, its per-hop checkpoints and counts, and its result — in
+  * rebound, its per-hop checkpoints and its result — in
   * `nonAdaptive(caller's session)`, a clone with AQE off that carries the
   * caller's current conf. The caller's own action on the result is
   * planned by that clone too; the caller's session is never changed. The
+  * clone also names generated classes without their codegen stage id, so
+  * stages alike but for that id (the hops of one loop, equal stages of
+  * two operators) share one compiled class: a cycle of pagerank, PPR,
+  * semantic search and traverse + rerank then fits Spark's cache of
+  * generated classes instead of compiling its classes again on every
+  * call, and the loops keep each stage's generated code free of per-call
+  * values (a hop's number, a query's norm) for the same reason. The
   * graph's persisted relations are rebound, not re-derived: the clone
   * shares the caller's cache. `CypherLite`'s var-length match runs
   * [[expand]] in the caller's own session: its final joins have no
@@ -243,11 +251,11 @@ object GraphOps {
     * keeps one, the visited set; both come hinted on their measured
     * sizes, since the planner's estimate for a join-derived frontier is
     * far too large to broadcast it. Every hop but the last is
-    * localCheckpoint'ed and counted: its frame feeds the next hop and
-    * the caller's result, and Spark shares no subtree between those
-    * consumers (nor across union branches), so a lazy hop would re-run
-    * its joins inside every later one; the count is cheap on the
-    * materialized frame and keeps the next gate exact. The last hop
+    * localCheckpoint'ed: its frame feeds the next hop and the caller's
+    * result, and Spark shares no subtree between those consumers (nor
+    * across union branches), so a lazy hop would re-run its joins inside
+    * every later one. The job that materializes the checkpoint also
+    * counts it, which keeps the next gate exact. The last hop
     * feeds only the result, so it stays lazy. `visited = Some((v, key))`
     * starts the visited set at `v` (`seedRows` rows, one column) and
     * grows it by each hop's `key` column. Returns the frame of each hop,
@@ -263,9 +271,10 @@ object GraphOps {
       val next = hop(hinted(frontier, frontierRows), seen.map(hinted(_, seenRows)))
       if (d == hops) next
       else {
-        frontier = next.localCheckpoint()
-        frontierRows = frontier.count()
-        seenRows += frontierRows
+        val (cut, rows) = countedLocalCheckpoint(next)
+        frontier = cut
+        frontierRows = rows
+        seenRows += rows
         seen = seen.map(v =>
           v.union(frontier.select(col(visited.get._2).as(v.columns.head))))
         frontier
@@ -308,8 +317,10 @@ object GraphOps {
           col("dst").as("node"),
           concat(col("path"), lit("->"), col("dst")).as("path"),
           array_append(col("seen"), col("dst")).as("seen"))
-    }.zipWithIndex.map { case (next, i) =>
-      next.select(lit(i + 1).as("depth"), col("path"), col("node").as("end_id"))
+    }.map { next =>
+      // the depth from the data, not a constant per hop that each hop's
+      // generated code would carry: `seen` holds the start and each hop
+      next.select((size(col("seen")) - 1).as("depth"), col("path"), col("node").as("end_id"))
     }.reduce(_ union _)
   }
 
@@ -354,9 +365,7 @@ object GraphOps {
     // Past the broadcast ceiling nothing materializes per hop, so a large
     // `iters` would chain 2·iters shuffles into one plan whose planning
     // cost grows with it; a checkpoint every 5th hop bounds the chain.
-    // A whole-graph rank table nears the dictionary in size, so it is not
-    // measured.
-    rankLoop(g, None, iters)(k => Option.when(k % 5 == 0 && k < iters)(_ => g.dictCount))
+    rankLoop(g, None, iters)(k => k % 5 == 0 && k < iters)
   }
 
   /** Personalized PageRank: the random walk restarts at `seed` instead
@@ -368,10 +377,9 @@ object GraphOps {
     * the graph. */
   def personalizedPagerank(g: Graph, seed: String, iters: Int): DataFrame = {
     require(iters >= 1, s"personalizedPagerank needs >= 1 iteration")
-    // Past the ceiling every hop but the last is checkpointed and
-    // counted, so a reached set that is still small stays broadcast even
-    // on a huge graph.
-    rankLoop(g, Some(seed), iters)(k => Option.when(k < iters)(_.count()))
+    // Past the ceiling every hop but the last is checkpointed, so a
+    // reached set that is still small stays broadcast even on a huge graph.
+    rankLoop(g, Some(seed), iters)(k => k < iters)
   }
 
   /** The rank loop of [[pagerank]] (`seed` None) and
@@ -403,12 +411,12 @@ object GraphOps {
     * growing plan at every step, a cost that grows with iters². While the
     * dictionary, the bound of a nid-keyed table, is within
     * [[FrontierHintRows]], every table is hinted broadcast unmeasured.
-    * Past it, `above(k)` is the rule for hop k's table: None leaves it in
-    * the plan; Some(rows) checkpoints it, and `rows` of the checkpoint
+    * Past it, `above(k)` is the rule for hop k's table: false leaves it
+    * in the plan; true checkpoints it, and the checkpoint's row count
     * bounds it for the next hop's gate. Returns (id, r6) over every node
     * of `g`, keyed by the string id. */
   private def rankLoop(g: Graph, seed: Option[String], iters: Int)(
-      above: Int => Option[DataFrame => Long]): DataFrame = {
+      above: Int => Boolean): DataFrame = {
     val spark = nonAdaptive(g.nodes.sparkSession)
     // the seed's one dictionary row (none if absent) as the columns
     // `nid` becomes and `cols`, read through a fresh leaf each time, in
@@ -443,11 +451,10 @@ object GraphOps {
       val hop: LogicalPlan = Project(Seq(Alias(ref("dst"), "id")(), Alias(Add(teleport,
         IntegralDivide(Multiply(ref("sc"), Literal(17L)), Literal(20L))), "r6")()), sums)
       r = Some(
-        if (g.dictCount <= FrontierHintRows) (hop, g.dictCount)
-        else above(k).fold((hop, g.dictCount)) { rows =>
-          val cut = analyzedOnce(spark, hop).localCheckpoint()
-          (leaf(cut), rows(cut))
-        })
+        if (g.dictCount > FrontierHintRows && above(k)) {
+          val (cut, rows) = countedLocalCheckpoint(analyzedOnce(spark, hop))
+          (leaf(cut), rows)
+        } else (hop, g.dictCount))
     }
     val (rank, rows) = r.get
     // keyed by the string id again through the persisted dictionary

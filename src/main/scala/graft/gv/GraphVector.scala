@@ -40,9 +40,13 @@ import graft.graph.{Graph, GraphOps}
   */
 object GraphVector {
 
-  /** Per-hop combined-score formula, identical text in both engines. */
-  def hopScore(vw: Double, gw: Double, hop: Int): String =
-    s"($vw * max_sim * (1.0 / (1.0 + $hop.0)) + $gw * (1.0 / $hop.0))"
+  /** Per-hop combined-score formula, identical text in both engines;
+    * `hop` is the hop number as a SQL decimal with one fractional digit. */
+  def hopScore(vw: Double, gw: Double, hop: String): String =
+    s"($vw * max_sim * (1.0 / (1.0 + $hop)) + $gw * (1.0 / $hop))"
+
+  /** [[hopScore]] of a constant hop. */
+  def hopScore(vw: Double, gw: Double, hop: Int): String = hopScore(vw, gw, s"$hop.0")
 
   def semanticGraphSearch(
       g: Graph,
@@ -55,30 +59,38 @@ object GraphVector {
       edgeType: Option[String] = None): DataFrame = {
     val spark = nonAdaptive(g.nodes.sparkSession)
     val qv = typedlit(queryVec)
+    // every row carries its hop number as data, from the seeds' hop 0 on:
+    // a hop number the plan holds as a constant is compiled into that
+    // hop's code, so each hop would need classes of its own
     val seeds = rebind(spark, embNodes)
       .withColumn("sim", lit(1.0) - VectorFunctions.cosineDistance(col("embedding"), qv))
       .select("id", "sim")
       .orderBy(desc("sim"), col("id"))
       .limit(k * 2)
+      .withColumn("hop", lit(0))
       .localCheckpoint() // seeds feed the seed scores, max_sim and every hop
     val maxSeed = seeds.agg(max("sim").as("max_sim"))
-    val e = GraphOps.ofType(rebind(spark, g.edges), edgeType)
-    val und = e.select(col("src").as("a"), col("dst").as("b"))
-      .union(e.select(col("dst").as("a"), col("src").as("b")))
+    // both directions of every edge, from one scan of the edge cache
+    val und = GraphOps.ofType(rebind(spark, g.edges), edgeType)
+      .select(explode(array(
+        struct(col("src").as("a"), col("dst").as("b")),
+        struct(col("dst").as("a"), col("src").as("b")))).as("e"))
+      .select(col("e.a").as("a"), col("e.b").as("b"))
     // the seed set's size is bounded by its limit: 2k rows
-    val hops = GraphOps.expand(seeds.select(col("id")), 2L * k, expandHops,
+    val hops = GraphOps.expand(seeds.select(col("id"), col("hop")), 2L * k, expandHops,
         Some(seeds.select(col("id").as("vid")) -> "id")) { (f, v) =>
       f.join(und, col("id") === col("a"))
-        .select(col("b").as("id")).distinct()
+        .select(col("b").as("id"), (col("hop") + 1).as("hop")).distinct()
         .join(v.get, col("id") === col("vid"), "left_anti")
     }
-    val seedScores = seeds.select(col("id"), round(col("sim"), 6).as("score"),
-      lit(0).as("hop"))
-    hops.zipWithIndex.foldLeft(seedScores) { case (acc, (next, i)) =>
-      acc.union(next.crossJoin(broadcast(maxSeed))
-        .selectExpr("id", s"round(${hopScore(vw, gw, i + 1)}, 6) as score",
-          s"${i + 1} as hop"))
-    }.orderBy(desc("score"), col("id")).limit(k)
+    val seedScores = seeds.select(col("id"), round(col("sim"), 6).as("score"), col("hop"))
+    // one scoring of every hop's rows; DECIMAL(3, 1) keeps the decimal
+    // arithmetic of a constant hop such as 1.0
+    val score = hopScore(vw, gw, "CAST(hop AS DECIMAL(3, 1))")
+    hops.reduceOption(_ union _).fold(seedScores)(reached =>
+      seedScores.union(reached.crossJoin(broadcast(maxSeed))
+        .selectExpr("id", s"round($score, 6) as score", "hop")))
+      .orderBy(desc("score"), col("id")).limit(k)
   }
 
   /** DuckDB oracle: embedded nodes = customers with hash-vector
@@ -137,11 +149,7 @@ object GraphVector {
       .select(col("end_id"), col("m.path").as("path"), col("m.depth").as("depth"))
       .join(rebind(spark, endEmbeddings), col("end_id") === col("id"), "left_outer")
       .withColumn("score",
-        round(coalesce(
-          VectorFunctions.vecDot(col("embedding"), qv) /
-            (sqrt(VectorFunctions.vecDot(col("embedding"), col("embedding"))) *
-              sqrt(VectorFunctions.vecDot(qv, qv))),
-          lit(0.0)), 6))
+        round(coalesce(VectorFunctions.cosineSimilarity(col("embedding"), qv), lit(0.0)), 6))
       .select("end_id", "score", "depth", "path")
       .orderBy(desc("score"), col("end_id"))
       .limit(k)

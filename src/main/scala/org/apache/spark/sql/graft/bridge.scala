@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Spark 4 removed the public `new Column(expr)` constructor; the classic
@@ -26,10 +27,17 @@ object bridge {
   def drainListenerBus(s: SparkSession): Unit =
     s.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** A session that plans without adaptive execution: `s` itself when
-    * AQE is already off, else a clone of `s` (`cloneSession` is
-    * `private[sql]`) with it off. The clone shares `s`'s SparkContext,
-    * cache and external catalog and never changes `s`. It is kept per caller
+  /** A session that plans without adaptive execution and names its
+    * generated classes without a codegen stage id: `s` itself when both
+    * are already so, else a clone of `s` (`cloneSession` is
+    * `private[sql]`) with AQE and `spark.sql.codegen.useIdInClassName`
+    * off. Spark keeps generated classes in one JVM-wide cache of 100
+    * entries keyed by their source; with the stage id in the class name,
+    * stages equal in all but that id (every hop of a loop, equal stages
+    * of two operators) are distinct sources, and a graph operator's
+    * working set evicts the next one's, so each call compiled all of its
+    * classes again. The clone shares `s`'s SparkContext, cache and
+    * external catalog and never changes `s`. It is kept per caller
     * session and replaced as soon as the caller's conf differs from the
     * conf it was cloned from, so its queries always run under the
     * caller's current settings. Kept, because a fresh session pays its
@@ -42,15 +50,17 @@ object bridge {
     * thread's active conf. */
   def nonAdaptive(s: SparkSession): SparkSession = {
     val c = s.asInstanceOf[classic.SparkSession]
-    if (!c.sessionState.conf.adaptiveExecutionEnabled) c
+    val conf = c.sessionState.conf
+    if (!conf.adaptiveExecutionEnabled && !conf.wholeStageUseIdInClassName) c
     else {
-      val settings = c.sessionState.conf.getAllConfs
+      val settings = conf.getAllConfs
       val kept = nonAdaptiveClones.get(c.sessionUUID)
       if (kept != null && kept._1 == settings) kept._2
       else {
         nonAdaptiveClones.values.removeIf(_._2.sparkContext.isStopped)
         val clone = c.cloneSession()
         clone.sessionState.conf.setConf(SQLConf.ADAPTIVE_EXECUTION_ENABLED, false)
+        clone.sessionState.conf.setConf(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME, false)
         nonAdaptiveClones.put(c.sessionUUID, (settings, clone))
         clone
       }
@@ -96,6 +106,25 @@ object bridge {
     * pays one. */
   def analyzedOnce(s: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession], plan)
+
+  /** `df` materialized as a local checkpoint, with its row count, in one
+    * job. `Dataset.localCheckpoint` drops the count its job computes, so a
+    * caller that needs the size ran one more query, planned and compiled
+    * on its own, to count the checkpoint. The frame is the one
+    * `localCheckpoint` returns: a scan of the checkpointed rows. */
+  def countedLocalCheckpoint(df: DataFrame): (DataFrame, Long) = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      // the job computes and caches every partition; the checkpoint
+      // completes at its end and needs no job of its own
+      val rows = rdd.count()
+      (classic.Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)), rows)
+    }
+  }
 
   /** `df` as a leaf of a plan under construction: the cached relation
     * with fresh attribute ids when `df` is persisted, so a plan that reads

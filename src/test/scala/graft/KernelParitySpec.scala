@@ -67,7 +67,8 @@ class KernelParitySpec extends AnyFunSuite {
     val df = pairs.toDF("k", "a", "b").repartition(1).select(
       $"k", VectorFunctions.vecDot($"a", $"b").as("dot"),
       VectorFunctions.cosineDistance($"a", $"b").as("cos"),
-      VectorFunctions.l2Distance($"a", $"b").as("l2"))
+      VectorFunctions.l2Distance($"a", $"b").as("l2"),
+      VectorFunctions.cosineSimilarity($"a", $"b").as("sim"))
     val byK = df.collect().map(r => r.getInt(0) -> r).toMap
     // after execution AQE's final plan shows the codegen spans (before
     // it, AdaptiveSparkPlan prints the unfinalized plan with no `*(n)`)
@@ -76,8 +77,11 @@ class KernelParitySpec extends AnyFunSuite {
     pairs.foreach { case (k, a, b) =>
       val row = byK(k)
       val (d, c, l) = (refDot(a, b), refCos(a, b), refL2(a, b))
+      // similarity is the value of dot / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+      val sim = d / (math.sqrt(refDot(a, a)) * math.sqrt(refDot(b, b)))
       assert(row.getDouble(1) == d && row.getDouble(2) == c &&
-        row.getDouble(3) == l, s"codegen mismatch at $k")
+        row.getDouble(3) == l && row.getDouble(4) == sim, s"codegen mismatch at $k")
+      assert(evalOf(CosineSimilarity(dLit(a), dLit(b))) == sim, s"eval sim at $k")
       assert(evalOf(DotProduct(dLit(a), dLit(b))) == d, s"eval dot at $k")
       assert(evalOf(CosineDistance(dLit(a), dLit(b))) == c, s"eval cos at $k")
       assert(evalOf(L2Distance(dLit(a), dLit(b))) == l, s"eval l2 at $k")

@@ -12,6 +12,42 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.graph.{CypherLite, Graph, GraphOps}
 import graft.gv.GraphVector
 
+/** The graph operator specs' test graph: 30 nodes (every third id
+  * labelled `T`), random directed edges, persisted and counted like a
+  * built graph (`TpchGraph.build`), and 4-d embeddings on every other
+  * node. */
+object TestGraph {
+  private lazy val spark = SparkTestSession.spark
+
+  val ids: Seq[String] = (0 until 30).map(i => s"v$i")
+  private val edgeList = {
+    val rnd = new scala.util.Random(11)
+    (0 until 90).map { _ =>
+      (ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size)))
+    }.distinct.filter { case (a, b) => a != b }
+  }
+
+  lazy val g: Graph = {
+    import spark.implicits._
+    val graph = Graph(
+      ids.map(i => (i, if (i.last.isDigit && i.last.asDigit % 3 == 0) "T" else "V",
+        i, 0.0, "s")).toDF("id", "label", "name", "num", "seg").persist(),
+      edgeList.map { case (a, b) => (a, b, "E") }.toDF("src", "dst", "type")
+        .persist())
+    graph.nodeCount; graph.edgeCount; graph.dictCount; graph.edgesOd.count()
+    graph
+  }
+
+  lazy val emb: DataFrame = {
+    import spark.implicits._
+    ids.zipWithIndex.filter(_._2 % 2 == 0).map { case (i, k) =>
+      (i, Seq(math.sin(k), math.cos(k), k % 5 - 2.0, 1.0))
+    }.toDF("id", "embedding").persist()
+  }
+
+  val q: Seq[Double] = Seq(0.3, -0.2, 1.0, 0.5)
+}
+
 /** The graph operators (traverse, bfsPaths, pagerank, personalized
   * pagerank, semantic graph search, graph rerank) plan every query
   * without adaptive execution, the caller's action on their result
@@ -27,27 +63,9 @@ class NonAdaptiveGraphSpec extends AnyFunSuite {
 
   private val Aqe = "spark.sql.adaptive.enabled"
   private val Parts = "spark.sql.shuffle.partitions"
+  private val IdInClassName = "spark.sql.codegen.useIdInClassName"
 
-  private val rnd = new scala.util.Random(11)
-  private val ids = (0 until 30).map(i => s"v$i")
-  private val edgeList = (0 until 90).map { _ =>
-    (ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size)))
-  }.distinct.filter { case (a, b) => a != b }
-
-  /** Persisted and counted like a built graph (`TpchGraph.build`). */
-  private lazy val g = {
-    val graph = Graph(
-      ids.map(i => (i, if (i.last.isDigit && i.last.asDigit % 3 == 0) "T" else "V",
-        i, 0.0, "s")).toDF("id", "label", "name", "num", "seg").persist(),
-      edgeList.map { case (a, b) => (a, b, "E") }.toDF("src", "dst", "type")
-        .persist())
-    graph.nodeCount; graph.edgeCount; graph.dictCount; graph.edgesOd.count()
-    graph
-  }
-  private lazy val emb = ids.zipWithIndex.filter(_._2 % 2 == 0).map { case (i, k) =>
-    (i, Seq(math.sin(k), math.cos(k), k % 5 - 2.0, 1.0))
-  }.toDF("id", "embedding").persist()
-  private val q = Seq(0.3, -0.2, 1.0, 0.5)
+  import TestGraph.{emb, g, q}
 
   /** Each operator's call; graph rerank's traversal input is built
     * outside its call, as a pipeline hands it over. */
@@ -124,8 +142,10 @@ class NonAdaptiveGraphSpec extends AnyFunSuite {
         assert(!(df.sparkSession eq before.head), s"$name kept a stale conf")
         assert(df.sparkSession.conf.get(Parts) == "7", name)
         assert(df.sparkSession.conf.get(Aqe) == "false", name)
+        assert(df.sparkSession.conf.get(IdInClassName) == "false", name)
       }
       assert(spark.conf.get(Aqe) == "true")
+      assert(spark.conf.get(IdInClassName) == "true")
     } finally spark.conf.set(Parts, original)
   }
 
@@ -136,9 +156,10 @@ class NonAdaptiveGraphSpec extends AnyFunSuite {
       name -> byCall.get(s"na:$name").fold(0)(_.size)
     }.toMap
     // with AQE on these were 10, 17, 6, 21, 13 and 7: adaptive execution
-    // runs every shuffle and broadcast stage as a job of its own
-    val pinned = Map("traverse" -> 8, "bfsPaths" -> 12, "pagerank" -> 6,
-      "personalizedPagerank" -> 6, "semanticGraphSearch" -> 10,
+    // runs every shuffle and broadcast stage as a job of its own; a
+    // checkpointed hop is counted in the job that materializes it
+    val pinned = Map("traverse" -> 6, "bfsPaths" -> 10, "pagerank" -> 6,
+      "personalizedPagerank" -> 6, "semanticGraphSearch" -> 8,
       "graphRerank" -> 3)
     assert(counts == pinned, counts)
     // SQL executions per warm call, the collect of its result included:
@@ -193,25 +214,34 @@ class NonAdaptiveGraphSpec extends AnyFunSuite {
     }
   }
 
-  test("a caller with AQE off gets frames of its own session and the answers of an AQE-on caller") {
+  test("a caller with AQE off gets the answers of an AQE-on caller; with id-free class names too, its own frames") {
     for (parts <- Seq("1", "7")) {
-      def caller(aqe: String) = {
+      def caller(aqe: String, idInClassName: String = "true") = {
         val s = spark.newSession()
         s.conf.set(Aqe, aqe)
         s.conf.set(Parts, parts)
+        s.conf.set(IdInClassName, idInClassName)
         s
       }
       val off = caller("false")
       val byOff = answers(off)
       byOff.foreach { case (name, session, _) =>
-        assert(session eq off, s"$name parts=$parts returned a frame of another session")
+        assert(!(session eq off), s"$name parts=$parts returned a frame of the caller's session")
+        assert(session.conf.get(IdInClassName) == "false" &&
+          session.conf.get(Parts) == parts, s"$name parts=$parts")
+      }
+      val plain = caller("false", idInClassName = "false")
+      val byPlain = answers(plain)
+      byPlain.foreach { case (name, session, _) =>
+        assert(session eq plain, s"$name parts=$parts returned a frame of another session")
       }
       val byOn = answers(caller("true"))
       assert(byOn.forall(_._3.nonEmpty), byOn)
-      byOn.zip(byOff).foreach { case ((name, _, a), (_, _, b)) =>
+      Seq(byOff, byPlain).foreach(_.zip(byOn).foreach { case ((name, _, a), (_, _, b)) =>
         assert(a == b, s"$name parts=$parts")
-      }
-      assert(off.conf.get(Aqe) == "false" && off.conf.get(Parts) == parts)
+      })
+      assert(off.conf.get(Aqe) == "false" && off.conf.get(Parts) == parts &&
+        off.conf.get(IdInClassName) == "true")
     }
   }
 }
