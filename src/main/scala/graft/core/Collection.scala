@@ -385,15 +385,17 @@ final class VectorCollection(
   private val annFamily: Option[AnnFamily] = {
     import graft.index.{IvfIndex, LshIndex, MipsIndex}
     config.metric match {
-      // compact bucket layout: collection indexes are rebuilt or advanced
-      // on every mutation — the ingest-heavy regime where a 64-dir write
-      // per generation is pure small-file overhead; probes still prune on
-      // band_idx and push band_val
-      case "cosine" => Some(new AnnFamily("colllsh",
+      // pruned bucket layout, one dir per (band, value): a probe reads
+      // only its own buckets. The kind names the layout: `colllsh` dirs
+      // written by older versions hold the compact layout (4 band dirs,
+      // whose band_val skipping reads most of each dir), and a pruned
+      // append into one would mix the two layouts, so they are never
+      // served or advanced.
+      case "cosine" => Some(new AnnFamily("colllshp",
         (p, d) => LshIndex.build(spark, d, "vector", "id",
-          config.dimensions, p, metaColumns(d), compact = true),
+          config.dimensions, p, metaColumns(d)),
         (p, d) => LshIndex.append(spark, d, "vector", "id",
-          config.dimensions, p, metaColumns(d), compact = true),
+          config.dimensions, p, metaColumns(d)),
         (p, q, k, f, mp) => LshIndex.search(spark, p, "vector", "id", q,
           config.dimensions, k, f, multiProbe = mp),
         (p, qs, k) => LshIndex.searchBatch(spark, p, "vector", "id", qs,

@@ -74,18 +74,39 @@ object IndexStore extends org.apache.spark.internal.Logging {
     * (names compared as a set, types via `.sql` so nullability doesn't
     * trip it). Without this, an append with different metaCols/id type
     * writes schema-divergent files and later filtered reads silently see
-    * nulls for the appended rows instead of failing. */
+    * nulls for the appended rows instead of failing.
+    *
+    * `partitionCols`, when given, are the columns the append partitions
+    * by, and the stored table must be partitioned by exactly those: the
+    * column set alone cannot tell two layouts of one table apart (a
+    * partition column and a data column of the same name and type look
+    * alike), and an append in the other layout would leave a table whose
+    * partition discovery fails. */
   def requireAppendSchema(spark: SparkSession, storedPath: String,
-      rows: org.apache.spark.sql.DataFrame): Unit = {
+      rows: org.apache.spark.sql.DataFrame,
+      partitionCols: Seq[String] = Nil): Unit = {
     def sig(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => f.name -> f.dataType.sql).toMap
-    val stored = sig(spark.read.parquet(storedPath).schema)
+    val table = spark.read.parquet(storedPath)
+    val stored = sig(table.schema)
     val appended = sig(rows.schema)
     require(stored == appended,
       s"append schema mismatch against $storedPath: stored " +
         s"${stored.toSeq.sortBy(_._1).mkString("[", ", ", "]")} vs appended " +
         s"${appended.toSeq.sortBy(_._1).mkString("[", ", ", "]")} — " +
         "append must use the same metaCols and id type the index was built with")
+    if (partitionCols.nonEmpty) {
+      val storedParts = table.queryExecution.analyzed match {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+          r.partitionSchema.fieldNames.toSeq
+        case _ => Nil
+      }
+      require(storedParts == partitionCols,
+        s"append layout mismatch against $storedPath: stored partitioned by " +
+          s"${storedParts.mkString("[", ", ", "]")} vs appended " +
+          s"${partitionCols.mkString("[", ", ", "]")} — " +
+          "append must use the layout the index was built with")
+    }
   }
 
   /** Fingerprint of the source files backing an index: a mix over every

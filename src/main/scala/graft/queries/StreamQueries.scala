@@ -497,12 +497,13 @@ object StreamQueries {
             Long) => Unit = { (batch, _) =>
           val b = batch.localCheckpoint()
           if (!b.isEmpty) {
-            // compact layout (r18, guide §6): every micro-batch append
-            // used to leave one small file in each of the 64 bucket dirs
-            // (~1.1 s of per-file/commit overhead per batch, measured);
-            // the 4-dir band_val-sorted layout is the right shape for an
-            // append-per-batch index at any scale — probes are unchanged
-            // (band_idx partition-prunes, band_val row-group-skips)
+            // compact layout (r18): every micro-batch append used to
+            // leave one small file in each of the 64 bucket dirs (~1.1 s
+            // of per-file/commit overhead per batch, measured); 4 dirs
+            // keep the append cheap. The cost moves to the probes: a
+            // probe wants a bucket in every band, so all 4 dirs survive
+            // pruning, and the pushed band_val equality skips almost
+            // nothing (one row group per file)
             if (!built) {
               IndexStore.ensure(s, idx)(p =>
                 LshIndex.build(s, b, "embedding", "vec_id", D, p,

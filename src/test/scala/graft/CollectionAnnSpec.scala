@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.VectorDb
 import graft.filter.Eq
 import graft.functions.VectorFunctions
-import graft.index.IndexStore
+import graft.index.{IndexStore, LshIndex}
 import graft.knn.Ann
 
 /** Collection-integrated ANN: a VectorCollection owns its persistent LSH
@@ -39,6 +41,92 @@ class CollectionAnnSpec extends AnyFunSuite {
     val a = coll.searchAnn(qv, 5).collect().toSeq
     val b = Ann.lshSearch(coll.df, "vector", "id", qv, D, 5).collect().toSeq
     assert(a == b && a.nonEmpty)
+  }
+
+  /** The bucket-table row count that a probe of `qv` has to read: the
+    * rows of its own (band, value) buckets, 1-bit neighbours included
+    * under multi-probe. */
+  private def ownBucketRows(index: String, qv: Seq[Double],
+      multiProbe: Boolean): Long = {
+    val qb = Ann.bandValues(qv, D)
+    spark.read.parquet(s"$index/buckets").filter((0 until Ann.Bands).map(b =>
+        col("band_idx") === b &&
+          col("band_val").isin(Ann.probeVals(qb(b), multiProbe): _*))
+      .reduce(_ || _)).count()
+  }
+
+  test("searchAnn scans only the query's own buckets, multi-probe too") {
+    val coll = mkColl()
+    coll.insertBatch(rows((1 to 200).map(i => s"id$i" -> i): _*))
+    val index = coll.ensureAnnIndex()
+    val total = spark.read.parquet(s"$index/buckets").count()
+    object Plans extends AdaptiveSparkPlanHelper
+    for (key <- Seq(3L, 17L); mp <- Seq(false, true)) {
+      val qv = VectorFunctions.hashVectorValues(key, D)
+      val q = coll.searchAnn(qv, 5, multiProbe = mp)
+      q.collect()
+      val scans = Plans.collect(q.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s
+      }
+      assert(scans.size == 1, q.queryExecution.executedPlan)
+      val scanned = scans.head.metrics("numOutputRows").value
+      val own = ownBucketRows(index, qv, mp)
+      assert(scanned == own && own < total,
+        s"query $key, multiProbe $mp: scanned $scanned rows, its own " +
+          s"buckets hold $own of $total")
+    }
+  }
+
+  test("a compact index of an older store is neither served nor appended to") {
+    val coll = mkColl()
+    coll.insertBatch(rows((1 to 40).map(i => s"id$i" -> i): _*))
+    def checkSearch(step: String): Unit =
+      Seq(3L, 21L, 41L).foreach { key =>
+        val qv = VectorFunctions.hashVectorValues(key, D)
+        val a = coll.searchAnn(qv, 5).collect().toSeq
+        val b = Ann.lshSearch(coll.df, "vector", "id", qv, D, 5)
+          .collect().toSeq
+        assert(a == b && a.nonEmpty, s"$step, query $key")
+      }
+    // what an older version left for this data generation: the compact
+    // layout, ready, under the `colllsh` kind
+    val p1 = coll.ensureAnnIndex()
+    val legacy = p1.replace("/colllshp_", "/colllsh_")
+    IndexStore.ensure(spark, legacy)(p => LshIndex.build(spark, coll.df,
+      "vector", "id", D, p, Seq("k", "tag"), compact = true))
+    val legacyFiles = filesUnder(legacy)
+    def bandValDirs(p: String) = filesUnder(p).count(_.contains("/band_val="))
+    def pruned(p: String) = {
+      val parquet = filesUnder(p).filter(_.endsWith(".parquet"))
+      parquet.nonEmpty && parquet.forall(_.contains("/band_val="))
+    }
+    checkSearch("before the insert")
+    coll.insertBatch(rows((41 to 45).map(i => s"id$i" -> i): _*))
+    checkSearch("after a pure insert")
+    val p2 = coll.ensureAnnIndex()
+    assert(p2 != p1 && p2.contains("/colllshp_") && pruned(p2))
+    assert(filesUnder(legacy) == legacyFiles && bandValDirs(legacy) == 0,
+      "the compact index is left as it was")
+    // a compact index at the collection's own path still answers, and
+    // the next pure insert rebuilds it instead of appending pruned rows
+    LshIndex.build(spark, coll.df, "vector", "id", D, p2, Seq("k", "tag"),
+      compact = true)
+    assert(bandValDirs(p2) == 0)
+    checkSearch("served from a compact index")
+    coll.insertBatch(rows((46 to 50).map(i => s"id$i" -> i): _*))
+    checkSearch("after a pure insert into a compact index")
+    assert(pruned(coll.ensureAnnIndex()))
+  }
+
+  /** Every file under `dir`, by path relative to it. */
+  private def filesUnder(dir: String): Seq[String] = {
+    val base = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(base)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => base.relativize(f).toString).toSeq.sorted
+    } finally walk.close()
   }
 
   test("filtered searchAnn == LSH over the filtered data, filter pushed") {
@@ -126,7 +214,7 @@ class CollectionAnnSpec extends AnyFunSuite {
     val kinds = new java.io.File(
         s"${IndexStore.root}/${IndexStore.slug(s"$root/t")}")
       .list().toSeq.map(_.takeWhile(_ != '_')).sorted
-    assert(kinds == Seq("collbm25", "colllsh"), kinds)
+    assert(kinds == Seq("collbm25", "colllshp"), kinds)
   }
 
   test("reading an empty collection reports the contract, not a path error") {

@@ -131,6 +131,30 @@ class IndexSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("append schema mismatch"))
   }
 
+  test("LSH append refuses a bucket table of the other layout") {
+    val emb = Tables.embeddings(spark, sf).localCheckpoint()
+    val first = emb.filter(col("vec_id") < 30)
+    val rest = emb.filter(col("vec_id") >= 30)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    // both layouts carry the same columns, so only the partition columns
+    // tell them apart
+    for (built <- Seq(true, false)) {
+      val p = s"$tmp/lsh_$built"
+      IndexStore.ensure(spark, p)(LshIndex.build(spark, first, "embedding",
+        "vec_id", D, _, compact = built))
+      val e = intercept[IllegalArgumentException] {
+        IndexStore.mutate(spark, p)(LshIndex.append(spark, rest, "embedding",
+          "vec_id", D, _, compact = !built))
+      }
+      assert(e.getMessage.contains("append layout mismatch"), e.getMessage)
+      // the same flag appends
+      IndexStore.mutate(spark, p)(LshIndex.append(spark, rest, "embedding",
+        "vec_id", D, _, compact = built))
+      assert(spark.read.parquet(s"$p/buckets").count() ==
+        emb.count() * Ann.Bands)
+    }
+  }
+
   test("advance moves a ready index to a new path without a rebuild") {
     val emb = Tables.embeddings(spark, sf).localCheckpoint()
     val first = emb.filter(col("vec_id") < 30)

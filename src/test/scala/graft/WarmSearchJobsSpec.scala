@@ -3,13 +3,16 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.VectorDb
 import graft.expr.CosineDistance
 import graft.filter.Eq
 import graft.functions.VectorFunctions
+import graft.knn.Ann
 import graft.plans.{AnnTopK, IndexedTables}
 
 /** Structural job counts of the warm collection read path. Tables under a
@@ -22,6 +25,9 @@ import graft.plans.{AnnTopK, IndexedTables}
   * window on it, corpus stats memoized), 3 jobs. A warm read also starts
   * no OS process: a file listing that forks per file (Hadoop's local
   * filesystem loading permissions through `ls`) fails the second case.
+  * And a warm ANN probe compiles no class for a new query vector: its
+  * band values are partition filters of the pruned bucket layout,
+  * evaluated on the driver, not literals in generated code.
   */
 class WarmSearchJobsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -106,7 +112,10 @@ class WarmSearchJobsSpec extends AnyFunSuite {
       "search" -> 1, "searchText" -> 3, "searchHybrid" -> 3), counts)
   }
 
-  test("warm reads and an index-served SQL top-k start no OS process") {
+  /** Runs `body` with the collection's data registered as the view
+    * `warm_docs`, whose SQL cosine top-k the AnnTopK rule serves from the
+    * collection's LSH index; `body` gets that top-k for a query vector. */
+  private def withSqlTopK(body: (Seq[Double] => DataFrame) => Unit): Unit = {
     calls.size // builds and warms the collection
     val data = s"${coll.root}/docs/data"
     AnnTopK.install(spark)
@@ -115,19 +124,57 @@ class WarmSearchJobsSpec extends AnyFunSuite {
       .functionRegistry.createOrReplaceTempFunction("vec_cosine_distance",
         es => CosineDistance(es(0), es(1)), "scala_udf")
     spark.read.parquet(data).createOrReplaceTempView("warm_docs")
-    val v = q.map(x => s"${x}D").mkString("array(", ", ", ")")
-    def sqlTopK() = spark.sql(
-      s"SELECT id FROM warm_docs ORDER BY vec_cosine_distance(vector, $v), id LIMIT 10")
+    def sqlTopK(qv: Seq[Double]) = {
+      val v = qv.map(x => s"${x}D").mkString("array(", ", ", ")")
+      spark.sql(
+        s"SELECT id FROM warm_docs ORDER BY vec_cosine_distance(vector, $v), id LIMIT 10")
+    }
     try {
-      assert(sqlTopK().queryExecution.executedPlan.toString.contains("band_idx"),
+      assert(sqlTopK(q).queryExecution.executedPlan.toString.contains("band_idx"),
         "the SQL top-k is served from the collection's LSH index")
-      sqlTopK().collect() // cold
+      sqlTopK(q).collect() // cold
+      body(sqlTopK)
+    } finally IndexedTables.clear()
+  }
+
+  test("warm reads and an index-served SQL top-k start no OS process") {
+    withSqlTopK { sqlTopK =>
       val (_, procs) = ProcessStarts.during {
         calls.foreach(_._2())
-        sqlTopK().collect()
+        sqlTopK(q).collect()
       }
       if (procs.nonEmpty)
         fail(s"${procs.size} process(es) started:\n" + procs.mkString("\n"))
-    } finally IndexedTables.clear()
+    }
+  }
+
+  test("warm ANN probes over new query vectors compile no class") {
+    // a query whose band value differs from the warm-up query's in every
+    // band: a probe that inlined its band values into generated code
+    // would compile new classes for it
+    val qb = Ann.bandValues(q, D)
+    val q2 = Iterator.from(8).map(VectorFunctions.hashVectorValues(_, D))
+      .find(v => Ann.bandValues(v, D).zip(qb).forall { case (a, b) => a != b })
+      .get
+    withSqlTopK { sqlTopK =>
+      val probes: Seq[(String, Seq[Double] => Unit)] = Seq(
+        "searchAnn" -> (v => coll.searchAnn(v, 10).collect()),
+        "searchAnn_filter" ->
+          (v => coll.searchAnn(v, 10, Some(Eq("category", "c1"))).collect()),
+        "sqlTopK" -> (v => sqlTopK(v).collect()))
+      // Spark's generated-class cache is 100 entries in 4 LRU segments,
+      // keyed partly by a class loader's identity hash, so the fixture's
+      // calls together can overflow a segment and evict each other's
+      // classes. A call with the warm-up query right before the new one
+      // makes its classes the most recently used: what the new query
+      // compiles then is code that depends on the query
+      val compiled = probes.map { case (name, probe) =>
+        probe(q)
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        probe(q2)
+        name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+      }
+      assert(compiled == probes.map(_._1 -> 0L), "classes compiled")
+    }
   }
 }
